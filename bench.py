@@ -246,7 +246,6 @@ def run_crawl(spark) -> dict:
             wave_size=CRAWL["wave_size"],
             use_bloom=False,  # r5 A/B: exact anti-join wins at this scale
             n_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
-            extra_metrics=False,
         ),
     )
     eng.bootstrap(seed_urls(CRAWL["n_pages"], CRAWL["n_hosts"], CRAWL["n_seeds"]))

@@ -187,10 +187,6 @@ class CrawlConfig:
     child_weight_expr: str | None = None  # SQL expr over `curl`, default 100
     compute_simhash: bool = True
     n_partitions: int = 32  # state-table partitioning (host-hash at scale)
-    # retained for API compat: wave metrics now ride observe() on the
-    # existing writes + parquet footers, so they cost zero extra jobs and
-    # are always on
-    extra_metrics: bool = True
     # S4: follow 301/302/303/307 Location chains during fetch when the
     # pages table carries http_status/location columns
     follow_redirects: bool = True

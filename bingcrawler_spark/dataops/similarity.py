@@ -20,6 +20,8 @@ order; ranked outputs carry no float columns (rank ties broken by id).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 # semdedup auto-sizing: target in-cell occupancy.  Pair work inside a cell
@@ -428,13 +430,22 @@ def semdedup(
     n_cells is quadratic the other way (in-cell join; exponent 1.37
     measured in r4).  The SQL twin derives the same n_bits with
     integer-exact math (smallest b with 2^b ≥ ceil(n/target)), so
-    oracle parity holds at every scale factor.  An EXPLICIT n_cells
-    keeps the centroid quantizer (the IVF-style mode whose cell count
-    the caller controls).
+    oracle parity holds at every scale factor.  n_bits is capped at 20,
+    so the auto path stays linear only up to about 2^20 ×
+    SEMDEDUP_CELL_TARGET vectors (~2.7e8); past that the cells overfill
+    and in-cell pair work grows quadratically again — a warning says
+    so.  An EXPLICIT n_cells keeps the centroid quantizer (the IVF-style
+    mode whose cell count the caller controls).
     """
     if n_cells is None:
         n = corpus.count()
         cells_needed = max(1, (n + SEMDEDUP_CELL_TARGET - 1) // SEMDEDUP_CELL_TARGET)
+        if cells_needed > 2**20:
+            warnings.warn(
+                f"semdedup: {n} vectors need {cells_needed} cells of "
+                f"~{SEMDEDUP_CELL_TARGET}, above the 2**20 sign-cell cap; "
+                "cells overfill and in-cell pair work turns quadratic"
+            )
         n_bits = min(20, max(4, (cells_needed - 1).bit_length()))
         assigned = corpus.select(
             F.col(id_col).alias("vec_id"),

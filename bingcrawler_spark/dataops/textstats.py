@@ -518,10 +518,13 @@ def compression_ratio(
     Output: (doc_id, raw_len, zlib_len, ratio_e4) with ratio in 1e-4
     fixed point (compressed·10⁴ div raw).  Arrow-batched pandas UDF
     (zlib level 6, the zlib default, pinned for determinism) —
-    per-row, shuffle-free.  No SQL twin exists (DuckDB has no scalar
-    zlib), so the driver check is rows-only; the pytest twin compares
-    against direct `zlib.compress` output byte-for-byte, which is
-    exact because both sides call the same library."""
+    per-row, shuffle-free.  Null text reads as empty: raw_len, zlib_len
+    and ratio_e4 are all 0.  No SQL twin exists (DuckDB has no scalar
+    zlib), so the driver checks values against a literal VALUES table
+    precomputed in pure Python (driver_queries._ts_compression_oracle);
+    the pytest twin compares against direct `zlib.compress` output
+    byte-for-byte, which is exact because both sides call the same
+    library."""
     from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
@@ -532,7 +535,7 @@ def compression_ratio(
             lambda t: len(zlib.compress(t.encode("utf-8"), 6)) if t is not None else 0
         )
 
-    raw_len = F.length(F.col(text_col)).cast("long")
+    raw_len = F.coalesce(F.length(F.col(text_col)).cast("long"), F.lit(0))
     return docs.select(
         F.col(id_col),
         raw_len.alias("raw_len"),

@@ -4375,7 +4375,10 @@ def _ts_compression_oracle() -> str:
     (tools/gatecheck.py sets it from its sf argument).  Same replicate-
     the-computation-as-literals pattern ann_lsh_topk uses for its
     hyperplanes — this upgrades ts_compression from rows-only to a full
-    value-hash check."""
+    value-hash check.  When the parquet is missing or unreadable the
+    read raises, and __spark_entry__.oracle_sql() drops this one entry
+    (ts_compression falls back to rows-only); every other oracle still
+    resolves."""
     import zlib
 
     import pyarrow.parquet as pq

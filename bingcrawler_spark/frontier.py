@@ -302,8 +302,11 @@ def dedup_insert(
 
     cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight.
     frontier_rest: frontier minus this wave's pop set. seen: post-settle.
-    bloom: optional ShardedBloom over seen∪frontier urls — negatives skip
-    the exact anti-join (SURVEY.md §4.1).
+    bloom: optional ShardedBloom/ShardedCuckoo over seen∪frontier urls,
+    probed once per distinct candidate url; only positives can match in
+    the exact anti-join (SURVEY.md §4.1).  The state side is still scanned
+    and shuffled once, as on the exact path, and every candidate still
+    crosses the join's exchange — the probe never touches the state side.
 
     referrer_edges = (url, parent_url) for every attempt whose target
     already exists (the KEYEXIST append path, UrlsDbManager.java:555-580);
@@ -358,14 +361,19 @@ def dedup_insert(
     attempts = cand.groupBy(F.col("curl")).agg(sorted_arr.alias("_arr"))
 
     if bloom is not None:
+        # ONE anti-join whose condition carries the probe flag: a negative
+        # row can never match, so it survives.  Not a negatives ∪ positives
+        # union: Catalyst infers might_contain(url) from curl = url and
+        # pushes that Python probe through the union onto every state-side
+        # scan (frontier_rest, seen, the settled rows), and both branches
+        # re-plan the candidate lineage.  Here the flag is a projected
+        # column, so the probe runs once per distinct candidate url.
         flagged = attempts.withColumn("_maybe", bloom.might_contain_col(F.col("curl")))
-        negatives = flagged.where(~F.col("_maybe")).drop("_maybe")
-        positives = (
-            flagged.where(F.col("_maybe"))
-            .drop("_maybe")
-            .join(existing_all, flagged.curl == existing_all.url, "left_anti")
-        )
-        fresh = negatives.unionByName(positives)
+        fresh = flagged.join(
+            existing_all,
+            (flagged.curl == existing_all.url) & flagged["_maybe"],
+            "left_anti",
+        ).drop("_maybe")
     else:
         fresh = attempts.join(
             existing_all, attempts.curl == existing_all.url, "left_anti"

@@ -236,6 +236,20 @@ def test_semdedup_hand_vectors(spark):
     assert out2[5] == 0 and out2[0] == 1
 
 
+def test_semdedup_auto_warns_past_cell_cap(spark):
+    """The sign-cell auto path caps n_bits at 20: a corpus needing more than
+    2**20 cells must warn instead of going quadratic silently.  The count
+    is stubbed so the check runs on four vectors."""
+    df = spark.createDataFrame(
+        [(i, [float(i + 1)] * 24) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    df.count = lambda: 2**20 * SIM.SEMDEDUP_CELL_TARGET + 1
+    with pytest.warns(UserWarning, match="2\\*\\*20"):
+        out = SIM.semdedup(df, min_cos_e4=9990)
+    assert out.count() == 4
+
+
 # --------------------------------------------------------------- textstats
 
 
@@ -705,6 +719,28 @@ def test_compression_ratio_matches_zlib_and_orders_quality(spark):
         assert got[i]["ratio_e4"] == got[i]["zlib_len"] * 10000 // len(t)
     # template spam compresses hardest, random junk least
     assert got[1]["ratio_e4"] < got[2]["ratio_e4"] < got[3]["ratio_e4"]
+
+
+def test_compression_ratio_null_text_matches_oracle(spark, tmp_path, monkeypatch):
+    """A null text row reads as empty on both sides: the Spark query and
+    the driver's precomputed VALUES oracle both emit raw_len = zlib_len =
+    ratio_e4 = 0."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bingcrawler_spark import driver_queries as DQ
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()),
+                  "text": pa.array(["spam ham " * 20, None], pa.string())}),
+        tmp_path / "documents.parquet",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(tmp_path))
+    want = sorted(duckdb.sql(DQ._ts_compression_oracle()).fetchall())
+    got = sorted(tuple(r) for r in DQ.ts_compression(spark, str(tmp_path)).collect())
+    assert got == want
+    assert got[1] == (2, 0, 0, 0)
 
 
 # --------------------------------------------------------- perceptual hash

@@ -9,6 +9,8 @@ session needed.
 
 import json
 
+import pytest
+
 import __spark_entry__ as E
 
 
@@ -56,3 +58,16 @@ def test_queries_and_oracles_share_order_and_names():
     assert set(osql) <= set(qs)
     shared = [k for k in qs if k in osql]
     assert shared == [k for k in osql]  # same relative order
+
+
+def test_unreadable_oracle_falls_back_to_rows_only(tmp_path, monkeypatch):
+    """ts_compression's oracle reads the gate corpus; with that parquet
+    missing only its own entry drops (rows-only check) — every other
+    oracle still resolves."""
+    from bingcrawler_spark import driver_queries as DQ
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(tmp_path))
+    with pytest.warns(UserWarning, match="ts_compression"):
+        osql = E.oracle_sql()
+    assert set(osql) == set(DQ.ORACLES) - {"ts_compression"}
+    assert all(isinstance(v, str) and v for v in osql.values())

@@ -3,8 +3,8 @@ and frontier must equal the pure-Python oracle bit-for-bit (SURVEY.md §5.2).
 
 wave_size=1 replays the reference's sequential pop loop exactly
 (UrlsDbManager.java:384-408 + AbstractParser.java:60-82); wave_size=8 checks
-the batched wave semantics; the bloom run checks the prefilter changes
-nothing (no false negatives ⇒ same exact result).
+the batched wave semantics; the bloom and cuckoo runs check the
+prefilter changes nothing (no false negatives ⇒ same exact result).
 """
 
 import tempfile
@@ -30,14 +30,15 @@ def child_w(url: str) -> int:
     return 100 + len(url) % 3
 
 
-def _spark_crawl(spark, n_waves, wave_size, use_bloom=False, with_robots=True):
+def _spark_crawl(spark, n_waves, wave_size, filter_kind=None, with_robots=True):
     pages = synth_pages_df(spark, N_PAGES, N_HOSTS)
     robots = robots_df(spark, N_HOSTS) if with_robots else None
     store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_parity_"))
     cfg = CrawlConfig(
         wave_size=wave_size,
         max_depth=3,
-        use_bloom=use_bloom,
+        use_bloom=filter_kind is not None,
+        filter_kind=filter_kind or "bloom",
         bloom_shards=2,
         child_weight_expr=CHILD_W_SQL,
     )
@@ -88,15 +89,17 @@ def _assert_parity(eng, o):
 
 
 @pytest.mark.parametrize(
-    "n_waves,wave_size,use_bloom",
+    "n_waves,wave_size,filter_kind",
     [
-        (6, 1, False),  # == the reference's sequential loop
-        (3, 8, False),
-        (3, 8, True),  # bloom prefilter must not change results
+        pytest.param(6, 1, None, id="6-1-False"),  # == the reference's sequential loop
+        pytest.param(3, 8, None, id="3-8-False"),
+        # seen-set prefilters must not change results
+        pytest.param(3, 8, "bloom", id="3-8-True"),
+        pytest.param(3, 8, "cuckoo", id="3-8-cuckoo"),
     ],
 )
-def test_crawl_parity(spark, n_waves, wave_size, use_bloom):
-    eng = _spark_crawl(spark, n_waves, wave_size, use_bloom=use_bloom)
+def test_crawl_parity(spark, n_waves, wave_size, filter_kind):
+    eng = _spark_crawl(spark, n_waves, wave_size, filter_kind=filter_kind)
     o = _oracle_crawl(n_waves, wave_size)
     _assert_parity(eng, o)
 

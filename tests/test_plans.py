@@ -7,11 +7,20 @@ timing, so they hold on any host.
 BroadcastNestedLoopJoin is allowed only where the design calls for a
 crossJoin against a broadcast 1-row aggregate or a tiny centroid/stats
 table (BM25's corpus stats, TF-IDF's N, IVF's centroids) — those are
-listed explicitly; the banded dedup paths must be pure equi-joins."""
+listed explicitly; the banded dedup paths must be pure equi-joins.
+
+The crawl's frontier write is pinned too: its seen-filter probe (a Python
+UDF) must appear once, over the candidate urls."""
+
+import re
+import tempfile
 
 import pytest
 
 from bingcrawler_spark import driver_queries as DQ
+from bingcrawler_spark.crawler import CrawlConfig, CrawlEngine
+from bingcrawler_spark.statestore import SnapshotStore
+from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
 
 # pair-generating / heavy queries: equi-join-only contract
 EQUI_ONLY = [
@@ -54,3 +63,35 @@ def test_no_cartesian_or_nested_loop(spark, sf_dir, name):
 def test_no_cartesian(spark, sf_dir, name):
     plan = _plan(spark, sf_dir, name)
     assert "CartesianProduct" not in plan, name
+
+
+# ------------------------------------------------ crawl seen-filter probe
+
+
+@pytest.mark.parametrize("filter_kind", ["bloom", "cuckoo"])
+def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
+    """The seen-filter probe is a Python UDF: it must run once per distinct
+    candidate url, never over the state side (frontier ∪ seen ∪ the wave's
+    settled rows) of the exact anti-join.  Catalyst infers
+    might_contain(url) from curl = url and pushes it into the state scans
+    whenever the probe sits in a filter rather than in the join condition."""
+    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_plan_"))
+    eng = CrawlEngine(
+        spark, store, synth_pages_df(spark, 120, 4), robots_df(spark, 4),
+        CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind,
+                    bloom_shards=2),
+    )
+    eng.bootstrap(seed_urls(120, 4))
+    plans = []
+    stage = store.stage
+
+    def capture(table, df, mode):
+        if table == "frontier":
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage(table, df, mode)
+
+    store.stage = capture
+    eng.run(2)
+    assert len(plans) == 2
+    for plan in plans:
+        assert re.findall(r"might_contain\((\w+)#", plan) == ["curl"]
