@@ -247,11 +247,10 @@ def journal_rollup(profiles: DataFrame) -> DataFrame:
 def banded_candidates(
     fps: DataFrame, n_bands: int = 4, bits: int = 60
 ) -> DataFrame:
-    """Candidate stage of banded_nn_report, exposed for stage-level timing
-    attribution (SPARK_GRAFT_R12_TIMING): directional (t_a, t_b, distance)
-    pairs sharing at least one exact band — duplicates (multi-band pairs)
-    NOT yet removed; the fused window tail in banded_nn_report handles
-    them."""
+    """Candidate stage of banded_nn_report: directional (t_a, t_b,
+    distance) pairs sharing at least one exact band — duplicates
+    (multi-band pairs) NOT yet removed; the fused window tail in
+    banded_nn_report handles them."""
     width = bits // n_bands
     banded = fps.select(
         F.col("title").alias("t"),

@@ -207,43 +207,27 @@ class ShardedBloom:
         design scale (10^10 urls, 1% fpp ⇒ ~12 GiB of bitmaps) closure
         shipping breaks outright, while a broadcast torrents once per
         executor.  The broadcast is cached on the filter and re-created
-        only after ``add_df`` mutates the shards.  The closure-matrix form
-        survives only as a fallback for the no-active-session case (unit
-        tests probing a freshly built filter) — defined as a SEPARATE
-        closure so the broadcast path cannot accidentally capture the
-        matrix too."""
+        only after ``add_df`` mutates the shards."""
         from pyspark.sql import SparkSession
 
         n_shards, m_bits, k = self.n_shards, self.m_bits, self.k
-        sess = SparkSession.getActiveSession()
-        if sess is not None:
-            # Stack the 2-D (n_shards × n_bytes) matrix ONLY when a fresh
-            # broadcast is needed — at the 10^10-url design point the
-            # matrix is multi-GiB and an unconditional stack would pay
-            # that driver allocation on every probe call.
-            if self._bc is None or self._bc_ctx is not sess.sparkContext:
-                self._invalidate_broadcast()
-                matrix = np.stack(
-                    [np.frombuffer(b, dtype=np.uint8) for b in self.shards]
-                )
-                self._bc = sess.sparkContext.broadcast(matrix)
-                self._bc_ctx = sess.sparkContext
-            bc = self._bc
-
-            @F.pandas_udf(T.BooleanType())
-            def might_contain(values: pd.Series) -> pd.Series:
-                return _probe_bloom(bc.value, values, n_shards, m_bits, k)
-
-            return might_contain
-
-        # sessionless fallback (unit tests probing a freshly built filter)
-        matrix = np.stack([np.frombuffer(b, dtype=np.uint8) for b in self.shards])
+        sc = SparkSession.active().sparkContext
+        # Stack the 2-D (n_shards × n_bytes) matrix ONLY when a fresh
+        # broadcast is needed — at the 10^10-url design point the matrix
+        # is multi-GiB and an unconditional stack would pay that driver
+        # allocation on every probe call.
+        if self._bc is None or self._bc_ctx is not sc:
+            self._invalidate_broadcast()
+            matrix = np.stack([np.frombuffer(b, dtype=np.uint8) for b in self.shards])
+            self._bc = sc.broadcast(matrix)
+            self._bc_ctx = sc
+        bc = self._bc
 
         @F.pandas_udf(T.BooleanType())
-        def might_contain_inline(values: pd.Series) -> pd.Series:
-            return _probe_bloom(matrix, values, n_shards, m_bits, k)
+        def might_contain(values: pd.Series) -> pd.Series:
+            return _probe_bloom(bc.value, values, n_shards, m_bits, k)
 
-        return might_contain_inline
+        return might_contain
 
     def might_contain_col(self, c: Column) -> Column:
         return self.might_contain_udf()(c)

@@ -178,19 +178,13 @@ class CrawlConfig:
     default_budget: int | None = None  # per-host per-wave politeness cap
     min_weight: int | None = None  # priorityBottomLine (F10)
     use_bloom: bool = False
-    bloom_fpp: float = 0.01
     bloom_shards: int = 4
     # seen-set prefilter structure when use_bloom is on: "bloom"
     # (ShardedBloom, OR-mergeable deltas) or "cuckoo" (ShardedCuckoo,
     # 16-bit fingerprints, supports deletion) — the north rule names both
     filter_kind: str = "bloom"
     child_weight_expr: str | None = None  # SQL expr over `curl`, default 100
-    compute_simhash: bool = True
     n_partitions: int = 32  # state-table partitioning (host-hash at scale)
-    # S4: follow 301/302/303/307 Location chains during fetch when the
-    # pages table carries http_status/location columns
-    follow_redirects: bool = True
-    max_redirect_hops: int = 3
     # append-table compaction cadence: every Nth wave the seen/ref_edges
     # delta is written as a full OVERWRITE snapshot instead of an append,
     # bounding read amplification (a W-wave crawl otherwise unions W delta
@@ -311,19 +305,6 @@ class CrawlEngine:
 
     def run_wave(self) -> dict:
         t0 = time.time()
-        # optional per-stage wall clocks (SPARK_GRAFT_WAVE_TIMING=1): each
-        # entry brackets one Spark ACTION, so the sum ≈ wave wall and the
-        # residual is driver-side orchestration — the constant the scaling
-        # analysis in BENCH/SUBMIT_SCALING.md needs to attribute.
-        timing: dict[str, float] | None = (
-            {} if os.environ.get("SPARK_GRAFT_WAVE_TIMING") else None
-        )
-        _tm = time.time
-
-        def _mark(key: str, since: float) -> None:
-            if timing is not None:
-                timing[key] = round(_tm() - since, 3)
-
         wave = self.wave + 1
         # mid-wave-kill recovery: a wave commits seen delta → frontier →
         # ref_edges → metrics row, and the FRONTIER commit is the wave's
@@ -365,14 +346,6 @@ class CrawlEngine:
         # UDFs below use every core, then cache (it feeds fetch, settle AND
         # removal)
         top = top.repartition(self.cfg.n_partitions).cache()
-        _mark("prep_pre_pop", t0)  # rollback check + state reads + pop plan
-        if timing is not None:
-            # measurement-only extra action: materialize the pop cache by
-            # itself so t_pop_topk isolates the top-k (merge task included)
-            # from the parse+write it otherwise rides under
-            _t = _tm()
-            top.count()
-            _mark("pop_topk", _t)
         # n_popped is NOT counted here: it rides the settle write's
         # observe() below, merging the pop job into the first write job —
         # one less Spark action per wave (the per-wave driver constant is
@@ -392,12 +365,8 @@ class CrawlEngine:
         # S4: when the pages table carries http_status/location, redirect
         # chains resolve first (bounded broadcast-join recursion); the html
         # a redirecting url yields is its terminal target's.
-        if self.cfg.follow_redirects and {"http_status", "location"}.issubset(
-            set(self.pages.columns)
-        ):
-            hits = resolve_redirects(
-                self.pages, top, self.cfg.max_redirect_hops
-            ).select("url", "html")
+        if {"http_status", "location"}.issubset(set(self.pages.columns)):
+            hits = resolve_redirects(self.pages, top).select("url", "html")
         else:
             hits = self.pages.select("url", "html").join(
                 F.broadcast(top.select("url")), "url", "left_semi"
@@ -414,14 +383,10 @@ class CrawlEngine:
             )
             .withColumn("text", extract_text_udf(F.col("html")))
             .withColumn("links", extract_links_udf(F.col("html"), F.col("url")))
+            .withColumn("simhash", simhash64_udf(F.col("text")))
+            .drop("html")
+            .cache()
         )
-        parsed = parsed.withColumn(
-            "simhash",
-            simhash64_udf(F.col("text"))
-            if self.cfg.compute_simhash
-            else F.lit(None).cast("long"),
-        )
-        parsed = parsed.drop("html").cache()
 
         # F4: settle — append ONLY the wave delta (commit 1).  Delta writes
         # land as few files: a wave-sized table written as
@@ -463,7 +428,6 @@ class CrawlEngine:
         frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
 
         bloom = None
-        _t_bloom = _tm()
         if self.cfg.use_bloom:
             # incremental: frontier ∪ seen only ever GROWS by each wave's
             # new rows, so the filter is built once (first wave / resume /
@@ -492,13 +456,10 @@ class CrawlEngine:
                     else ShardedBloom
                 )
                 self._bloom = filter_cls.build(
-                    existing, "url", est, self.cfg.bloom_fpp, self.cfg.bloom_shards
+                    existing, "url", est, n_shards=self.cfg.bloom_shards
                 )
                 self._bloom_items = n_existing
             bloom = self._bloom
-        # wave-1 / overflow rebuilds run a real job here (partial-bitmap
-        # collect over the whole seen∪frontier) — attribute it
-        _mark("bloom_build", _t_bloom)
 
         new_rows, edges = FR.dedup_insert(
             cand,
@@ -536,20 +497,6 @@ class CrawlEngine:
         # delta rows are narrow, the exchange is cheap.
         from concurrent.futures import ThreadPoolExecutor
 
-        if timing is not None and "bloom_build" in timing:
-            # driver-side lineage construction (fetch/parse/settle/cand/
-            # dedup-insert plan assembly) between the pop action and the
-            # write staging, net of the bloom span already marked
-            timing["plan_build"] = round(
-                _tm()
-                - t0
-                - sum(
-                    timing.get(k, 0)
-                    for k in ("prep_pre_pop", "pop_topk", "bloom_build")
-                ),
-                3,
-            )
-        _t = _tm()
         with ThreadPoolExecutor(max_workers=2) as pool:
             seen_fut = pool.submit(self.store.stage, "seen", seen_delta, "append")
             edges_fut = pool.submit(
@@ -558,7 +505,6 @@ class CrawlEngine:
             frontier_tok = self.store.stage("frontier", frontier_final, "overwrite")
             seen_tok = seen_fut.result()
             edges_tok = edges_fut.result()
-        _mark("writes_staged", _t)
 
         n_popped = _harvest(obs_settle, "n_popped", top.count)
         if n_popped == 0:
@@ -573,12 +519,9 @@ class CrawlEngine:
             self._needs_rollback = False
             return {"wave": wave, "n_popped": 0, "done": True}
 
-        _t = _tm()  # reset: frontier_commit clocks the promotes alone,
-        # not the staging span already reported as writes_staged
         self.store.promote(seen_tok, wave)
         self.store.promote(edges_tok, wave)
         frontier_snap = self.store.promote(frontier_tok, wave)
-        _mark("frontier_commit", _t)
 
         # harvest the observed counts (all fired by the writes above —
         # the whole wave normally runs top.count + 3 write jobs, nothing
@@ -596,7 +539,6 @@ class CrawlEngine:
         # bloom delta: OR in ONLY this wave's new urls (read back from the
         # committed snapshot — a bounded-frontier scan, no shuffle)
         if self.cfg.use_bloom and self._bloom is not None and n_new > 0:
-            _t = _tm()
             self._bloom.add_df(
                 self.store.read("frontier")
                 .where(F.col("discovery_wave") == wave)
@@ -604,7 +546,6 @@ class CrawlEngine:
                 "url",
             )
             self._bloom_items += int(n_new)
-            _mark("bloom_delta", _t)
         # per-partition lineage (north rule): how balanced is the frontier
         # across its partitions after the salted repartition?  Read from
         # the committed snapshot's parquet FOOTERS (one row-count per file
@@ -622,8 +563,6 @@ class CrawlEngine:
             "max_partition_rows": max_part,
             "wall_s": time.time() - t0,
         }
-        if timing is not None:
-            row["stage_s"] = timing
         self.store.log_row("wave_metrics", row)
         top.unpersist()
         parsed.unpersist()

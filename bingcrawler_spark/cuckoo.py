@@ -195,7 +195,6 @@ class ShardedCuckoo:
         df: DataFrame,
         col: str,
         expected_items: int,
-        fpp: float = 0.01,  # accepted for interface parity; fp size is fixed
         n_shards: int = 4,
     ) -> "ShardedCuckoo":
         per_shard = max(expected_items // n_shards, 1)
@@ -332,27 +331,18 @@ class ShardedCuckoo:
             for b, f in vs:
                 victim_keys.add((s << 48) | (b << 16) | f)
         n_shards, mask = self.n_shards, self.mask
-        sess = SparkSession.getActiveSession()
-        if sess is not None:
-            if self._bc is None or self._bc_ctx is not sess.sparkContext:
-                self._invalidate_broadcast()
-                self._bc = sess.sparkContext.broadcast(np.stack(self.tables))
-                self._bc_ctx = sess.sparkContext
-            bc = self._bc
-
-            @F.pandas_udf(T.BooleanType())
-            def might_contain(values: pd.Series) -> pd.Series:
-                return _probe_cuckoo(bc.value, victim_keys, values, n_shards, mask)
-
-            return might_contain
-
-        stack = np.stack(self.tables)  # (n_shards, n_buckets, 4)
+        sc = SparkSession.active().sparkContext
+        if self._bc is None or self._bc_ctx is not sc:
+            self._invalidate_broadcast()
+            self._bc = sc.broadcast(np.stack(self.tables))  # (n_shards, n_buckets, 4)
+            self._bc_ctx = sc
+        bc = self._bc
 
         @F.pandas_udf(T.BooleanType())
-        def might_contain_inline(values: pd.Series) -> pd.Series:
-            return _probe_cuckoo(stack, victim_keys, values, n_shards, mask)
+        def might_contain(values: pd.Series) -> pd.Series:
+            return _probe_cuckoo(bc.value, victim_keys, values, n_shards, mask)
 
-        return might_contain_inline
+        return might_contain
 
     def might_contain_col(self, c: Column) -> Column:
         return self.might_contain_udf()(c)

@@ -1718,21 +1718,8 @@ def r12_banded_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates come from a pigeonhole LSH equi-join, never a cartesian
     product — the oracle replicates the banding so the approximation itself
     is what's verified.  analytics.allpairs_simhash_report keeps the exact
-    all-pairs parity form (tests only).
-
-    SPARK_GRAFT_R12_TIMING=1 prints a per-stage wall split (fingerprint
-    materialize / band-join candidates / fused dedup+rank window) — the
-    attribution knob the r3 regression lacked.  Measured at sf0.1 quiet:
-    fingerprint ~1 s cached-session, candidates 0.9 s (5.9M pairs — the
-    synth corpus is template-correlated, so band buckets are degenerate),
-    window tail 3.3 s fused vs 7.6 s for the old dropDuplicates+window
-    two-shuffle tail."""
-    import os as _os
-    import time as _time
-
-    timing = _os.environ.get("SPARK_GRAFT_R12_TIMING") == "1"
+    all-pairs parity form (tests only)."""
     d = _t(spark, sf_dir, "documents")
-    t0 = _time.time()
     fps = (
         X.simhash60_df(d)
         .select(
@@ -1742,17 +1729,6 @@ def r12_banded_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     fps.count()  # materialize once; both band-join sides read the cache
-    if timing:
-        t1 = _time.time()
-        n_cand = A.banded_candidates(fps, n_bands=4).count()
-        t2 = _time.time()
-        A.banded_nn_report(fps, nearest=5, n_bands=4).count()
-        t3 = _time.time()
-        print(
-            f"[r12-timing] fingerprint={t1 - t0:.2f}s "
-            f"candidates={t2 - t1:.2f}s ({n_cand} pairs) "
-            f"window_tail={t3 - t2 - (t2 - t1):.2f}s full={t3 - t2:.2f}s"
-        )
     return A.banded_nn_report(fps, nearest=5, n_bands=4)
 
 
@@ -4069,67 +4045,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided shingle containment (Broder 1997) ≥95% over MinHash
     band candidates, on a corpus where every 5th doc has a 60%-prefix
     twin — the quote/truncation dup class exact Jaccard dedup
-    (dd_exact / dd_minhash_lsh) misses.
-
-    SPARK_GRAFT_CONT_TIMING=1 prints a per-stage wall split (sketch
-    materialize / block-join candidates / exact-intersection verify) —
-    the attribution knob that found r4's "+10% constant": the CPU-bound
-    shingle and verify stages were floor-bound by the 2-split sf0.1
-    parquet read (containment_pairs now widens narrow inputs to the
-    session's core count; 9.1 s → ~3.4 s warm at sf0.1)."""
-    import os as _os
-    import time as _time
-
-    if _os.environ.get("SPARK_GRAFT_CONT_TIMING") == "1":
-        from bingcrawler_spark import xhash as _X
-
-        docs = _containment_docs(spark, sf_dir)
-        target = spark.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < target:
-            docs = docs.repartition(target)
-        t0 = _time.time()
-        base = (
-            docs.select(
-                F.col("doc_id").alias("doc"),
-                _X.shingles_col(F.col("text")).alias("sh"),
-            )
-            .withColumn(
-                "bk", F.slice(F.array_sort(F.transform("sh", _X.h32_col)), 1, 8)
-            )
-            .persist()
-        )
-        base.count()
-        t1 = _time.time()
-        blocks = base.select("doc", F.explode("bk").alias("bh"))
-        keep = (
-            blocks.groupBy("bh")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where((F.col("n") >= 2) & (F.col("n") <= 64))
-            .select("bh")
-        )
-        kb = blocks.join(keep, "bh")
-        a, b = kb.alias("a"), kb.alias("b")
-        n_cand = (
-            a.join(
-                b,
-                (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
-            .count()
-        )
-        t2 = _time.time()
-        base.unpersist()
-        out = DD.containment_pairs(_containment_docs(spark, sf_dir))
-        out.count()
-        t3 = _time.time()
-        print(
-            f"[cont-timing] sketch={t1 - t0:.2f}s "
-            f"candidates={t2 - t1:.2f}s ({n_cand} pairs) "
-            f"full={t3 - t2:.2f}s (verify ≈ full − sketch − candidates)"
-        )
-        return out
+    (dd_exact / dd_minhash_lsh) misses."""
     return DD.containment_pairs(_containment_docs(spark, sf_dir))
 
 

@@ -10,7 +10,8 @@ table (BM25's corpus stats, TF-IDF's N, IVF's centroids) — those are
 listed explicitly; the banded dedup paths must be pure equi-joins.
 
 The crawl's frontier write is pinned too: its seen-filter probe (a Python
-UDF) must appear once, over the candidate urls."""
+UDF) must appear once, over the candidate urls.  So is the number of Spark
+jobs a wave launches, so instrumentation cannot add an action unnoticed."""
 
 import re
 import tempfile
@@ -95,3 +96,40 @@ def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
     assert len(plans) == 2
     for plan in plans:
         assert re.findall(r"might_contain\((\w+)#", plan) == ["curl"]
+
+
+# ------------------------------------------------ crawl jobs per wave
+
+
+@pytest.mark.parametrize(
+    "use_bloom,expected",
+    [
+        pytest.param(False, [30, 30, 30], id="exact"),
+        # wave 1 builds the filter (two more jobs); later waves extend it
+        pytest.param(True, [35, 33, 33], id="bloom"),
+    ],
+)
+def test_spark_jobs_per_wave(spark, use_bloom, expected):
+    """Each Spark job a wave launches adds to the per-wave driver constant.
+    The count is deterministic for a fixed input, so a new action (a
+    measurement-only count, a re-run for timing) shows up here."""
+    sc = spark.sparkContext
+
+    def last_job_id():
+        # job-start events reach the status tracker through the async
+        # listener bus: drain it so the newest job is visible
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_jobs_"))
+    eng = CrawlEngine(
+        spark, store, synth_pages_df(spark, 300, 6), robots_df(spark, 6),
+        CrawlConfig(wave_size=12, n_partitions=4, use_bloom=use_bloom),
+    )
+    eng.bootstrap(seed_urls(300, 6))
+    jobs = []
+    for _ in expected:
+        before = last_job_id()
+        assert not eng.run_wave().get("done")
+        jobs.append(last_job_id() - before)
+    assert jobs == expected

@@ -107,12 +107,7 @@ def main() -> None:
     t0 = time.time()
     fetched = 0
     for m in eng.run(args.waves):
-        row = {k: v for k, v in m.items() if not isinstance(v, dict)}
-        # flatten the optional SPARK_GRAFT_WAVE_TIMING stage clocks so the
-        # scaling analysis can attribute the per-wave driver constant
-        for k, v in m.get("stage_s", {}).items():
-            row[f"t_{k}"] = v
-        print(json.dumps(row))
+        print(json.dumps(m))
         fetched += m.get("n_fetched", 0)
     wall = time.time() - t0
     print(
