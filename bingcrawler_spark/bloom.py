@@ -29,11 +29,11 @@ files and mapped side-per-shard; locally the shard dict broadcasts whole.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -59,24 +59,30 @@ def _hashes(values: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return h1, _remix(h1), _remix(h2) | np.uint64(1)
 
 
+def _bit_positions(
+    values: pd.Series, n_shards: int, m_bits: int, k: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(shard (n,), byte_i (k, n), bit (k, n)) — the k probe positions of
+    each value, shared by the build (OR in) and the probe (AND test)."""
+    hs, p1, p2 = _hashes(values)
+    shard = (hs % np.uint64(n_shards)).astype(np.int64)
+    i = np.arange(k, dtype=np.uint64)[:, None]
+    idx = (p1 + i * p2) % np.uint64(m_bits)
+    byte_i = (idx >> np.uint64(3)).astype(np.int64)
+    bit = np.left_shift(np.uint8(1), (idx & np.uint64(7)).astype(np.uint8))
+    return shard, byte_i, bit
+
+
 def _probe_bloom(
     matrix: np.ndarray, values: pd.Series, n_shards: int, m_bits: int, k: int
 ) -> pd.Series:
     """k-probe membership test against the (n_shards × n_bytes) bitmap
-    matrix — module-level so the pandas UDFs in might_contain_udf close
-    over only a broadcast handle (or, in the sessionless fallback, the
-    matrix) and never both."""
+    matrix — module-level so the pandas UDF closes over only a broadcast
+    handle and scalars (SeenFilter.might_contain_udf)."""
     if values.empty:
         return pd.Series([], dtype=bool)
-    hs, p1, p2 = _hashes(values.fillna(""))
-    shard = (hs % np.uint64(n_shards)).astype(np.int64)
-    out = np.ones(len(values), dtype=bool)
-    for i in range(k):
-        idx = (p1 + np.uint64(i) * p2) % np.uint64(m_bits)
-        byte_i = (idx >> np.uint64(3)).astype(np.int64)
-        bit = np.left_shift(np.uint8(1), (idx & np.uint64(7)).astype(np.uint8))
-        out &= (matrix[shard, byte_i] & bit) != 0
-    return pd.Series(out)
+    shard, byte_i, bit = _bit_positions(values.fillna(""), n_shards, m_bits, k)
+    return pd.Series(((matrix[shard, byte_i] & bit) != 0).all(axis=0))
 
 
 def _params(n_items: int, fpp: float) -> tuple[int, int]:
@@ -88,29 +94,39 @@ def _params(n_items: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
-class ShardedBloom:
-    """Sharded Bloom filter of a url column.
+class SeenFilter:
+    """A url seen-set prefilter: no false negatives, bounded false
+    positives.  ShardedBloom and cuckoo.ShardedCuckoo are the two kinds.
 
-    Supports INCREMENTAL growth (`add_df`): the crawl's existing-url set
-    (frontier ∪ seen) only ever grows by each wave's new rows, so the
-    engine builds the filter once and ORs in the O(wave)-sized delta per
-    wave instead of re-scanning the O(state) seen-set — the per-wave-cost
-    invariant holds for the prefilter too.  `capacity` records the sizing
-    assumption; the caller rebuilds (amortized, on doubling) when the
-    inserted count outgrows it, restoring the target fpp."""
+    Each subclass supplies ``build``/``add_df``, its broadcast payload
+    (``_payload``) and its module-level probe function with the small
+    scalar arguments it takes (``_probe``).  The base owns the rest:
 
-    def __init__(self, shards: list[bytes], m_bits: int, k: int, capacity: int = 0):
-        self.shards = shards
-        self.n_shards = len(shards)
-        self.m_bits = m_bits
-        self.k = k
+    * load — ``items`` counts the urls inserted (the count rides the rows
+      the driver collects anyway, no extra job); the filter is ``full``
+      once that outgrows ``capacity``, the sizing assumption, and the
+      caller rebuilds (amortized, on doubling) to restore the target fpp;
+    * broadcast lifetime — the payload rides an ``sc.broadcast`` cached on
+      the filter, dropped whenever ``add_df`` mutates the filter and
+      re-created when the SparkContext that made it is no longer the
+      active one (a handle from a stopped context fails at task time);
+    * the vectorized membership probe."""
+
+    def __init__(self, capacity: int, items: int):
         self.capacity = capacity
-        # cached sc.broadcast of the bitmap matrix (see might_contain_udf);
-        # invalidated whenever add_df mutates the shards, or when the
-        # SparkContext that created it is no longer the active one (a
-        # handle from a stopped context fails at task execution time)
+        self.items = items
         self._bc = None
         self._bc_ctx = None
+
+    @property
+    def full(self) -> bool:
+        return self.items > self.capacity
+
+    def _payload(self) -> np.ndarray:
+        raise NotImplementedError
+
+    def _probe(self) -> tuple[Callable, tuple]:
+        raise NotImplementedError
 
     def _invalidate_broadcast(self) -> None:
         if self._bc is not None:
@@ -121,62 +137,106 @@ class ShardedBloom:
             self._bc = None
             self._bc_ctx = None
 
+    def might_contain_udf(self) -> "F.pandas_udf":
+        """Vectorized membership probe.
+
+        The payload rides an ``sc.broadcast``, NOT the task closure: a
+        closure ships with EVERY task, and at the design scale (10^10 urls,
+        1% fpp ⇒ ~12 GiB of Bloom bitmaps) closure shipping breaks
+        outright, while a broadcast torrents once per executor.  The UDF
+        closes over the broadcast handle and the probe's scalars only,
+        never ``self``.  The payload is assembled only when a fresh
+        broadcast is needed — at the design point it is multi-GiB, and an
+        unconditional stack would pay that driver allocation per call."""
+        sc = SparkSession.active().sparkContext
+        if self._bc is None or self._bc_ctx is not sc:
+            self._invalidate_broadcast()
+            self._bc = sc.broadcast(self._payload())
+            self._bc_ctx = sc
+        bc = self._bc
+        probe, args = self._probe()
+
+        @F.pandas_udf(T.BooleanType())
+        def might_contain(values: pd.Series) -> pd.Series:
+            return probe(bc.value, values, *args)
+
+        return might_contain
+
+    def might_contain_col(self, c: Column) -> Column:
+        return self.might_contain_udf()(c)
+
+
+def _or_in(shards: list[np.ndarray], parts: list) -> int:
+    """OR collected partial bitmaps into ``shards`` in place; returns the
+    number of urls the partials cover."""
+    for row in parts:
+        shards[row["shard"]] |= np.frombuffer(row["bitmap"], dtype=np.uint8)
+    return sum(row["n"] for row in parts)
+
+
+class ShardedBloom(SeenFilter):
+    """Sharded Bloom filter of a url column.
+
+    Supports INCREMENTAL growth (`add_df`): the crawl's existing-url set
+    (frontier ∪ seen) only ever grows by each wave's new rows, so the
+    engine builds the filter once and ORs in the O(wave)-sized delta per
+    wave instead of re-scanning the O(state) seen-set — the per-wave-cost
+    invariant holds for the prefilter too."""
+
+    def __init__(
+        self, shards: list[bytes], m_bits: int, k: int, capacity: int = 0, items: int = 0
+    ):
+        super().__init__(capacity, items)
+        self.shards = shards
+        self.n_shards = len(shards)
+        self.m_bits = m_bits
+        self.k = k
+
+    def _payload(self) -> np.ndarray:
+        return np.stack([np.frombuffer(b, dtype=np.uint8) for b in self.shards])
+
+    def _probe(self) -> tuple[Callable, tuple]:
+        return _probe_bloom, (self.n_shards, self.m_bits, self.k)
+
     @staticmethod
     def _partial_bitmaps(
-        df: DataFrame, col: str, n_shards: int, n_bytes: int, m_bits: int, k: int
+        df: DataFrame, col: str, n_shards: int, m_bits: int, k: int
     ) -> list:
         """Distributed bitmap build: one partial per partition per shard,
-        OR-merged driver-side (bitmaps cross the wire, never rows)."""
+        with the count of urls it covers, OR-merged driver-side (bitmaps
+        cross the wire, never rows)."""
 
         def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bitmaps = np.zeros((n_shards, n_bytes), dtype=np.uint8)
-            touched = False
+            bitmaps = np.zeros((n_shards, m_bits // 8), dtype=np.uint8)
+            counts = np.zeros(n_shards, dtype=np.int64)
             for pdf in batches:
                 vals = pdf[col].dropna()
                 if vals.empty:
                     continue
-                touched = True
-                hs, p1, p2 = _hashes(vals)
-                shard = (hs % np.uint64(n_shards)).astype(np.int64)
-                for i in range(k):
-                    idx = (p1 + np.uint64(i) * p2) % np.uint64(m_bits)
-                    byte_i = (idx >> np.uint64(3)).astype(np.int64)
-                    bit = np.left_shift(
-                        np.uint8(1), (idx & np.uint64(7)).astype(np.uint8)
-                    )
-                    for s in range(n_shards):
-                        sel = shard == s
-                        if sel.any():
-                            np.bitwise_or.at(bitmaps[s], byte_i[sel], bit[sel])
-            if touched:
+                shard, byte_i, bit = _bit_positions(vals, n_shards, m_bits, k)
+                np.bitwise_or.at(bitmaps, (shard, byte_i), bit)
+                counts += np.bincount(shard, minlength=n_shards)
+            if counts.any():
                 yield pd.DataFrame(
-                    {"shard": range(n_shards), "bitmap": [b.tobytes() for b in bitmaps]}
+                    {
+                        "shard": range(n_shards),
+                        "bitmap": [b.tobytes() for b in bitmaps],
+                        "n": counts,
+                    }
                 )
 
         return df.select(col).mapInPandas(
-            partial,
-            T.StructType(
-                [
-                    T.StructField("shard", T.IntegerType()),
-                    T.StructField("bitmap", T.BinaryType()),
-                ]
-            ),
+            partial, "shard int, bitmap binary, n long"
         ).collect()
 
     def add_df(self, df: DataFrame, col: str) -> None:
         """OR a delta of urls into the existing bitmaps — O(delta) work,
-        same hash family, no resize (caller manages capacity)."""
-        n_bytes = self.m_bits // 8
-        parts = self._partial_bitmaps(
-            df, col, self.n_shards, n_bytes, self.m_bits, self.k
-        )
+        same hash family, no resize (the caller rebuilds when ``full``)."""
+        parts = self._partial_bitmaps(df, col, self.n_shards, self.m_bits, self.k)
         if not parts:
             return
-        shards = [
-            np.frombuffer(b, dtype=np.uint8).copy() for b in self.shards
-        ]
-        for row in parts:
-            shards[row["shard"]] |= np.frombuffer(row["bitmap"], dtype=np.uint8)
+        shards = [np.frombuffer(b, dtype=np.uint8).copy() for b in self.shards]
+        self.items += _or_in(shards, parts)
         self.shards = [s.tobytes() for s in shards]
         self._invalidate_broadcast()
 
@@ -189,45 +249,8 @@ class ShardedBloom:
         n_shards: int = 4,
     ) -> "ShardedBloom":
         m_bits, k = _params(max(expected_items // n_shards, 1), fpp)
-        n_bytes = m_bits // 8
-        parts = ShardedBloom._partial_bitmaps(df, col, n_shards, n_bytes, m_bits, k)
-        shards = [np.zeros(n_bytes, dtype=np.uint8) for _ in range(n_shards)]
-        for row in parts:
-            shards[row["shard"]] |= np.frombuffer(row["bitmap"], dtype=np.uint8)
+        shards = [np.zeros(m_bits // 8, dtype=np.uint8) for _ in range(n_shards)]
+        n = _or_in(shards, ShardedBloom._partial_bitmaps(df, col, n_shards, m_bits, k))
         return ShardedBloom(
-            [s.tobytes() for s in shards], m_bits, k, capacity=expected_items
+            [s.tobytes() for s in shards], m_bits, k, capacity=expected_items, items=n
         )
-
-    # -- membership test ----------------------------------------------------
-    def might_contain_udf(self) -> "F.pandas_udf":
-        """Vectorized membership probe.
-
-        The (n_shards × n_bytes) bitmap matrix rides an ``sc.broadcast``,
-        NOT the task closure: a closure ships with EVERY task, and at the
-        design scale (10^10 urls, 1% fpp ⇒ ~12 GiB of bitmaps) closure
-        shipping breaks outright, while a broadcast torrents once per
-        executor.  The broadcast is cached on the filter and re-created
-        only after ``add_df`` mutates the shards."""
-        from pyspark.sql import SparkSession
-
-        n_shards, m_bits, k = self.n_shards, self.m_bits, self.k
-        sc = SparkSession.active().sparkContext
-        # Stack the 2-D (n_shards × n_bytes) matrix ONLY when a fresh
-        # broadcast is needed — at the 10^10-url design point the matrix
-        # is multi-GiB and an unconditional stack would pay that driver
-        # allocation on every probe call.
-        if self._bc is None or self._bc_ctx is not sc:
-            self._invalidate_broadcast()
-            matrix = np.stack([np.frombuffer(b, dtype=np.uint8) for b in self.shards])
-            self._bc = sc.broadcast(matrix)
-            self._bc_ctx = sc
-        bc = self._bc
-
-        @F.pandas_udf(T.BooleanType())
-        def might_contain(values: pd.Series) -> pd.Series:
-            return _probe_bloom(bc.value, values, n_shards, m_bits, k)
-
-        return might_contain
-
-    def might_contain_col(self, c: Column) -> Column:
-        return self.might_contain_udf()(c)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bingcrawler_spark import frontier as FR
-from bingcrawler_spark.bloom import ShardedBloom
+from bingcrawler_spark.bloom import SeenFilter, ShardedBloom
 from bingcrawler_spark.cuckoo import ShardedCuckoo
 from bingcrawler_spark.functions.extract import extract_links_udf, extract_text_udf
 from bingcrawler_spark.functions.simhash import simhash64_udf
@@ -171,6 +171,9 @@ def resolve_redirects(
     )
 
 
+FILTER_KINDS = {"bloom": ShardedBloom, "cuckoo": ShardedCuckoo}
+
+
 @dataclass
 class CrawlConfig:
     wave_size: int = 1000
@@ -178,10 +181,9 @@ class CrawlConfig:
     default_budget: int | None = None  # per-host per-wave politeness cap
     min_weight: int | None = None  # priorityBottomLine (F10)
     use_bloom: bool = False
-    bloom_shards: int = 4
-    # seen-set prefilter structure when use_bloom is on: "bloom"
-    # (ShardedBloom, OR-mergeable deltas) or "cuckoo" (ShardedCuckoo,
-    # 16-bit fingerprints, supports deletion) — the north rule names both
+    # seen-set prefilter kind when use_bloom is on, a FILTER_KINDS key:
+    # "bloom" (ShardedBloom, OR-mergeable deltas) or "cuckoo"
+    # (ShardedCuckoo, 16-bit fingerprints) — the north rule names both
     filter_kind: str = "bloom"
     child_weight_expr: str | None = None  # SQL expr over `curl`, default 100
     n_partitions: int = 32  # state-table partitioning (host-hash at scale)
@@ -209,12 +211,16 @@ class CrawlEngine:
         self.pages = pages
         self.robots = robots
         self.cfg = config or CrawlConfig()
+        if self.cfg.use_bloom and self.cfg.filter_kind not in FILTER_KINDS:
+            raise ValueError(
+                f"filter_kind {self.cfg.filter_kind!r} is not one of "
+                f"{sorted(FILTER_KINDS)}"
+            )
         self._sizes: dict[str, int] | None = None  # {"frontier": n, "seen": n}
-        # incremental bloom state: built once (or on resume), then each
-        # wave ORs in only its new-url delta; rebuilt when the inserted
-        # count outgrows capacity (amortized doubling)
-        self._bloom: ShardedBloom | None = None
-        self._bloom_items: int = 0
+        # incremental seen filter: built once (or on resume), then each
+        # wave adds only its new-url delta; rebuilt when it is full
+        # (amortized doubling)
+        self._filter: SeenFilter | None = None
         # mid-wave-kill recovery is only possible for waves run by a DEAD
         # process: once a wave completes cleanly in THIS process, the next
         # wave's rollback scan is a guaranteed no-op — skip it (first wave
@@ -317,13 +323,12 @@ class CrawlEngine:
             self.store.rollback_to_wave("ref_edges", wave - 1)
             self.store.rollback_rows_to_wave("wave_metrics", wave - 1)
             # the failed attempt may have mutated the cached lineage sizes
-            # and the incremental bloom out of sync with the rolled-back
+            # and the incremental filter out of sync with the rolled-back
             # (or mid-committed) tables — drop both so they rebuild from
-            # disk.  Costs one recount/bloom rebuild on the rare retry
+            # disk.  Costs one recount/filter rebuild on the rare retry
             # path only; on resume they are None already.
             self._sizes = None
-            self._bloom = None
-            self._bloom_items = 0
+            self._filter = None
         # mark the wave in-flight: if anything below raises after a partial
         # promote (disk-full mid-commit, Ctrl-C in a REPL caller), a retry
         # in the SAME process must roll back too — appends are not
@@ -427,39 +432,29 @@ class CrawlEngine:
 
         frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
 
-        bloom = None
-        if self.cfg.use_bloom:
-            # incremental: frontier ∪ seen only ever GROWS by each wave's
-            # new rows, so the filter is built once (first wave / resume /
-            # capacity overflow — amortized O(state) on doubling) and then
-            # extended with O(wave) deltas below — never an O(state)
-            # re-scan per wave
-            n_existing = sizes["frontier"] + sizes["seen"]
-            if self._bloom is None or self._bloom_items > self._bloom.capacity:
-                # url set = frontier_rest ∪ seen ∪ this wave's settled rows.
-                # Settled urls ARE top's urls, so union the tiny cached
-                # `top` instead of `seen_now`: seen_now's settled branch
-                # rides the `parsed` cache, and materializing that cache
-                # computes ALL its columns — the build job would run the
-                # wave's three parse UDFs as a side effect (measured
-                # 27-33 s/build at the 262k protocol, the whole parse cost
-                # landing under the filter build instead of the writes)
-                existing = (
-                    frontier_rest.select("url")
-                    .unionByName(seen.select("url"))
-                    .unionByName(top.select("url"))
-                )
-                est = max(2 * n_existing + 1000, 1)
-                filter_cls = (
-                    ShardedCuckoo
-                    if self.cfg.filter_kind == "cuckoo"
-                    else ShardedBloom
-                )
-                self._bloom = filter_cls.build(
-                    existing, "url", est, n_shards=self.cfg.bloom_shards
-                )
-                self._bloom_items = n_existing
-            bloom = self._bloom
+        # incremental: frontier ∪ seen only ever GROWS by each wave's
+        # new rows, so the filter is built once (first wave / resume /
+        # capacity overflow — amortized O(state) on doubling) and then
+        # extended with O(wave) deltas below — never an O(state)
+        # re-scan per wave
+        if self.cfg.use_bloom and (self._filter is None or self._filter.full):
+            # url set = frontier_rest ∪ seen ∪ this wave's settled rows.
+            # Settled urls ARE top's urls, so union the tiny cached
+            # `top` instead of `seen_now`: seen_now's settled branch
+            # rides the `parsed` cache, and materializing that cache
+            # computes ALL its columns — the build job would run the
+            # wave's three parse UDFs as a side effect (measured
+            # 27-33 s/build at the 262k protocol, the whole parse cost
+            # landing under the filter build instead of the writes)
+            existing = (
+                frontier_rest.select("url")
+                .unionByName(seen.select("url"))
+                .unionByName(top.select("url"))
+            )
+            est = 2 * (sizes["frontier"] + sizes["seen"]) + 1000
+            self._filter = FILTER_KINDS[self.cfg.filter_kind].build(
+                existing, "url", est
+            )
 
         new_rows, edges = FR.dedup_insert(
             cand,
@@ -467,7 +462,7 @@ class CrawlEngine:
             seen_now,
             wave,
             max_depth=self.cfg.max_depth,
-            bloom=bloom,
+            bloom=self._filter,
         )
         obs_new = Observation(f"new_w{wave}")
         new_rows = new_rows.observe(obs_new, F.count(F.lit(1)).alias("n"))
@@ -536,16 +531,15 @@ class CrawlEngine:
         sizes["seen"] += int(n_popped)
         sizes["frontier"] = sizes["frontier"] - int(n_popped) + int(n_new)
 
-        # bloom delta: OR in ONLY this wave's new urls (read back from the
+        # filter delta: add ONLY this wave's new urls (read back from the
         # committed snapshot — a bounded-frontier scan, no shuffle)
-        if self.cfg.use_bloom and self._bloom is not None and n_new > 0:
-            self._bloom.add_df(
+        if self._filter is not None and n_new > 0:
+            self._filter.add_df(
                 self.store.read("frontier")
                 .where(F.col("discovery_wave") == wave)
                 .select("url"),
                 "url",
             )
-            self._bloom_items += int(n_new)
         # per-partition lineage (north rule): how balanced is the frontier
         # across its partitions after the salted repartition?  Read from
         # the committed snapshot's parquet FOOTERS (one row-count per file

@@ -1,13 +1,9 @@
 """Sharded cuckoo-filter seen-set prefilter — the north rule names a
 "bloom/cuckoo URL-seen set"; this is the cuckoo half (partial-key
-cuckoo hashing per Fan et al., CoNEXT'14), complementing
-``bloom.ShardedBloom`` with two properties Bloom cannot offer:
-
-* **deletion** — a fingerprint can be removed, so state rollbacks
-  (mid-wave kill recovery) can retract exactly the URLs whose deltas
-  were rolled back instead of living with stale positives;
-* **~2 orders lower fpp per bit at the same size class** — 16-bit
-  fingerprints in 4-slot buckets give fpp ≈ 2·4/2^16 ≈ 1.2e-4.
+cuckoo hashing per Fan et al., CoNEXT'14), the second kind of
+``bloom.SeenFilter`` next to ``bloom.ShardedBloom``.  What it offers over
+the Bloom is ~2 orders lower fpp per bit at the same size class: 16-bit
+fingerprints in 4-slot buckets give fpp ≈ 2·4/2^16 ≈ 1.2e-4.
 
 Layout: urls shard by ``h1 mod n_shards`` (same hash family as the
 Bloom — pandas 64-bit siphash + splitmix remix); each shard is an
@@ -23,20 +19,19 @@ triples by shard and builds each shard's table inside one
 ``applyInPandas`` group — the 100 TB text never moves, parallelism =
 n_shards, and at 10^10 urls each shard task streams its triples into a
 ~128 MiB table exactly as a cluster shard-builder would.  Increments
-and deletes move the same narrow triples driver-side (O(wave) rows).
+move the same narrow triples driver-side (O(wave) rows).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from bingcrawler_spark.bloom import _hashes, _remix
+from bingcrawler_spark.bloom import SeenFilter, _hashes, _remix
 
 BUCKET_SLOTS = 4
 MAX_KICKS = 128
@@ -62,6 +57,18 @@ def _triples_of(values: pd.Series, n_shards: int, mask: int) -> pd.DataFrame:
     return pd.DataFrame({"shard": shard, "fp": fp.astype(np.int32), "i1": i1})
 
 
+def _triples_df(df: DataFrame, col: str, n_shards: int, mask: int) -> DataFrame:
+    """Distributed url → triple map over the non-null values of ``col``."""
+
+    def to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            vals = pdf[col].dropna()
+            if not vals.empty:
+                yield _triples_of(vals, n_shards, mask)
+
+    return df.select(col).mapInPandas(to_triples, _TRIPLE_SCHEMA)
+
+
 def _alt_bucket(fp: np.ndarray, i: np.ndarray, mask: int) -> np.ndarray:
     return (i ^ (_remix(fp.astype(np.uint64)) & np.uint64(mask)).astype(np.int64)) & mask
 
@@ -81,15 +88,14 @@ def _alt_bucket_int(fp: int, i: int, mask: int) -> int:
 
 def _probe_cuckoo(
     stack: np.ndarray,
-    victim_keys: set,
     values: pd.Series,
+    victim_keys: set,
     n_shards: int,
     mask: int,
 ) -> pd.Series:
     """Two-bucket + victim-stash membership test — module-level so the
-    pandas UDFs in might_contain_udf close over only a broadcast handle
-    (or, in the sessionless fallback, the stacked tables) and never
-    both."""
+    pandas UDF closes over only a broadcast handle and the probe's small
+    arguments (SeenFilter.might_contain_udf)."""
     if values.empty:
         return pd.Series([], dtype=bool)
     t = _triples_of(values.fillna(""), n_shards, mask)
@@ -110,18 +116,19 @@ def _probe_cuckoo(
 
 
 def _insert_into(
-    table: np.ndarray, victims: list, fp: np.ndarray, i1: np.ndarray, mask: int
-) -> int:
-    """Sequential cuckoo insert of a triple batch into one shard table.
-    Returns the number inserted into buckets (the rest joined victims —
-    still positive at lookup, so never a false negative)."""
+    table: np.ndarray, victims: list, triples: pd.DataFrame, mask: int
+) -> None:
+    """Sequential cuckoo insert of a triple batch into one shard table.  A
+    key still homeless after MAX_KICKS joins ``victims`` — still positive at
+    lookup, so never a false negative."""
     rng_state = 0x9E3779B97F4A7C15  # deterministic kick-slot selector
-    ok = 0
+    fp = triples["fp"].to_numpy(np.int32)
+    i1 = triples["i1"].to_numpy(np.int64)
     # the whole batch's alt buckets come from ONE vectorized pass; the
     # python loop below never constructs arrays (the kick path uses the
     # scalar hash twin) — same placements, order-of-magnitude less
     # per-key overhead on the seen-set build path
-    alts = _alt_bucket(np.asarray(fp), np.asarray(i1), mask)
+    alts = _alt_bucket(fp, i1, mask)
     for f, b, a in zip(fp.tolist(), i1.tolist(), alts.tolist()):
         placed = False
         for idx in (b, a):
@@ -132,7 +139,6 @@ def _insert_into(
                 placed = True
                 break
         if placed:
-            ok += 1
             continue
         # kick loop: evict a deterministic slot, relocate the evictee
         cur_f, cur_b = f, b
@@ -147,18 +153,14 @@ def _insert_into(
             empty = np.nonzero(row == 0)[0]
             if empty.size:
                 row[empty[0]] = cur_f
-                placed = True
                 break
-        if placed:
-            ok += 1
         else:
             victims.append((int(cur_b), int(cur_f)))
-    return ok
 
 
-class ShardedCuckoo:
-    """Sharded cuckoo filter with the ShardedBloom engine interface
-    (build / add_df / capacity / might_contain_col) plus delete_df."""
+class ShardedCuckoo(SeenFilter):
+    """Sharded cuckoo filter: the SeenFilter engine interface (build /
+    add_df / items / full / might_contain_col) over fingerprint tables."""
 
     def __init__(
         self,
@@ -166,28 +168,29 @@ class ShardedCuckoo:
         victims: list[list],
         n_buckets: int,
         capacity: int = 0,
+        items: int = 0,
     ):
+        super().__init__(capacity, items)
         self.tables = tables
         self.victims = victims
         self.n_shards = len(tables)
         self.n_buckets = n_buckets
         self.mask = n_buckets - 1
-        self.capacity = capacity
-        # cached sc.broadcast of the stacked tables (see might_contain_udf);
-        # invalidated whenever add_df/delete_df mutate the tables, or when
-        # the SparkContext that created it is no longer the active one (a
-        # handle from a stopped context fails at task execution time)
-        self._bc = None
-        self._bc_ctx = None
 
-    def _invalidate_broadcast(self) -> None:
-        if self._bc is not None:
-            try:
-                self._bc.unpersist()
-            except Exception:
-                pass  # session may already be gone
-            self._bc = None
-            self._bc_ctx = None
+    def _payload(self) -> np.ndarray:
+        # the stacked (n_shards, n_buckets, 4) fingerprint tables are
+        # GiB-sized at the 10^10-url design scale: broadcast them
+        return np.stack(self.tables)
+
+    def _probe(self) -> tuple[Callable, tuple]:
+        # the victim-key set (an overflow stash, a handful of entries)
+        # rides the closure
+        victim_keys = {
+            (s << 48) | (b << 16) | f
+            for s, vs in enumerate(self.victims)
+            for b, f in vs
+        }
+        return _probe_cuckoo, (victim_keys, self.n_shards, self.mask)
 
     # -- construction --------------------------------------------------------
     @staticmethod
@@ -204,45 +207,28 @@ class ShardedCuckoo:
         n_buckets = max(n_buckets, 8)
         mask = n_buckets - 1
 
-        def to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                vals = pdf[col].dropna()
-                if not vals.empty:
-                    yield _triples_of(vals, n_shards, mask)
-
         def build_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             table = np.zeros((n_buckets, BUCKET_SLOTS), dtype=np.uint16)
             victims: list = []
-            _insert_into(
-                table,
-                victims,
-                pdf["fp"].to_numpy(np.int32),
-                pdf["i1"].to_numpy(np.int64),
-                mask,
-            )
+            _insert_into(table, victims, pdf, mask)
             return pd.DataFrame(
                 {
                     "shard": [int(key[0])],
                     "table": [table.tobytes()],
-                    "victims": [
-                        np.array(victims, dtype=np.int64).tobytes()
-                    ],
+                    "victims": [np.array(victims, dtype=np.int64).tobytes()],
+                    "n": [len(pdf)],
                 }
             )
 
         rows = (
-            df.select(col)
-            .mapInPandas(to_triples, _TRIPLE_SCHEMA)
+            _triples_df(df, col, n_shards, mask)
             .groupBy("shard")
             .applyInPandas(
-                build_shard, "shard int, table binary, victims binary"
+                build_shard, "shard int, table binary, victims binary, n long"
             )
             .collect()
         )
-        tables = [
-            np.zeros((n_buckets, BUCKET_SLOTS), dtype=np.uint16)
-            for _ in range(n_shards)
-        ]
+        tables = [np.zeros((n_buckets, BUCKET_SLOTS), np.uint16) for _ in range(n_shards)]
         victims: list[list] = [[] for _ in range(n_shards)]
         for r in rows:
             tables[r["shard"]] = (
@@ -252,97 +238,15 @@ class ShardedCuckoo:
             )
             v = np.frombuffer(r["victims"], dtype=np.int64).reshape(-1, 2)
             victims[r["shard"]] = [(int(a), int(b)) for a, b in v]
-        return ShardedCuckoo(tables, victims, n_buckets, capacity=expected_items)
-
-    def _collect_triples(self, df: DataFrame, col: str) -> pd.DataFrame:
-        n_shards, mask = self.n_shards, self.mask
-
-        def to_triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                vals = pdf[col].dropna()
-                if not vals.empty:
-                    yield _triples_of(vals, n_shards, mask)
-
-        pdf = (
-            df.select(col).mapInPandas(to_triples, _TRIPLE_SCHEMA).toPandas()
-        )
-        return pdf
+        n = sum(r["n"] for r in rows)
+        return ShardedCuckoo(tables, victims, n_buckets, expected_items, n)
 
     def add_df(self, df: DataFrame, col: str) -> None:
         """Insert an O(wave) url delta: triples computed distributed,
         applied to the resident tables (same locality story as the
         Bloom delta OR-in)."""
-        pdf = self._collect_triples(df, col)
-        for s, grp in pdf.groupby("shard"):
-            _insert_into(
-                self.tables[s],
-                self.victims[s],
-                grp["fp"].to_numpy(np.int32),
-                grp["i1"].to_numpy(np.int64),
-                self.mask,
-            )
+        triples = _triples_df(df, col, self.n_shards, self.mask).toPandas()
+        for s, grp in triples.groupby("shard"):
+            _insert_into(self.tables[s], self.victims[s], grp, self.mask)
+        self.items += len(triples)
         self._invalidate_broadcast()
-
-    def delete_df(self, df: DataFrame, col: str) -> int:
-        """Remove ONE stored copy per url (cuckoo's structural advantage
-        over Bloom — lets rollback retract retracted URLs).  Returns how
-        many were found and removed."""
-        pdf = self._collect_triples(df, col)
-        removed = 0
-        for s, grp in pdf.groupby("shard"):
-            table, victims = self.tables[s], self.victims[s]
-            for f, b in zip(
-                grp["fp"].to_numpy(np.int32).tolist(),
-                grp["i1"].to_numpy(np.int64).tolist(),
-            ):
-                f16 = np.uint16(f)
-                b2 = _alt_bucket_int(f, b, self.mask)
-                done = False
-                for idx in (b, b2):
-                    slots = np.nonzero(table[idx] == f16)[0]
-                    if slots.size:
-                        table[idx][slots[0]] = 0
-                        removed += 1
-                        done = True
-                        break
-                if not done:
-                    for pair in ((b, int(f16)), (b2, int(f16))):
-                        if pair in victims:
-                            victims.remove(pair)
-                            removed += 1
-                            break
-        self._invalidate_broadcast()
-        return removed
-
-    # -- membership ----------------------------------------------------------
-    def might_contain_udf(self):
-        """Vectorized membership probe.  Same broadcast contract as
-        ShardedBloom.might_contain_udf: the stacked (n_shards, n_buckets, 4)
-        fingerprint tables ride an ``sc.broadcast`` cached on the filter
-        (invalidated by add_df/delete_df), never the task closure — at the
-        10^10-url design scale the tables are GiB-sized and closure
-        shipping pays that per TASK instead of once per executor.  Only
-        the victim-key set (an overflow stash, a handful of entries) stays
-        in the closure."""
-        from pyspark.sql import SparkSession
-
-        victim_keys = set()
-        for s, vs in enumerate(self.victims):
-            for b, f in vs:
-                victim_keys.add((s << 48) | (b << 16) | f)
-        n_shards, mask = self.n_shards, self.mask
-        sc = SparkSession.active().sparkContext
-        if self._bc is None or self._bc_ctx is not sc:
-            self._invalidate_broadcast()
-            self._bc = sc.broadcast(np.stack(self.tables))  # (n_shards, n_buckets, 4)
-            self._bc_ctx = sc
-        bc = self._bc
-
-        @F.pandas_udf(T.BooleanType())
-        def might_contain(values: pd.Series) -> pd.Series:
-            return _probe_cuckoo(bc.value, victim_keys, values, n_shards, mask)
-
-        return might_contain
-
-    def might_contain_col(self, c: Column) -> Column:
-        return self.might_contain_udf()(c)

@@ -302,7 +302,7 @@ def dedup_insert(
 
     cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight.
     frontier_rest: frontier minus this wave's pop set. seen: post-settle.
-    bloom: optional ShardedBloom/ShardedCuckoo over seen∪frontier urls,
+    bloom: optional SeenFilter (bloom.py) over seen∪frontier urls,
     probed once per distinct candidate url; only positives can match in
     the exact anti-join (SURVEY.md §4.1).  The state side is still scanned
     and shuffled once, as on the exact path, and every candidate still

@@ -1,8 +1,15 @@
-"""Sharded Bloom filter: no false negatives, bounded false positives."""
+"""Seen filters: no false negatives, bounded false positives, a pinned
+Bloom bit layout, and a load count that tracks what was inserted."""
 
+import tempfile
+
+import pytest
 from pyspark.sql import functions as F
 
 from bingcrawler_spark.bloom import ShardedBloom
+from bingcrawler_spark.crawler import FILTER_KINDS, CrawlConfig, CrawlEngine
+from bingcrawler_spark.statestore import SnapshotStore
+from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
 
 
 def test_bloom_membership(spark):
@@ -96,11 +103,57 @@ def test_cuckoo_probe_udf_closure_excludes_tables(spark):
     udf = cuckoo.might_contain_udf()
     payload = len(cloudpickle.dumps(udf.func, protocol=pickle.HIGHEST_PROTOCOL))
     assert payload < 100_000, f"closure carries {payload} bytes"
-    cuckoo.delete_df(df.limit(5), "url")
+    # broadcast is invalidated by a delta add
+    extra = spark.createDataFrame([("http://h0.example/extra",)], ["url"])
+    cuckoo.add_df(extra, "url")
     assert cuckoo._bc is None
     got = (
-        df.join(df.limit(5), "url", "left_anti")
+        df.unionByName(extra)
         .withColumn("hit", cuckoo.might_contain_col(F.col("url")))
         .collect()
     )
-    assert all(r["hit"] for r in got)  # survivors: no false negatives
+    assert all(r["hit"] for r in got)  # no false negatives
+
+
+def test_bitmap_bytes_pinned(spark):
+    """The hash family and bit layout decide every probe: pin the bitmap
+    bytes of a fixed input so a change to either cannot pass unnoticed
+    (two builds of the same code always agree with each other)."""
+    import hashlib
+
+    df = spark.createDataFrame(
+        [(f"http://h{i % 7}.example/p/{i}",) for i in range(2000)], ["url"]
+    ).repartition(4)
+    bloom = ShardedBloom.build(df, "url", expected_items=2000, n_shards=4)
+    assert (bloom.m_bits, bloom.k) == (4800, 7)
+    assert hashlib.sha256(b"".join(bloom.shards)).hexdigest() == (
+        "61ed985a67587492fed6cd69630750bb082ca51e713d4026e8adba3e747cd680"
+    )
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_full_once_items_pass_capacity(spark, kind):
+    empty = spark.createDataFrame([], "url string")
+    f = FILTER_KINDS[kind].build(empty, "url", expected_items=10)
+    urls = [(f"http://h/{i}",) for i in range(11)]
+    f.add_df(spark.createDataFrame(urls[:10], "url string"), "url")
+    assert (f.items, f.full) == (10, False)
+    f.add_df(spark.createDataFrame(urls[10:], "url string"), "url")
+    assert (f.items, f.full) == (11, True)
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_filter_items_track_state_size(spark, kind):
+    """The filter's own load count covers frontier ∪ seen after every wave:
+    the build counts the existing urls, each delta adds the wave's new ones."""
+    eng = CrawlEngine(
+        spark,
+        SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_load_")),
+        synth_pages_df(spark, 300, 6),
+        robots_df(spark, 6),
+        CrawlConfig(wave_size=12, use_bloom=True, filter_kind=kind),
+    )
+    eng.bootstrap(seed_urls(300, 6))
+    for _ in range(3):
+        row = eng.run_wave()
+        assert eng._filter.items == row["frontier_size"] + row["seen_size"]

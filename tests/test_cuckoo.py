@@ -1,6 +1,5 @@
 """Sharded cuckoo filter: no false negatives (even past capacity),
-low fpp, working deletion, incremental adds, and bloom-parity inside
-the crawl engine."""
+low fpp, incremental adds, and bloom-parity inside the crawl engine."""
 
 import tempfile
 
@@ -47,23 +46,6 @@ def test_incremental_add(spark):
         ck.might_contain_col(F.col("url")).alias("m")
     )
     assert hits.where(~F.col("m")).count() == 0
-
-
-def test_delete_retracts(spark):
-    ck = ShardedCuckoo.build(
-        _urls_df(spark, 0, 1000), "url", expected_items=2000, n_shards=2
-    )
-    removed = ck.delete_df(_urls_df(spark, 0, 1000, 2), "url")
-    assert removed == 500
-    kept = _urls_df(spark, 1, 1000, 2).select(
-        ck.might_contain_col(F.col("url")).alias("m")
-    )
-    assert kept.where(~F.col("m")).count() == 0  # survivors still positive
-    gone = _urls_df(spark, 0, 1000, 2).select(
-        ck.might_contain_col(F.col("url")).alias("m")
-    )
-    # deleted urls should now miss, modulo rare fingerprint collisions
-    assert gone.where(F.col("m")).count() <= 5
 
 
 def test_engine_parity_cuckoo_vs_bloom(spark):

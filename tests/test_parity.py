@@ -39,7 +39,6 @@ def _spark_crawl(spark, n_waves, wave_size, filter_kind=None, with_robots=True):
         max_depth=3,
         use_bloom=filter_kind is not None,
         filter_kind=filter_kind or "bloom",
-        bloom_shards=2,
         child_weight_expr=CHILD_W_SQL,
     )
     eng = CrawlEngine(spark, store, pages, robots, cfg)

@@ -79,8 +79,7 @@ def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
     store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_plan_"))
     eng = CrawlEngine(
         spark, store, synth_pages_df(spark, 120, 4), robots_df(spark, 4),
-        CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind,
-                    bloom_shards=2),
+        CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind),
     )
     eng.bootstrap(seed_urls(120, 4))
     plans = []
