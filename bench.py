@@ -272,11 +272,7 @@ def run_crawl(spark) -> dict:
 def run_parse_stage(spark) -> dict:
     from pyspark.sql import functions as F
 
-    from bingcrawler_spark.functions.extract import (
-        extract_links_udf,
-        extract_text_udf,
-    )
-    from bingcrawler_spark.functions.simhash import simhash64_udf
+    from bingcrawler_spark.functions.extract import parse_page_udf
     from bingcrawler_spark.synth import synth_pages_df
 
     pages = synth_pages_df(
@@ -284,15 +280,13 @@ def run_parse_stage(spark) -> dict:
         n_words=PARSE_STAGE["n_words"],
     ).cache()
     n = pages.count()  # materialize outside the timed window
-    pages.limit(512).select(extract_text_udf("html").alias("t")).count()  # warm workers
+    pages.limit(512).select(parse_page_udf("html", "url").alias("p")).count()  # warm workers
 
     def timed() -> float:
         t0 = time.time()
         (
-            pages.withColumn("text2", extract_text_udf("html"))
-            .withColumn("links", extract_links_udf("html", "url"))
-            .withColumn("simhash", simhash64_udf("text2"))
-            .agg(F.count("simhash"), F.sum(F.size("links")))
+            pages.withColumn("p", parse_page_udf("html", "url"))
+            .agg(F.count("p.simhash"), F.sum(F.size("p.links")))
             .collect()
         )
         return time.time() - t0
@@ -307,21 +301,15 @@ def run_parse_stage(spark) -> dict:
 
 def _control_work(rng: tuple) -> int:
     # module-level so multiprocessing can pickle it
-    from bingcrawler_spark.functions.extract import (
-        py_extract_links,
-        py_extract_text,
-    )
-    from bingcrawler_spark.functions.simhash import py_simhash64
+    from bingcrawler_spark.functions.extract import py_parse_page
     from bingcrawler_spark.synth import page_html
 
     lo, hi = rng
     n, hosts, words = CONTROL["n_pages"], CONTROL["n_hosts"], CONTROL["n_words"]
     acc = 0
     for i in range(lo, hi):
-        html = page_html(i, n, hosts, n_words=words)
-        text = py_extract_text(html)
-        acc += len(py_extract_links(html.decode("utf-8", "replace"), "http://h.x/p"))
-        acc += py_simhash64(text) & 1
+        links, simhash = py_parse_page(page_html(i, n, hosts, n_words=words), "http://h.x/p")
+        acc += len(links) + (simhash & 1)
     return acc
 
 

@@ -4,7 +4,7 @@ Each wave (one snapshot set + a metrics row):
 
   wave_k:  top      = politeness-budgeted top-k of frontier        # F1+F10
            fetched  = pages ⋈ broadcast(top) on url                # S1..S4
-           parsed   = text/links/simhash pandas UDFs               # P4,P5,P12
+           parsed   = links/simhash, one parse pandas UDF          # P4,P5,P12
            seen    += settled wave rows        (APPEND delta)      # F4
            cand     = explode(links) → canon → depth+1 → robots    # P1,F3
            new,edges= dedup_insert(cand, ...)                      # F2
@@ -43,8 +43,7 @@ from pyspark.sql import types as T
 from bingcrawler_spark import frontier as FR
 from bingcrawler_spark.bloom import SeenFilter, ShardedBloom
 from bingcrawler_spark.cuckoo import ShardedCuckoo
-from bingcrawler_spark.functions.extract import extract_links_udf, extract_text_udf
-from bingcrawler_spark.functions.simhash import simhash64_udf
+from bingcrawler_spark.functions.extract import parse_page_udf
 from bingcrawler_spark.statestore import SnapshotStore
 
 POP_LOG_SCHEMA = T.StructType(
@@ -263,10 +262,12 @@ class CrawlEngine:
                     "seen": int(m.get("seen_size", 0)),
                 }
             else:
-                # the metrics row for the committed wave is missing (kill
-                # between the frontier commit — the wave's commit point —
-                # and log_row): the lineage is broken, recount from the
-                # tables once.  O(state), retry/odd-resume path only.
+                # the metrics row for the committed wave is missing: run_wave
+                # logs it before the frontier promote (the wave's commit
+                # point), so only a bootstrap killed between its frontier
+                # commit and log_row, or a lost row log, gets here.  The
+                # lineage is broken: recount from the tables once.
+                # O(state), odd-resume path only.
                 self._sizes = {
                     "frontier": self.store.read("frontier").count(),
                     "seen": self.store.read("seen").count(),
@@ -312,12 +313,13 @@ class CrawlEngine:
     def run_wave(self) -> dict:
         t0 = time.time()
         wave = self.wave + 1
-        # mid-wave-kill recovery: a wave commits seen delta → frontier →
-        # ref_edges → metrics row, and the FRONTIER commit is the wave's
-        # commit point (self.wave derives from it).  A kill between commits
-        # leaves deltas ahead of the last frontier commit; appends are not
-        # idempotent, so roll those partial deltas back before re-running
-        # the wave (tests/test_crawler.py mid-wave kill cases).
+        # mid-wave-kill recovery: a wave commits seen delta → ref_edges
+        # delta → metrics row → frontier, and the FRONTIER commit is the
+        # wave's commit point (self.wave derives from it).  A kill between
+        # commits leaves deltas (and the metrics row) ahead of the last
+        # frontier commit; appends are not idempotent, so roll those back
+        # before re-running the wave (tests/test_crawler.py mid-wave kill
+        # cases).
         if self._needs_rollback:
             self.store.rollback_to_wave("seen", wave - 1)
             self.store.rollback_to_wave("ref_edges", wave - 1)
@@ -348,7 +350,7 @@ class CrawlEngine:
         )
         # pop_wave's top-k compiles to TakeOrderedAndProject, which lands
         # the whole wave in ONE partition — spread it back out so the parse
-        # UDFs below use every core, then cache (it feeds fetch, settle AND
+        # UDF below uses every core, then cache (it feeds fetch, settle AND
         # removal)
         top = top.repartition(self.cfg.n_partitions).cache()
         # n_popped is NOT counted here: it rides the settle write's
@@ -382,14 +384,16 @@ class CrawlEngine:
         # (and at cluster scale would ship O(wave) bytes to every
         # executor); shuffling it is parallel and O(wave) total.
         fetched = top.join(hits.hint("shuffle_hash"), "url", "left")
+        # one Python crossing per page: links and simhash are two fields of
+        # one struct, so each page's text is extracted once and only hashed
         parsed = (
             fetched.withColumn(
                 "status", F.when(F.col("html").isNull(), -1).otherwise(1)
             )
-            .withColumn("text", extract_text_udf(F.col("html")))
-            .withColumn("links", extract_links_udf(F.col("html"), F.col("url")))
-            .withColumn("simhash", simhash64_udf(F.col("text")))
-            .drop("html")
+            .withColumn("_parse", parse_page_udf(F.col("html"), F.col("url")))
+            .withColumn("links", F.col("_parse.links"))
+            .withColumn("simhash", F.col("_parse.simhash"))
+            .drop("html", "_parse")
             .cache()
         )
 
@@ -400,8 +404,8 @@ class CrawlEngine:
         # cost extra jobs.  The few-files squeeze MUST be repartition(), not
         # coalesce(): coalesce propagates up to the nearest exchange, and the
         # nearest exchange above this write is the wave shuffle-hash join —
-        # so coalesce(n_delta) would run the join stage that hosts all three
-        # parse pandas UDFs (and fills the `parsed` cache) at n_delta tasks,
+        # so coalesce(n_delta) would run the join stage that hosts the parse
+        # pandas UDF (and fills the `parsed` cache) at n_delta tasks,
         # serializing the wave's dominant CPU onto one core at small
         # parallelism (measured: t_seen_append 35-46 s/wave at 2 cores,
         # full-loop N->4N efficiency capped at ~0.42).  repartition inserts
@@ -421,14 +425,11 @@ class CrawlEngine:
         # be staged concurrently with the frontier/edges writes below)
         seen_now = seen.unionByName(settled)
 
-        # F2/F3: candidates → dedup-insert (n_candidates observed, not
-        # re-counted; the observation fires when the cache materializes
-        # under the frontier commit below)
+        # F2/F3: candidates → dedup-insert
         cand = FR.make_candidates(parsed, child_weight=self._child_weight())
         if self.robots is not None:
             cand = FR.robots_filter(cand, self.robots)
-        obs_cand = Observation(f"cand_w{wave}")
-        cand = cand.observe(obs_cand, F.count(F.lit(1)).alias("n")).cache()
+        cand = cand.cache()
 
         frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
 
@@ -443,7 +444,7 @@ class CrawlEngine:
             # `top` instead of `seen_now`: seen_now's settled branch
             # rides the `parsed` cache, and materializing that cache
             # computes ALL its columns — the build job would run the
-            # wave's three parse UDFs as a side effect (measured
+            # wave's parse UDF as a side effect (measured
             # 27-33 s/build at the 262k protocol, the whole parse cost
             # landing under the filter build instead of the writes)
             existing = (
@@ -477,13 +478,15 @@ class CrawlEngine:
         # commits (atomic snapshot per table, per wave).  ALL THREE writes
         # STAGE concurrently — seen delta, ref_edges delta, frontier
         # overwrite — then PROMOTE (the microsecond manifest rename, the
-        # real commit point) in recovery order seen → edges → frontier.
-        # Safe: the three jobs share only the parsed/cand caches
-        # (block-level locks dedupe any shared recompute), Spark's scheduler
-        # is thread-safe, and a kill between promotes leaves exactly the
-        # "delta ahead of the frontier commit point" case the resume
-        # rollback already removes; a kill during staging leaves no manifest
-        # change at all (orphan dirs are overwritten by the next stage).
+        # real commit point) in recovery order seen → edges → metrics row →
+        # frontier.  Safe: the three jobs share only the parsed/cand caches,
+        # which the cand.count() just before the pool fills on this thread
+        # (no two writes race to build a cache, so the jobs per wave are
+        # fixed); Spark's scheduler is thread-safe; a kill between promotes
+        # leaves exactly the "delta ahead of the frontier commit point" case
+        # the resume rollback already removes; a kill during staging leaves
+        # no manifest change at all (orphan dirs are overwritten by the next
+        # stage).
         # Overlapping all three hides two actions' planning + commit latency
         # — per-wave driver constants that executor count cannot reduce, the
         # full-loop N→4N scaling cap (BENCH/SUBMIT_SCALING.md).
@@ -492,6 +495,7 @@ class CrawlEngine:
         # delta rows are narrow, the exchange is cheap.
         from concurrent.futures import ThreadPoolExecutor
 
+        n_cand = cand.count()
         with ThreadPoolExecutor(max_workers=2) as pool:
             seen_fut = pool.submit(self.store.stage, "seen", seen_delta, "append")
             edges_fut = pool.submit(
@@ -516,15 +520,13 @@ class CrawlEngine:
 
         self.store.promote(seen_tok, wave)
         self.store.promote(edges_tok, wave)
-        frontier_snap = self.store.promote(frontier_tok, wave)
 
         # harvest the observed counts (all fired by the writes above —
-        # the whole wave normally runs top.count + 3 write jobs, nothing
+        # the whole wave normally runs cand.count + 3 write jobs, nothing
         # more; the fallbacks only trigger on empty-set waves)
         n_failed = _harvest(
             obs_settle, "n_failed", lambda: parsed.where(F.col("status") < 0).count()
         )
-        n_cand = _harvest(obs_cand, "n", cand.count)
         n_new = _harvest(obs_new, "n", new_rows.count)
 
         # lineage sizes: pure arithmetic — never an O(state) recount
@@ -532,19 +534,19 @@ class CrawlEngine:
         sizes["frontier"] = sizes["frontier"] - int(n_popped) + int(n_new)
 
         # filter delta: add ONLY this wave's new urls (read back from the
-        # committed snapshot — a bounded-frontier scan, no shuffle)
+        # staged frontier snapshot — a bounded-frontier scan, no shuffle)
         if self._filter is not None and n_new > 0:
             self._filter.add_df(
-                self.store.read("frontier")
+                self.spark.read.parquet(frontier_tok["dir"])
                 .where(F.col("discovery_wave") == wave)
                 .select("url"),
                 "url",
             )
         # per-partition lineage (north rule): how balanced is the frontier
         # across its partitions after the salted repartition?  Read from
-        # the committed snapshot's parquet FOOTERS (one row-count per file
+        # the staged snapshot's parquet FOOTERS (one row-count per file
         # = per partition) — Iceberg-manifest-style metadata, zero jobs.
-        max_part = _max_file_rows(frontier_snap)
+        max_part = _max_file_rows(frontier_tok["dir"])
         row = {
             "wave": wave,
             "n_popped": int(n_popped),
@@ -557,7 +559,12 @@ class CrawlEngine:
             "max_partition_rows": max_part,
             "wall_s": time.time() - t0,
         }
+        # the metrics row lands BEFORE the frontier promote (the wave's
+        # commit point): a kill between the two leaves a row for an
+        # uncommitted wave, which the resume rollback discards — the other
+        # order would leave a committed wave with no row at all
         self.store.log_row("wave_metrics", row)
+        self.store.promote(frontier_tok, wave)
         top.unpersist()
         parsed.unpersist()
         cand.unpersist()

@@ -21,7 +21,11 @@ P5 extract_text — the reference calls WebCollector's ContentExtractor from a
 binary jar absent from the repo (CommonAnalysis.java:238-249,
 lib/contentextractor-1.0.jar). Per SURVEY.md §7(b) THIS function is the
 contract: the synthetic pages table stores text := py_extract_text(html), and
-tests re-apply the UDF and assert byte-identical equality per url.
+tests re-apply it and assert byte-identical equality per url.
+
+The crawl parses each fetched page in ONE Python crossing: `parse_page_udf`
+returns struct<links, simhash> and runs py_extract_links, py_extract_text and
+py_simhash64 once each per page (P4, P5, P12).
 
 P6 getCharset — mirrors CommonAnalysis.java:540-558 including the greedy
 ``charset="(.+)"`` regex (captures to the LAST quote in the document — quirk
@@ -41,6 +45,7 @@ from bingcrawler_spark.functions.canon import (
     py_host_url,
     py_unescape_entities,
 )
+from bingcrawler_spark.functions.simhash import py_simhash64, to_signed64
 
 # ------------------------------------------------------------------ P6
 
@@ -102,22 +107,35 @@ def py_extract_text(html: bytes | str) -> str:
     return _WS_RE.sub(" ", s).strip()
 
 
-# ------------------------------------------------------- pandas UDF wrappers
+# ------------------------------------------- one-pass page parse (P4+P5+P12)
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: None if b is None else py_extract_text(bytes(b)))
+def py_parse_page(html: bytes | None, url: str) -> tuple:
+    """One page → (outlinks, SimHash64 of its main text as a signed int64);
+    None html gives (None, None).  Text is extracted once and only hashed."""
+    if html is None:
+        return None, None
+    html = bytes(html)
+    links = py_extract_links(html.decode("utf-8", "replace"), url)
+    return links, to_signed64(py_simhash64(py_extract_text(html)))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series, url: pd.Series) -> pd.Series:
-    def one(b, u):
-        if b is None or u is None:
-            return None
-        return py_extract_links(bytes(b).decode("utf-8", "replace"), u)
-
-    return pd.Series([one(b, u) for b, u in zip(html, url)])
+@F.pandas_udf(
+    T.StructType(
+        [
+            T.StructField("links", T.ArrayType(T.StringType())),
+            T.StructField("simhash", T.LongType()),
+        ]
+    )
+)
+def parse_page_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+    rows = [py_parse_page(b, u) for b, u in zip(html, url)]
+    return pd.DataFrame(
+        {
+            "links": pd.Series([r[0] for r in rows], dtype="object"),
+            "simhash": pd.Series([r[1] for r in rows], dtype="object").astype("Int64"),
+        }
+    )
 
 
 # ---------------------------------------------------- JSON-LD structured data

@@ -2,6 +2,8 @@
 
 import tempfile
 
+import pytest
+
 from bingcrawler_spark.crawler import CrawlConfig, CrawlEngine
 from bingcrawler_spark.statestore import SnapshotStore
 from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
@@ -588,57 +590,78 @@ def test_in_process_retry_after_partial_commit(spark):
     assert [r["wave"] for r in b.metrics().orderBy("wave").collect()] == [1, 2, 3]
 
 
-def test_in_process_retry_after_wave_committed(spark):
-    """Failure AFTER the frontier commit (the wave's commit point) but
-    before the metrics row lands: the wave IS committed, so the retry
-    must (a) not roll it back, (b) rebuild the cached lineage sizes
-    from the tables — the in-memory dict may have missed the committed
-    wave's counts — and continue with the next wave.  Regression: the
-    stale cached sizes once survived the retry and skewed every later
-    frontier_size/seen_size metric."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    wh_a = tempfile.mkdtemp(prefix="wh_wa_")
-    a = _engine(spark, wh_a)
+@pytest.fixture(scope="module")
+def uninterrupted_4(spark):
+    a = _engine(spark, tempfile.mkdtemp(prefix="wh_wa_"))
     a.bootstrap(seed_urls(N, H))
     a.run(4)
+    return a
 
-    wh_b = tempfile.mkdtemp(prefix="wh_wb_")
-    b = _engine(spark, wh_b)
-    b.bootstrap(seed_urls(N, H))
-    b.run(2)
 
-    real_log = b.store.log_row
-
-    def failing(table, row):
-        if table == "wave_metrics":
-            raise OSError("injected: crash after frontier commit")
-        return real_log(table, row)
-
-    b.store.log_row = failing
-    with pytest.raises(OSError):
-        b.run_wave()  # wave 3 commits, metrics row lost
-    b.store.log_row = real_log
-    assert b.wave == 3
-    b.run_wave()  # same-process retry → runs wave 4
+def _crawl_state(eng):
+    from pyspark.sql import functions as F
 
     key = lambda df: {  # noqa: E731
         (r["url"], r["weight"], r["depth"], tuple(r["referrers"]))
         for r in df.collect()
     }
-    assert key(a.seen()) == key(b.seen())
-    assert key(a.frontier()) == key(b.frontier())
-    # the wave-4 metrics row must carry RECOUNTED sizes, not the stale
-    # in-memory lineage that missed wave 3's committed deltas
-    m4 = [r for r in b.metrics().collect() if r["wave"] == 4][0]
-    assert m4["frontier_size"] == b.frontier().count()
-    assert m4["seen_size"] == b.seen().count()
-    # wave 3's metrics row is honestly absent; no duplicate pops anywhere
-    # (metrics() excludes the wave-0 bootstrap row by design)
-    assert [r["wave"] for r in b.metrics().orderBy("wave").collect()] == [1, 2, 4]
-    log = b.pop_log().groupBy("url").count()
-    assert log.where(F.col("count") > 1).count() == 0
+    metrics = [
+        {k: v for k, v in r.asDict().items() if k != "wall_s"}
+        for r in eng.metrics().orderBy("wave").collect()
+    ]
+    log = eng.pop_log()
+    assert log.groupBy("url").count().where(F.col("count") > 1).count() == 0
+    return {
+        "seen": key(eng.seen()),
+        "frontier": key(eng.frontier()),
+        "pop_log": {tuple(r) for r in log.collect()},
+        "metrics": metrics,
+    }
+
+
+@pytest.mark.parametrize("resume", ["same_process", "fresh_engine"])
+@pytest.mark.parametrize("kill_at", ["log_row", "frontier_promote"])
+def test_kill_at_wave_commit_and_resume(spark, uninterrupted_4, kill_at, resume):
+    """A kill at the wave's last two commits: the metrics row (log_row) and
+    the frontier promote, the wave's commit point.  The row is logged first,
+    so either kill leaves the wave uncommitted (a row ahead of the frontier
+    at worst, which the resume rollback drops).  Resuming, in the same
+    process or from a fresh engine, re-runs the wave: metrics stay
+    contiguous and every table equals the uninterrupted run's."""
+    wh_b = tempfile.mkdtemp(prefix="wh_wb_")
+    b = _engine(spark, wh_b)
+    b.bootstrap(seed_urls(N, H))
+    b.run(2)
+
+    real_log, real_promote = b.store.log_row, b.store.promote
+
+    def failing_log(table, row):
+        if table == "wave_metrics":
+            raise OSError("injected: crash at the metrics row")
+        return real_log(table, row)
+
+    def failing_promote(token, wave, meta=None):
+        if token["table"] == "frontier":
+            raise OSError("injected: crash at the frontier promote")
+        return real_promote(token, wave, meta)
+
+    if kill_at == "log_row":
+        b.store.log_row = failing_log
+    else:
+        b.store.promote = failing_promote
+    with pytest.raises(OSError):
+        b.run_wave()  # wave 3 dies uncommitted
+    b.store.log_row, b.store.promote = real_log, real_promote
+    assert b.wave == 2
+    if resume == "fresh_engine":
+        del b  # "crash"
+        b = _engine(spark, wh_b)
+        assert b.wave == 2
+    b.run(2)  # re-runs wave 3, then wave 4
+
+    got, want = _crawl_state(b), _crawl_state(uninterrupted_4)
+    assert [m["wave"] for m in got["metrics"]] == [1, 2, 3, 4]
+    assert got == want
 
 
 # ------------------------------------------------------ store durability

@@ -1,14 +1,12 @@
 """P4/P5/P6: link extraction quirks, the byte-identical text invariant, charset."""
 
-from pyspark.sql import functions as F
-
 from bingcrawler_spark.functions.extract import (
-    extract_links_udf,
-    extract_text_udf,
+    parse_page_udf,
     py_extract_links,
     py_extract_text,
     py_get_charset,
 )
+from bingcrawler_spark.functions.simhash import py_simhash64, to_signed64
 from bingcrawler_spark.synth import synth_pages_df, synth_pages_local
 from bingcrawler_spark.functions import extract as EX
 
@@ -67,20 +65,22 @@ def test_invariant_by_construction_local():
 
 
 def test_udf_invariant_and_links_match(spark):
-    pages = synth_pages_df(spark, 120).cache()
-    # byte-identical invariant: UDF(html) == stored text for EVERY row
-    bad = pages.where(
-        extract_text_udf(F.col("html")) != F.col("text")
-    ).count()
-    assert bad == 0
-    # UDF links == pure-python links
-    rows = pages.select(
-        "url", "html", extract_links_udf("html", "url").alias("links")
-    ).collect()
+    pages = synth_pages_df(spark, 120).select("url", "html", "text")
+    null_page = spark.createDataFrame([("http://null.example/", None, None)], pages.schema)
+    rows = (
+        pages.unionByName(null_page)
+        .withColumn("p", parse_page_udf("html", "url"))
+        .select("url", "html", "text", "p.links", "p.simhash")
+        .collect()
+    )
+    assert len(rows) > 100
     for r in rows:
-        exp = py_extract_links(bytes(r["html"]).decode(), r["url"])
-        assert list(r["links"]) == exp, r["url"]
-    pages.unpersist()
+        if r["html"] is None:
+            assert r["links"] is None and r["simhash"] is None, r["url"]
+            continue
+        assert list(r["links"]) == py_extract_links(bytes(r["html"]).decode(), r["url"]), r["url"]
+        # the kernel hashes the text the pages table stores (P5 byte-identical contract)
+        assert r["simhash"] == to_signed64(py_simhash64(r["text"])), r["url"]
 
 
 # ---------------------------------------------------- JSON-LD structured data

@@ -9,9 +9,10 @@ crossJoin against a broadcast 1-row aggregate or a tiny centroid/stats
 table (BM25's corpus stats, TF-IDF's N, IVF's centroids) — those are
 listed explicitly; the banded dedup paths must be pure equi-joins.
 
-The crawl's frontier write is pinned too: its seen-filter probe (a Python
-UDF) must appear once, over the candidate urls.  So is the number of Spark
-jobs a wave launches, so instrumentation cannot add an action unnoticed."""
+The crawl's writes are pinned too: its seen-filter probe (a Python UDF)
+must appear once, over the candidate urls, and its page parse once per
+page.  So is the number of Spark jobs a wave launches, so instrumentation
+cannot add an action unnoticed."""
 
 import re
 import tempfile
@@ -69,6 +70,27 @@ def test_no_cartesian(spark, sf_dir, name):
 # ------------------------------------------------ crawl seen-filter probe
 
 
+def _staged_plans(spark, table, cfg, n_waves):
+    """Optimized plans of `table`'s staged writes over an n-wave crawl."""
+    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_plan_"))
+    eng = CrawlEngine(
+        spark, store, synth_pages_df(spark, 120, 4), robots_df(spark, 4), cfg
+    )
+    eng.bootstrap(seed_urls(120, 4))
+    plans = []
+    stage = store.stage
+
+    def capture(t, df, mode):
+        if t == table:
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return stage(t, df, mode)
+
+    store.stage = capture
+    eng.run(n_waves)
+    assert len(plans) == n_waves
+    return plans
+
+
 @pytest.mark.parametrize("filter_kind", ["bloom", "cuckoo"])
 def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
     """The seen-filter probe is a Python UDF: it must run once per distinct
@@ -76,25 +98,19 @@ def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
     settled rows) of the exact anti-join.  Catalyst infers
     might_contain(url) from curl = url and pushes it into the state scans
     whenever the probe sits in a filter rather than in the join condition."""
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_plan_"))
-    eng = CrawlEngine(
-        spark, store, synth_pages_df(spark, 120, 4), robots_df(spark, 4),
-        CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind),
-    )
-    eng.bootstrap(seed_urls(120, 4))
-    plans = []
-    stage = store.stage
-
-    def capture(table, df, mode):
-        if table == "frontier":
-            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
-        return stage(table, df, mode)
-
-    store.stage = capture
-    eng.run(2)
-    assert len(plans) == 2
-    for plan in plans:
+    cfg = CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind)
+    for plan in _staged_plans(spark, "frontier", cfg, 2):
         assert re.findall(r"might_contain\((\w+)#", plan) == ["curl"]
+
+
+def test_parse_udf_runs_once_per_page(spark):
+    """links and simhash are two fields of one parse_page_udf call; a
+    second call (other arguments, or chained under another UDF) would run
+    the page parse twice.  Calls are counted by result id: the wave's
+    cached parse is already materialized when the seen write is planned,
+    and an executed adaptive plan prints both its initial and final form."""
+    (plan,) = _staged_plans(spark, "seen", CrawlConfig(wave_size=8), 1)
+    assert len(set(re.findall(r"parse_page_udf\(.*?\)#\d+", plan))) == 1
 
 
 # ------------------------------------------------ crawl jobs per wave
