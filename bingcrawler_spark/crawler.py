@@ -173,6 +173,29 @@ def resolve_redirects(
 FILTER_KINDS = {"bloom": ShardedBloom, "cuckoo": ShardedCuckoo}
 
 
+def _wave_cols() -> dict:
+    """run_wave's wave-invariant expressions (built once: FR.memo_expr)."""
+    return {
+        "parse": {
+            "status": F.when(F.col("html").isNull(), -1).otherwise(1),
+            "_parse": parse_page_udf(F.col("html"), F.col("url")),
+        },
+        "parsed": [
+            F.col("status"),
+            F.col("_parse.links").alias("links"),
+            F.col("_parse.simhash").alias("simhash"),
+        ],
+        "settle_obs": [
+            F.sum((F.col("status") < 0).cast("long")).alias("n_failed"),
+            F.count(F.lit(1)).alias("n_popped"),
+        ],
+        "count": F.count(F.lit(1)).alias("n"),
+        # partition by (host, salt): host-locality for the politeness rank,
+        # salt so a hot host (30%+ of a web crawl) cannot pin one partition
+        "frontier_parts": [F.col("host"), F.pmod(F.xxhash64("url"), F.lit(8))],
+    }
+
+
 @dataclass
 class CrawlConfig:
     wave_size: int = 1000
@@ -305,10 +328,13 @@ class CrawlEngine:
         )
 
     # -- one wave --------------------------------------------------------------
-    def _child_weight(self) -> Column:
-        if self.cfg.child_weight_expr:
-            return F.expr(self.cfg.child_weight_expr)
-        return F.lit(FR.DEFAULT_WEIGHT)
+    def _child_weight(self) -> Column | None:
+        """The configured child-weight expression; None means
+        make_candidates' DEFAULT_WEIGHT."""
+        expr = self.cfg.child_weight_expr
+        if not expr:
+            return None
+        return FR.memo_expr(("child_weight", expr), lambda: F.expr(expr))
 
     def run_wave(self) -> dict:
         t0 = time.time()
@@ -386,14 +412,14 @@ class CrawlEngine:
         fetched = top.join(hits.hint("shuffle_hash"), "url", "left")
         # one Python crossing per page: links and simhash are two fields of
         # one struct, so each page's text is extracted once and only hashed
+        c = FR.memo_expr(("wave_cols",), _wave_cols)
+        keep = tuple(n for n in fetched.columns if n != "html")
         parsed = (
-            fetched.withColumn(
-                "status", F.when(F.col("html").isNull(), -1).otherwise(1)
+            fetched.withColumns(c["parse"])
+            .select(
+                *FR.memo_expr(("cols",) + keep, lambda: [F.col(n) for n in keep]),
+                *c["parsed"],
             )
-            .withColumn("_parse", parse_page_udf(F.col("html"), F.col("url")))
-            .withColumn("links", F.col("_parse.links"))
-            .withColumn("simhash", F.col("_parse.simhash"))
-            .drop("html", "_parse")
             .cache()
         )
 
@@ -415,11 +441,9 @@ class CrawlEngine:
         n_delta = max(1, self.cfg.n_partitions // 4)
         settled = FR.settle(parsed, None, wave)
         obs_settle = Observation(f"settle_w{wave}")
-        seen_delta = settled.observe(
-            obs_settle,
-            F.sum((F.col("status") < 0).cast("long")).alias("n_failed"),
-            F.count(F.lit(1)).alias("n_popped"),
-        ).repartition(n_delta)
+        seen_delta = settled.observe(obs_settle, *c["settle_obs"]).repartition(
+            n_delta
+        )
         # existence checks below must see this wave's settled rows too
         # (DataFrame lineage, not the written table — so the seen write can
         # be staged concurrently with the frontier/edges writes below)
@@ -466,13 +490,9 @@ class CrawlEngine:
             bloom=self._filter,
         )
         obs_new = Observation(f"new_w{wave}")
-        new_rows = new_rows.observe(obs_new, F.count(F.lit(1)).alias("n"))
-        # partition by (host, salt): host-locality for the politeness rank,
-        # salt so a hot host (30%+ of a web crawl) cannot pin one partition
+        new_rows = new_rows.observe(obs_new, c["count"])
         frontier_final = frontier_rest.unionByName(new_rows).repartition(
-            self.cfg.n_partitions,
-            F.col("host"),
-            F.pmod(F.xxhash64("url"), F.lit(8)),
+            self.cfg.n_partitions, *c["frontier_parts"]
         )
 
         # commits (atomic snapshot per table, per wave).  ALL THREE writes
@@ -537,8 +557,8 @@ class CrawlEngine:
         # staged frontier snapshot — a bounded-frontier scan, no shuffle)
         if self._filter is not None and n_new > 0:
             self._filter.add_df(
-                self.spark.read.parquet(frontier_tok["dir"])
-                .where(F.col("discovery_wave") == wave)
+                self.store.read_staged(frontier_tok)
+                .where(F.expr(f"discovery_wave = {wave}"))
                 .select("url"),
                 "url",
             )

@@ -20,12 +20,21 @@ F10 politeness       generalizes maxThreads=5 (AbstractParser.java:136) into
    per-host per-wave budgets (north rule); skew-proofed by two-phase salted
    top-k (no single hot-host window partition).
 
-Every transform here is JVM-side (no UDFs) — candidates arrive already
-canonicalized/parsed from the extract UDFs.
+Every transform here is JVM-side (no UDFs): the parse UDF only extracts
+raw links, and make_candidates canonicalizes them with a Column expression.
+
+Plan building is driver work paid every wave before Spark runs anything,
+and each Column a function builds costs py4j round trips (one F.col ~13,
+canon_url_col ~160).  Expressions no wave changes are therefore built once
+per SparkContext (`memo_expr`), and each step is as few DataFrame
+operations as its plan allows (each one is a full JVM analysis pass).
 """
 
 from __future__ import annotations
 
+import threading
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,8 +73,36 @@ SEEN_SCHEMA = T.StructType(
     ]
 )
 
+_memo_cache: dict = {}
+_memo_sc: SparkContext | None = None
+_memo_lock = threading.RLock()  # re-entrant: a build may memo its parts
+
+
+def memo_expr(key: tuple, build):
+    """build() once per SparkContext and key.  `key` is the expression's
+    name plus every config value it depends on.  A Column holds JVM
+    handles of the context it was built in, so a stopped or restarted
+    session drops the cache instead of reusing stale handles."""
+    global _memo_sc
+    with _memo_lock:
+        sc = SparkContext._active_spark_context
+        if sc is not _memo_sc:
+            _memo_cache.clear()
+            _memo_sc = sc
+        if key not in _memo_cache:
+            _memo_cache[key] = build()
+        return _memo_cache[key]
+
+
+def _wave_lit(wave: int, name: str) -> Column:
+    """A per-wave int literal column: one F.expr, not lit + cast + alias."""
+    return F.expr(f"CAST({int(wave)} AS INT) AS {name}")
+
+
 def _pop_order():
-    return [F.col("weight").desc(), F.col("url").desc()]
+    return memo_expr(
+        ("pop_order",), lambda: [F.col("weight").desc(), F.col("url").desc()]
+    )
 
 
 def empty_frontier(spark: SparkSession) -> DataFrame:
@@ -153,33 +190,26 @@ def pop_wave(
     (TaskWeightDbManager.java:79)."""
     f = frontier
     if min_weight is not None:
-        f = f.where(F.col("weight") >= F.lit(min_weight))
+        keep = memo_expr(
+            ("min_weight", min_weight), lambda: F.col("weight") >= F.lit(min_weight)
+        )
+        f = f.where(keep)
     if robots is not None or default_budget is not None:
-        # explicit None test: default_budget=0 is a legal config meaning
-        # "unbudgeted hosts pop nothing" — `or` would turn it unlimited
-        budget = F.coalesce(
-            F.col("crawl_budget"),
-            F.lit(default_budget if default_budget is not None else 1 << 30),
-        )
         if robots is not None:
-            f = f.join(
-                F.broadcast(robots.select("host", "crawl_budget")), "host", "left"
+            budgets = memo_expr(
+                ("robots_budget",), lambda: [F.col("host"), F.col("crawl_budget")]
             )
+            f = f.join(F.broadcast(robots.select(*budgets)), "host", "left")
         else:
-            f = f.withColumn("crawl_budget", F.lit(None).cast("int"))
-        # phase 1: top-budget within (host, salt) — bounded partitions
-        salt = F.pmod(F.xxhash64("url"), F.lit(n_salts))
-        w1 = W.partitionBy("host", salt).orderBy(*_pop_order())
-        f = f.withColumn("_r1", F.row_number().over(w1)).where(
-            F.col("_r1") <= budget
+            no_budget = memo_expr(("null_int",), lambda: F.lit(None).cast("int"))
+            f = f.withColumn("crawl_budget", no_budget)
+        r1, keep1, r2, keep2 = memo_expr(
+            ("pop_budget", default_budget, n_salts),
+            lambda: _budget_ranks(default_budget, n_salts),
         )
+        # phase 1: top-budget within (host, salt) — bounded partitions;
         # phase 2: exact top-budget per host over ≤ budget*n_salts survivors
-        w2 = W.partitionBy("host").orderBy(*_pop_order())
-        f = (
-            f.withColumn("_r2", F.row_number().over(w2))
-            .where(F.col("_r2") <= budget)
-            .drop("_r1", "_r2", "crawl_budget")
-        )
+        f = f.withColumn("_r1", r1).where(keep1).withColumn("_r2", r2).where(keep2)
     # global top-k compiles to TakeOrderedAndProject — per-partition top-k
     # map-side, then ONE task merges n_partitions × k rows.  Feed that
     # single-task merge the narrowest possible rows — (url, weight) only —
@@ -189,16 +219,42 @@ def pop_wave(
     # wave_size 65536), and the frontier side joins broadcast-hash with no
     # shuffle at all.  urls are unique in the frontier (keyed store,
     # UrlsDbManager semantics), so the equi-join is an exact identity on
-    # the pop set.
-    w = W.orderBy(*_pop_order())  # k narrow rows — single partition is fine
+    # the pop set.  The rank window orders k narrow rows — a single
+    # partition is fine.
+    url, weight, pop_rank = memo_expr(
+        ("pop_rank",),
+        lambda: (
+            F.col("url"),
+            F.col("weight"),
+            F.row_number().over(W.orderBy(*_pop_order())).alias("pop_rank"),
+        ),
+    )
     ranked = (
-        f.select("url", "weight")
+        f.select(url, weight)
         .orderBy(*_pop_order())
         .limit(wave_size)
-        .withColumn("pop_rank", F.row_number().over(w))
-        .select("url", "pop_rank")
+        .select(url, pop_rank)
     )
     return frontier.join(F.broadcast(ranked), "url", "inner")
+
+
+def _budget_ranks(default_budget: int | None, n_salts: int) -> tuple:
+    """pop_wave's two politeness ranks and their keep predicates."""
+    # explicit None test: default_budget=0 is a legal config meaning
+    # "unbudgeted hosts pop nothing" — `or` would turn it unlimited
+    budget = F.coalesce(
+        F.col("crawl_budget"),
+        F.lit(default_budget if default_budget is not None else 1 << 30),
+    )
+    salt = F.pmod(F.xxhash64("url"), F.lit(n_salts))
+    w1 = W.partitionBy("host", salt).orderBy(*_pop_order())
+    w2 = W.partitionBy("host").orderBy(*_pop_order())
+    return (
+        F.row_number().over(w1),
+        F.col("_r1") <= budget,
+        F.row_number().over(w2),
+        F.col("_r2") <= budget,
+    )
 
 
 # --------------------------------------------------------------------- F4
@@ -211,29 +267,34 @@ def settle(
     Returns the settled wave rows (seen-schema); pass seen to get the
     unioned set, or None for the append delta alone (the engine appends —
     the seen table is append-only so wave cost never scales with |seen|)."""
-    msgs = (
-        F.coalesce(F.col("messages"), F.expr(_EMPTY_MSGS))
-        if "messages" in popped_results.columns
-        else F.expr(_EMPTY_MSGS)
+    has_msgs = "messages" in popped_results.columns
+    head, pop_rank = memo_expr(
+        ("settle_cols", has_msgs), lambda: _settle_cols(has_msgs)
     )
     settled = popped_results.select(
-        "url",
-        "host",
-        "weight",
-        "depth",
-        "discovery_wave",
-        "referrers",
-        msgs.alias("messages"),
-        F.col("status").cast("int"),
-        F.col("simhash").cast("long"),
-        F.lit(wave).cast("int").alias("settle_wave"),
-        F.col("pop_rank").cast("int"),
+        *head, _wave_lit(wave, "settle_wave"), pop_rank
     )
     if seen is None:
         return settled
     # allowMissingColumns: a pre-F7 seen-shaped input (no messages column)
     # unions with null messages
     return seen.unionByName(settled, allowMissingColumns=True)
+
+
+def _settle_cols(has_msgs: bool) -> tuple[list[Column], Column]:
+    """settle's select list around the per-wave settle_wave literal."""
+    msgs = (
+        F.coalesce(F.col("messages"), F.expr(_EMPTY_MSGS))
+        if has_msgs
+        else F.expr(_EMPTY_MSGS)
+    )
+    frontier_cols = ("url", "host", "weight", "depth", "discovery_wave", "referrers")
+    head = [F.col(c) for c in frontier_cols] + [
+        msgs.alias("messages"),
+        F.col("status").cast("int"),
+        F.col("simhash").cast("long"),
+    ]
+    return head, F.col("pop_rank").cast("int")
 
 
 # --------------------------------------------------------------------- F2/F3
@@ -244,34 +305,57 @@ def make_candidates(
     child_weight: Column | None = None,
 ) -> DataFrame:
     """parsed: url, depth, pop_rank, links(array). One row per (parent, link
-    position): canon (P1, CrawlUrl.java:88-89) + child depth/weight."""
-    cand = parsed.select(
-        F.col("url").alias("parent_url"),
-        F.col("pop_rank"),
-        F.col("depth").alias("parent_depth"),
-        F.posexplode_outer("links").alias("link_pos", "raw_link"),
-    ).where(F.col("raw_link").isNotNull())
-    cand = cand.withColumn("curl", canon_url_col(F.col("raw_link")))
-    w = child_weight if child_weight is not None else F.lit(DEFAULT_WEIGHT)
-    return (
-        cand.withColumn("child_depth", F.col("parent_depth") + 1)
-        .withColumn("child_weight", w.cast("int"))
-        .drop("raw_link")
+    position): canon (P1, CrawlUrl.java:88-89) + child depth/weight.
+    child_weight defaults to DEFAULT_WEIGHT; a given one may read any
+    candidate column (curl, child_depth, raw_link, ...)."""
+    c = memo_expr(("cand_cols",), _cand_cols)
+    cand = parsed.select(*c["explode"]).where(c["has_link"])
+    if child_weight is None:
+        return cand.select(*c["keep"], *c["derived"], c["default_weight"])
+    return cand.select("*", *c["derived"]).select(
+        *c["out"], child_weight.cast("int").alias("child_weight")
     )
+
+
+def _cand_cols() -> dict:
+    raw = F.col("raw_link")
+    keep = [F.col(n) for n in ("parent_url", "pop_rank", "parent_depth", "link_pos")]
+    return {
+        "explode": [
+            F.col("url").alias("parent_url"),
+            F.col("pop_rank"),
+            F.col("depth").alias("parent_depth"),
+            F.posexplode_outer("links").alias("link_pos", "raw_link"),
+        ],
+        "has_link": raw.isNotNull(),
+        "keep": keep,
+        "derived": [
+            canon_url_col(raw).alias("curl"),
+            (F.col("parent_depth") + 1).alias("child_depth"),
+        ],
+        "out": keep + [F.col("curl"), F.col("child_depth")],
+        "default_weight": F.lit(DEFAULT_WEIGHT).cast("int").alias("child_weight"),
+    }
+
+
+_ROBOTS_PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*(/.*)?$"
 
 
 def robots_filter(cand: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop candidates whose path matches a disallowed prefix for its host
     (north-rule addition; broadcast join — robots is a small dim table)."""
-    host = host_name_col(F.col("curl"))
-    path = F.regexp_extract(F.col("curl"), r"^[A-Za-z][A-Za-z0-9+.-]*://[^/]*(/.*)?$", 1)
-    joined = cand.withColumn("_host", host).withColumn("_path", path).join(
-        F.broadcast(robots.select(F.col("host").alias("_host"), "disallow_prefixes")),
-        "_host",
-        "left",
+    host, path, rules, allowed = memo_expr(
+        ("robots_cols",),
+        lambda: (
+            host_name_col(F.col("curl")).alias("_host"),
+            F.regexp_extract(F.col("curl"), _ROBOTS_PATH_RE, 1).alias("_path"),
+            [F.col("host").alias("_host"), F.col("disallow_prefixes")],
+            F.col("disallow_prefixes").isNull()
+            | ~F.exists("disallow_prefixes", lambda p: F.col("_path").startswith(p)),
+        ),
     )
-    allowed = F.col("disallow_prefixes").isNull() | ~F.exists(
-        "disallow_prefixes", lambda p: F.col("_path").startswith(p)
+    joined = cand.select("*", host, path).join(
+        F.broadcast(robots.select(*rules)), "_host", "left"
     )
     return joined.where(allowed).drop("_host", "_path", "disallow_prefixes")
 
@@ -330,10 +414,12 @@ def dedup_insert(
     # all cores instead; on a cluster with url-hash-bucketed state tables
     # the state side's exchange is elided entirely.
     existing_all = existing_all.hint("shuffle_hash")
+    has_msgs = "messages" in cand.columns
+    c = memo_expr(
+        ("dedup_cols", has_msgs, max_depth), lambda: _dedup_cols(has_msgs, max_depth)
+    )
     edges = cand.join(existing_all, cand.curl == existing_all.url, "left_semi").select(
-        F.col("curl").alias("url"),
-        "parent_url",
-        F.lit(wave).cast("int").alias("wave"),
+        *c["edge"], _wave_lit(wave, "wave")
     )
 
     # -- new inserts ---------------------------------------------------------
@@ -341,7 +427,36 @@ def dedup_insert(
     # array encodes the reference's sequential attempt order, so winner
     # selection (first ELIGIBLE attempt) and later-referrer accumulation
     # are array expressions instead of a window + self-join + group-by.
-    has_msgs = "messages" in cand.columns
+    attempts = cand.groupBy(c["curl"]).agg(c["arr"])
+
+    if bloom is not None:
+        # ONE anti-join whose condition carries the probe flag: a negative
+        # row can never match, so it survives.  Not a negatives ∪ positives
+        # union: Catalyst infers might_contain(url) from curl = url and
+        # pushes that Python probe through the union onto every state-side
+        # scan (frontier_rest, seen, the settled rows), and both branches
+        # re-plan the candidate lineage.  Here the flag is a projected
+        # column, so the probe runs once per distinct candidate url.
+        flagged = attempts.withColumn("_maybe", bloom.might_contain_col(c["curl"]))
+        fresh = flagged.join(
+            existing_all,
+            (flagged.curl == existing_all.url) & flagged["_maybe"],
+            "left_anti",
+        )
+    else:
+        fresh = attempts.join(
+            existing_all, attempts.curl == existing_all.url, "left_anti"
+        )
+    new_rows = (
+        fresh.withColumn("_elig", c["elig"])
+        .where(c["has_elig"])
+        .select(*c["head"], _wave_lit(wave, "discovery_wave"), *c["tail"])
+    )
+    return new_rows, edges
+
+
+def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
+    """dedup_insert's expressions; only the wave literals are per call."""
     attempt_fields = [
         "pop_rank", "link_pos", "parent_url", "child_depth", "child_weight",
     ] + (["messages"] if has_msgs else [])
@@ -358,26 +473,6 @@ def dedup_insert(
         sorted_arr = F.array_sort(collected, _cmp)
     else:
         sorted_arr = F.array_sort(collected)
-    attempts = cand.groupBy(F.col("curl")).agg(sorted_arr.alias("_arr"))
-
-    if bloom is not None:
-        # ONE anti-join whose condition carries the probe flag: a negative
-        # row can never match, so it survives.  Not a negatives ∪ positives
-        # union: Catalyst infers might_contain(url) from curl = url and
-        # pushes that Python probe through the union onto every state-side
-        # scan (frontier_rest, seen, the settled rows), and both branches
-        # re-plan the candidate lineage.  Here the flag is a projected
-        # column, so the probe runs once per distinct candidate url.
-        flagged = attempts.withColumn("_maybe", bloom.might_contain_col(F.col("curl")))
-        fresh = flagged.join(
-            existing_all,
-            (flagged.curl == existing_all.url) & flagged["_maybe"],
-            "left_anti",
-        ).drop("_maybe")
-    else:
-        fresh = attempts.join(
-            existing_all, attempts.curl == existing_all.url, "left_anti"
-        )
 
     elig = (
         F.filter("_arr", lambda x: x["child_depth"] <= F.lit(max_depth))
@@ -394,27 +489,32 @@ def dedup_insert(
             & (x["link_pos"] > winner["link_pos"])
         ),
     )
+    first = F.col("_elig")[0]
     new_msgs = (
-        F.coalesce(F.col("_elig")[0]["messages"], F.expr(_EMPTY_MSGS))
+        F.coalesce(first["messages"], F.expr(_EMPTY_MSGS))
         if has_msgs
         else F.expr(_EMPTY_MSGS)
     )  # winner's messages ride the new row (putUrl constructor semantics)
-    new_rows = (
-        fresh.withColumn("_elig", elig)
-        .where(F.size("_elig") > 0)
-        .select(
-            F.col("curl").alias("url"),
-            host_name_col(F.col("curl")).alias("host"),
-            F.col("_elig")[0]["child_weight"].alias("weight"),
-            F.col("_elig")[0]["child_depth"].alias("depth"),
-            F.lit(wave).cast("int").alias("discovery_wave"),
+    curl = F.col("curl")
+    return {
+        "curl": curl,
+        "edge": [curl.alias("url"), F.col("parent_url")],
+        "arr": sorted_arr.alias("_arr"),
+        "elig": elig,
+        "has_elig": F.size("_elig") > 0,
+        "head": [
+            curl.alias("url"),
+            host_name_col(curl).alias("host"),
+            first["child_weight"].alias("weight"),
+            first["child_depth"].alias("depth"),
+        ],
+        "tail": [
             F.array_sort(
                 F.array_distinct(F.transform(later, lambda x: x["parent_url"]))
             ).alias("referrers"),
             new_msgs.alias("messages"),
-        )
-    )
-    return new_rows, edges
+        ],
+    }
 
 
 # --------------------------------------------------------------------- F5

@@ -28,6 +28,7 @@ a pure JVM column expression (bit_count(xor)).
 from __future__ import annotations
 
 import re
+from itertools import islice
 
 import numpy as np
 import pandas as pd
@@ -86,12 +87,14 @@ def py_tokenize(text: str, cjk_lexicon: frozenset | set | None = None) -> list[s
     maximum match before the term cap is applied — mirroring ansj's
     emit-words-not-runs behavior.  Default None keeps the round-1
     tokenizer bit-for-bit."""
+    # the cap needs at most _TERM_CAP word runs (each yields >= 1 term):
+    # stop scanning there instead of matching the whole page
+    words = (m.group() for m in islice(_TOKEN_RE.finditer(text.lower()), _TERM_CAP))
     if cjk_lexicon is None:
-        terms = _TOKEN_RE.findall(text.lower())[:_TERM_CAP]
-        return list(set(terms))
+        return list(set(words))
     max_len = max((len(w) for w in cjk_lexicon), default=1)
     expanded: list[str] = []
-    for tok in _TOKEN_RE.findall(text.lower()):
+    for tok in words:
         if len(expanded) >= _TERM_CAP:
             break
         pos = 0
@@ -130,17 +133,16 @@ def py_simhash64(
     if text is None:
         return None
     tokens = py_tokenize(text, cjk_lexicon)
-    v = np.zeros(64, dtype=np.int64)
-    shifts = np.arange(64, dtype=np.uint64)
-    for tok in tokens:
-        h = np.uint64(py_token_hash(tok))
-        bits = (h >> shifts) & np.uint64(1)
-        v += np.where(bits.astype(bool), 1, -1)
-    fp = 0
-    for i in range(64):
-        if v[i] >= 0:  # reference uses >=  (TextAnalysis.java:233)
-            fp |= 1 << i
-    return fp
+    n = len(tokens)
+    h = np.fromiter(map(py_token_hash, tokens), dtype=np.uint64, count=n)
+    # one vote for the whole page: bit i of every hash is column i of the
+    # n x 64 bit matrix (little-endian bytes, low bit first, whatever the
+    # host byte order); v[i] = ones - (n - ones)
+    bits = np.unpackbits(h.astype("<u8").view(np.uint8), bitorder="little")
+    ones = bits.reshape(n, 64).sum(axis=0, dtype=np.int64)
+    # reference uses v[i] >= 0 (TextAnalysis.java:233)
+    vote = np.packbits(2 * ones >= n, bitorder="little")
+    return int(vote.view("<u8")[0])
 
 
 def to_signed64(u: int) -> int:

@@ -15,6 +15,12 @@ delta (cost ∝ wave size) and `read` unions the delta files — never an
 O(state) rewrite per wave.  Only the frontier (bounded working set) is
 rewritten per wave.
 
+Reads carry the schema: `stage` records the written DataFrame's schema and
+`promote` files it in the manifest, so `read` hands it to the parquet
+reader and launches no footer-reading schema-inference job (an Iceberg
+table's metadata carries its schema the same way).  Snapshots promoted
+before schemas were recorded are read with inference.
+
 Reference analogue: BDB SYNC transactions per op (UrlsDb.java:89-95,
 Db.java:75-80) — durability unit there is one key, here one wave.
 """
@@ -27,6 +33,7 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class SnapshotStore:
@@ -69,7 +76,13 @@ class SnapshotStore:
         snap_id = man["current"] + 1
         snap_dir = self._snap_dir(table, snap_id)
         df.write.mode("overwrite").parquet(snap_dir)
-        return {"table": table, "id": snap_id, "dir": snap_dir, "mode": mode}
+        return {
+            "table": table,
+            "id": snap_id,
+            "dir": snap_dir,
+            "mode": mode,
+            "schema": df.schema.json(),
+        }
 
     def promote(self, token: dict, wave: int, meta: dict | None = None) -> str:
         man = self.manifest(token["table"]) or {"current": -1, "snapshots": []}
@@ -82,12 +95,19 @@ class SnapshotStore:
                 f"{token['id']} but manifest is at {man['current']}"
             )
         man["current"] = token["id"]
+        # the distinct schemas live once per manifest and entries index
+        # them: the snapshot history is kept, and a schema per entry would
+        # grow every manifest read by ~1 KB per wave
+        schemas = man.setdefault("schemas", [])
+        if token["schema"] not in schemas:
+            schemas.append(token["schema"])
         man["snapshots"].append(
             {
                 "id": token["id"],
                 "wave": wave,
                 "mode": token["mode"],
                 "ts": time.time(),
+                "schema": schemas.index(token["schema"]),
                 **(meta or {}),
             }
         )
@@ -203,10 +223,28 @@ class SnapshotStore:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        dirs = [self._snap_dir(table, i) for i in self._live_ids(man, snapshot)]
-        if not dirs:  # e.g. rolled back past every snapshot
+        ids = self._live_ids(man, snapshot)
+        if not ids:  # e.g. rolled back past every snapshot
             raise FileNotFoundError(f"table {table} has no live snapshots")
-        return self.spark.read.parquet(*dirs)
+        # inference would read the footer of the first file in path order,
+        # i.e. of the oldest live snapshot: its recorded schema is the same
+        first = next(s for s in man["snapshots"] if s["id"] == ids[0])
+        schema = (
+            man["schemas"][first["schema"]] if "schema" in first else None
+        )
+        return self._reader(schema).parquet(
+            *[self._snap_dir(table, i) for i in ids]
+        )
+
+    def read_staged(self, token: dict) -> DataFrame:
+        """A staged (not yet promoted) snapshot, read with its schema."""
+        return self._reader(token["schema"]).parquet(token["dir"])
+
+    def _reader(self, schema_json: str | None):
+        reader = self.spark.read
+        if schema_json is None:  # promoted before schemas were recorded
+            return reader
+        return reader.schema(T.StructType.fromJson(json.loads(schema_json)))
 
     def exists(self, table: str) -> bool:
         return self.manifest(table) is not None

@@ -664,6 +664,30 @@ def test_kill_at_wave_commit_and_resume(spark, uninterrupted_4, kill_at, resume)
     assert got == want
 
 
+def test_resume_from_manifests_without_schemas(spark, uninterrupted_4):
+    """Manifests written before snapshots recorded their schema: reads fall
+    back to inference, and the resumed crawl (whose new snapshots do record
+    one) ends in the uninterrupted run's state."""
+    import json
+    import os
+
+    wh_b = tempfile.mkdtemp(prefix="wh_ws_")
+    b = _engine(spark, wh_b)
+    b.bootstrap(seed_urls(N, H))
+    b.run(2)
+    for t in ("frontier", "seen", "ref_edges"):
+        man = b.store.manifest(t)
+        man.pop("schemas")
+        for s in man["snapshots"]:
+            s.pop("schema")
+        with open(os.path.join(wh_b, t, "_manifest.json"), "w") as f:
+            json.dump(man, f)
+    b = _engine(spark, wh_b)
+    assert b.wave == 2
+    b.run(2)
+    assert _crawl_state(b) == _crawl_state(uninterrupted_4)
+
+
 # ------------------------------------------------------ store durability
 
 

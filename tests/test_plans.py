@@ -12,14 +12,19 @@ listed explicitly; the banded dedup paths must be pure equi-joins.
 The crawl's writes are pinned too: its seen-filter probe (a Python UDF)
 must appear once, over the candidate urls, and its page parse once per
 page.  So is the number of Spark jobs a wave launches, so instrumentation
-cannot add an action unnoticed."""
+cannot add an action unnoticed, and the py4j commands a rebuild of the
+wave's frontier plans sends, so a per-wave Column rebuild shows up too."""
 
 import re
 import tempfile
 
+import py4j.clientserver
 import pytest
+from pyspark import SparkContext
+from pyspark.sql import functions as F
 
 from bingcrawler_spark import driver_queries as DQ
+from bingcrawler_spark import frontier as FR
 from bingcrawler_spark.crawler import CrawlConfig, CrawlEngine
 from bingcrawler_spark.statestore import SnapshotStore
 from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
@@ -119,9 +124,11 @@ def test_parse_udf_runs_once_per_page(spark):
 @pytest.mark.parametrize(
     "use_bloom,expected",
     [
-        pytest.param(False, [30, 30, 30], id="exact"),
+        # state reads carry their schema: no footer-reading inference job
+        # for the frontier and seen reads or the filter's read-back
+        pytest.param(False, [28, 28, 28], id="exact"),
         # wave 1 builds the filter (two more jobs); later waves extend it
-        pytest.param(True, [35, 33, 33], id="bloom"),
+        pytest.param(True, [32, 30, 30], id="bloom"),
     ],
 )
 def test_spark_jobs_per_wave(spark, use_bloom, expected):
@@ -148,3 +155,61 @@ def test_spark_jobs_per_wave(spark, use_bloom, expected):
         assert not eng.run_wave().get("done")
         jobs.append(last_job_id() - before)
     assert jobs == expected
+
+
+# ------------------------------------------------ wave plan building
+
+
+def test_wave_plan_rebuild_py4j_commands(spark, monkeypatch):
+    """Each py4j command is a driver↔JVM round trip paid every wave before
+    Spark runs anything (one F.col is ~13 of them, canon_url_col ~160).
+    The frontier operators build their wave-invariant expressions once
+    per SparkContext, so a second build of a wave's plans sends only the
+    DataFrame operations and the per-wave values: ~340 commands here,
+    against ~2,100 when every expression was rebuilt each wave.  The
+    bound fails on one canon_url_col rebuild per wave."""
+    robots = robots_df(spark, 4)
+    frontier = FR.seeds_to_frontier(spark, seed_urls(120, 4, n_seeds=20))
+    parsed = FR.pop_wave(frontier, 8, robots=robots).select(
+        "*",
+        F.lit(1).alias("status"),
+        F.lit(None).cast("long").alias("simhash"),
+        F.array("url").alias("links"),
+    )
+
+    def build_wave(wave):
+        FR.pop_wave(frontier, 8, robots=robots, default_budget=3)
+        settled = FR.settle(parsed, None, wave)
+        cand = FR.robots_filter(FR.make_candidates(parsed), robots)
+        FR.dedup_insert(cand, frontier, settled, wave)
+
+    build_wave(1)
+    sent = [0]
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting_send
+    )
+    build_wave(2)
+    assert sent[0] <= 450, sent[0]
+
+
+def test_memo_expr_rebuilds_under_another_spark_context(monkeypatch):
+    """A memoized Column holds JVM handles of the context that built it: a
+    restarted session must rebuild it, never reuse it."""
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    first = FR.memo_expr(("memo_test",), build)
+    assert FR.memo_expr(("memo_test",), build) is first
+    monkeypatch.setattr(SparkContext, "_active_spark_context", object())
+    assert FR.memo_expr(("memo_test",), build) is not first
+    assert len(builds) == 2

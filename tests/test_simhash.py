@@ -1,17 +1,23 @@
 """P12/P14: exact hash-math vectors + UDF ⇔ pure-Python parity + near-dup."""
 
+import re
+
+import numpy as np
 from pyspark.sql import functions as F
 
 from bingcrawler_spark.functions.simhash import (
+    DEFAULT_CJK_LEXICON,
     MASK64,
     hamming_col,
     py_hamming,
     py_simhash64,
     py_token_hash,
+    py_tokenize,
     simhash64_udf,
     to_signed64,
     to_unsigned64,
 )
+from bingcrawler_spark.synth import synth_pages_df
 
 
 def _py2_string_hash(s: str) -> int:
@@ -73,6 +79,37 @@ def test_udf_matches_python(spark):
     for r in rows:
         exp = None if r["text"] is None else to_signed64(py_simhash64(r["text"]))
         assert r["h"] == exp, r["text"]
+
+
+def _per_token_vote(tokens) -> int:
+    """The vote py_simhash64 used to run: four 64-element numpy ops per
+    token.  Kept as the reference for the one-vote-per-page kernel."""
+    v = np.zeros(64, dtype=np.int64)
+    shifts = np.arange(64, dtype=np.uint64)
+    for tok in tokens:
+        bits = (np.uint64(py_token_hash(tok)) >> shifts) & np.uint64(1)
+        v += np.where(bits.astype(bool), 1, -1)
+    return sum(1 << i for i in range(64) if v[i] >= 0)
+
+
+def test_page_vote_equals_per_token_vote(spark):
+    """Bit-identical to the per-token vote and to the whole-text tokenizer
+    (first 151 of all word runs), on synthetic pages and edge cases."""
+    texts = [
+        r["text"] for r in synth_pages_df(spark, 200, 4, n_words=300).collect()
+    ] + [
+        "",
+        "one",
+        " ".join(f"w{i}" for i in range(400)),  # past the 151-term cap
+        "İstanbul ΣΑΣ σας",  # lower() changes length / final sigma
+        "分布式 爬虫 队列",
+        "搜索引擎优化的数据分析方法 mixed中文and英文tokens",
+    ]
+    for t in texts:
+        words = re.findall(r"\w+", t.lower())[:151]
+        assert py_simhash64(t) == _per_token_vote(set(words)), t[:40]
+        lex = DEFAULT_CJK_LEXICON
+        assert py_simhash64(t, lex) == _per_token_vote(py_tokenize(t, lex)), t[:40]
 
 
 def test_hamming_col(spark):
