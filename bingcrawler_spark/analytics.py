@@ -53,22 +53,6 @@ def author_counts(profiles: DataFrame) -> DataFrame:
     )
 
 
-def keyword_counts(profiles: DataFrame) -> DataFrame:
-    """R3 (:365-394): keyword → profile count."""
-    return (
-        profiles.select(F.explode("keywords").alias("keyword"), "title")
-        .groupBy("keyword")
-        .agg(F.countDistinct("title").cast("long").alias("weight"))
-    )
-
-
-def journal_counts(profiles: DataFrame) -> DataFrame:
-    """R4 (:396-424): journal → profile count."""
-    return profiles.groupBy("journal").agg(
-        F.countDistinct("title").cast("long").alias("weight")
-    )
-
-
 # ------------------------------------------------------------------ R5/R6
 
 
@@ -163,19 +147,6 @@ def author_rollup(profiles: DataFrame) -> DataFrame:
     return agg.withColumn("avg_cited_by", avg.cast("long")).drop("_n_pos")
 
 
-def coauthor_counts(profiles: DataFrame) -> DataFrame:
-    """R9 co-author edge table: distinct co-author count per author via the
-    (title, author) self-join."""
-    e = profiles.select(F.explode("authors").alias("author"), "title")
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(b, "title")
-        .where(F.col("a.author") != F.col("b.author"))
-        .groupBy(F.col("a.author").alias("author"))
-        .agg(F.countDistinct("b.author").cast("long").alias("n_coauthors"))
-    )
-
-
 # ------------------------------------------------------------------ R10
 
 
@@ -195,25 +166,6 @@ def keyword_cooccurrence(profiles: DataFrame) -> DataFrame:
         F.countDistinct("title").cast("long").alias("n_left")
     )
     return pairs.join(F.broadcast(left_counts), "kw_a")
-
-
-def keyword_rollup(profiles: DataFrame) -> DataFrame:
-    """R10 (BingDataAnalysisUtils.java:215-282): per-keyword totals."""
-    e = profiles.select(
-        F.explode("keywords").alias("keyword"),
-        "title",
-        "cited_by",
-        F.size("cited_papers").alias("n_linked"),
-        "journal",
-        "year",
-    )
-    return e.groupBy("keyword").agg(
-        F.countDistinct("title").cast("long").alias("n_profiles"),
-        F.sum("cited_by").cast("long").alias("total_cited_by"),
-        F.sum("n_linked").cast("long").alias("total_linked_cited_by"),
-        F.countDistinct("journal").cast("long").alias("n_journals"),
-        F.countDistinct("year").cast("long").alias("n_years"),
-    )
 
 
 # ------------------------------------------------------------------ R11

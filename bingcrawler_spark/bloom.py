@@ -5,12 +5,13 @@ with a set-oriented two-step dedup:
 
   1. each distinct candidate url is probed once against a Bloom filter of
      the seen-set — Bloom NEGATIVES are *definitely new*;
-  2. the exact ``left_anti`` join carries the probe flag in its condition,
+  2. the wave's one existence join (a left outer join,
+     frontier.resolve_attempts) carries the probe flag in its condition,
      so only Bloom POSITIVES (true hits + fpp false positives) can match.
 
 The state side of that join is still scanned and shuffled once, as on the
-exact path (frontier.dedup_insert); the probe runs over the candidates
-only, never over the state.
+exact path; the probe runs over the candidates only, never over the
+state.
 
 Build is fully distributed: ``mapInPandas`` emits one partial bitmap per
 partition per shard; the driver ORs them (bitmaps, not rows, cross the

@@ -7,18 +7,20 @@ Each wave (one snapshot set + a metrics row):
            parsed   = links/simhash, one parse pandas UDF          # P4,P5,P12
            seen    += settled wave rows        (APPEND delta)      # F4
            cand     = explode(links) → canon → depth+1 → robots    # P1,F3
-           new,edges= dedup_insert(cand, ...)                      # F2
+           resolved = attempts per url ⟕ (frontier \\ top) ∪ seen  # F2, once
+           new,edges= dedup_insert(resolved, ...)                  # F2
            frontier = (frontier \\ top) ∪ new  (overwrite)         # F5
            ref_edges+= edges                   (APPEND delta)
-           pop_log += wave rows                (APPEND delta)
            metrics += wave row                 (APPEND delta)      # lineage
+
+The pop log is a projection of seen (pop_rank rides the settled row).
 
 "Fetching" a url is a join against the pages table per the input hint —
 the wave side is broadcast (a wave is thousands of rows; the pages table is
 the 100 TB side and is never shuffled: broadcast-hash-join streams it).
 
 Scale invariant: per-wave write cost ∝ wave size, NOT state size.  The
-seen-set, referrer edges, pop log and metrics are append-only tables (each
+seen-set, referrer edges and metrics are append-only tables (each
 wave writes only its delta); only the frontier — the bounded working set —
 is rewritten.  Referrer accumulation on existing rows (the reference's
 KEYEXIST path, UrlsDbManager.java:555-580) therefore never rewrites the
@@ -190,6 +192,7 @@ def _wave_cols() -> dict:
             F.count(F.lit(1)).alias("n_popped"),
         ],
         "count": F.count(F.lit(1)).alias("n"),
+        "n_cand": F.coalesce(F.sum(F.size("_arr")), F.lit(0)),
         # partition by (host, salt): host-locality for the politeness rank,
         # salt so a hot host (30%+ of a web crawl) cannot pin one partition
         "frontier_parts": [F.col("host"), F.pmod(F.xxhash64("url"), F.lit(8))],
@@ -453,7 +456,6 @@ class CrawlEngine:
         cand = FR.make_candidates(parsed, child_weight=self._child_weight())
         if self.robots is not None:
             cand = FR.robots_filter(cand, self.robots)
-        cand = cand.cache()
 
         frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
 
@@ -481,13 +483,14 @@ class CrawlEngine:
                 existing, "url", est
             )
 
+        # ONE existence join per wave: both dedup outputs derive from the
+        # cached result, so the state side is shuffled once, in the n_cand
+        # action below
+        resolved = FR.resolve_attempts(
+            cand, frontier_rest, seen_now, bloom=self._filter
+        ).cache()
         new_rows, edges = FR.dedup_insert(
-            cand,
-            frontier_rest,
-            seen_now,
-            wave,
-            max_depth=self.cfg.max_depth,
-            bloom=self._filter,
+            resolved, wave, max_depth=self.cfg.max_depth
         )
         obs_new = Observation(f"new_w{wave}")
         new_rows = new_rows.observe(obs_new, c["count"])
@@ -499,10 +502,10 @@ class CrawlEngine:
         # STAGE concurrently — seen delta, ref_edges delta, frontier
         # overwrite — then PROMOTE (the microsecond manifest rename, the
         # real commit point) in recovery order seen → edges → metrics row →
-        # frontier.  Safe: the three jobs share only the parsed/cand caches,
-        # which the cand.count() just before the pool fills on this thread
-        # (no two writes race to build a cache, so the jobs per wave are
-        # fixed); Spark's scheduler is thread-safe; a kill between promotes
+        # frontier.  Safe: the three jobs share only the parsed/resolved
+        # caches, which the n_cand action just before the pool fills on this
+        # thread (no two writes race to build a cache, so the jobs per wave
+        # are fixed); Spark's scheduler is thread-safe; a kill between promotes
         # leaves exactly the "delta ahead of the frontier commit point" case
         # the resume rollback already removes; a kill during staging leaves
         # no manifest change at all (orphan dirs are overwritten by the next
@@ -515,7 +518,7 @@ class CrawlEngine:
         # delta rows are narrow, the exchange is cheap.
         from concurrent.futures import ThreadPoolExecutor
 
-        n_cand = cand.count()
+        n_cand = resolved.select(c["n_cand"]).first()[0]
         with ThreadPoolExecutor(max_workers=2) as pool:
             seen_fut = pool.submit(self.store.stage, "seen", seen_delta, "append")
             edges_fut = pool.submit(
@@ -534,7 +537,7 @@ class CrawlEngine:
                 self.store.discard(tok)
             top.unpersist()
             parsed.unpersist()
-            cand.unpersist()
+            resolved.unpersist()
             self._needs_rollback = False
             return {"wave": wave, "n_popped": 0, "done": True}
 
@@ -542,8 +545,8 @@ class CrawlEngine:
         self.store.promote(edges_tok, wave)
 
         # harvest the observed counts (all fired by the writes above —
-        # the whole wave normally runs cand.count + 3 write jobs, nothing
-        # more; the fallbacks only trigger on empty-set waves)
+        # the whole wave normally runs the n_cand action + 3 writes,
+        # nothing more; the fallbacks only trigger on empty-set waves)
         n_failed = _harvest(
             obs_settle, "n_failed", lambda: parsed.where(F.col("status") < 0).count()
         )
@@ -587,7 +590,7 @@ class CrawlEngine:
         self.store.promote(frontier_tok, wave)
         top.unpersist()
         parsed.unpersist()
-        cand.unpersist()
+        resolved.unpersist()
 
         # append-table compaction (Iceberg rewrite_data_files analogue):
         # every Nth wave, fold the accumulated deltas into one overwrite

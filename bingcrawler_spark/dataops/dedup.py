@@ -17,7 +17,7 @@ written for 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
 from bingcrawler_spark import xhash as X
@@ -339,29 +339,6 @@ def ngram_jaccard_pairs(
         F.size(F.array_union("a.sh", "b.sh")).cast("long").alias("n_union"),
     )
     return pairs.where(F.col("n_common") * 100 >= F.col("n_union") * min_jaccard_pct)
-
-
-def ngram_jaccard_pairs_sql(
-    docs_sql: str,
-    n: int = 3,
-    min_jaccard_pct: int = 30,
-    block_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    return f"""
-    WITH base AS (
-      SELECT {id_col} AS doc, {block_col} AS block,
-             {X.shingles_sql(text_col, n)} AS sh
-      FROM ({docs_sql})
-    )
-    SELECT a.doc AS doc_a, b.doc AS doc_b,
-           len(list_intersect(a.sh, b.sh))::BIGINT AS n_common,
-           (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))::BIGINT AS n_union
-    FROM base a JOIN base b ON a.block = b.block AND a.doc < b.doc
-    WHERE len(list_intersect(a.sh, b.sh)) * 100
-          >= (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) * {min_jaccard_pct}
-    """
 
 
 # ------------------------------------------------------- chunk-level dedup

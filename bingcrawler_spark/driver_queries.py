@@ -425,11 +425,12 @@ _F2_STATE_SQL = f"""
     """,
 )
 def f2_dedup_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2+F3 dedup-insert (UrlsDbManager.java:541-618): anti-join vs
-    seen ∪ frontier, depth cap 3, first-attempt-wins, later attempts
+    """F2+F3 dedup-insert (UrlsDbManager.java:541-618): one existence join
+    vs seen ∪ frontier, depth cap 3, first-attempt-wins, later attempts
     accumulate as referrers."""
     cand, frontier_rest, seen = _f2_inputs(spark, sf_dir)
-    new_rows, _ = FR.dedup_insert(cand, frontier_rest, seen, wave=1, max_depth=3)
+    resolved = FR.resolve_attempts(cand, frontier_rest, seen)
+    new_rows, _ = FR.dedup_insert(resolved, wave=1, max_depth=3)
     return new_rows.select(
         "url", "weight", "depth", F.size("referrers").cast("int").alias("n_referrers")
     )
@@ -449,7 +450,8 @@ def f2b_referrer_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     attempts append their referrer edge; the frontier row itself is never
     rewritten — merge_referrers folds edges in at read time."""
     cand, frontier_rest, seen = _f2_inputs(spark, sf_dir)
-    _, edges = FR.dedup_insert(cand, frontier_rest, seen, wave=1, max_depth=3)
+    resolved = FR.resolve_attempts(cand, frontier_rest, seen)
+    _, edges = FR.dedup_insert(resolved, wave=1, max_depth=3)
     merged = FR.merge_referrers(frontier_rest, edges)
     return merged.select(
         "url", "weight", F.size("referrers").cast("int").alias("n_referrers")

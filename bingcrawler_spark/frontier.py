@@ -105,10 +105,6 @@ def _pop_order():
     )
 
 
-def empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
-
-
 def empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], SEEN_SCHEMA)
 
@@ -374,89 +370,49 @@ def merge_referrers(state: DataFrame, edges: DataFrame) -> DataFrame:
     return j.withColumn("referrers", merged).drop("_edge_refs")
 
 
-def dedup_insert(
+def resolve_attempts(
     cand: DataFrame,
     frontier_rest: DataFrame,
     seen: DataFrame,
-    wave: int,
-    max_depth: int | None = DEFAULT_MAX_DEPTH,
     bloom=None,
-) -> tuple[DataFrame, DataFrame]:
-    """F2: returns (new_frontier_rows, referrer_edges).
+) -> DataFrame:
+    """F2 existence check, once per wave: one row per distinct candidate
+    url — `curl`, `_arr` (its attempts in the reference's sequential
+    order) and `_exists` (already in frontier_rest ∪ seen).  dedup_insert
+    derives both of its outputs from this one join.
 
-    cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight.
-    frontier_rest: frontier minus this wave's pop set. seen: post-settle.
-    bloom: optional SeenFilter (bloom.py) over seen∪frontier urls,
-    probed once per distinct candidate url; only positives can match in
-    the exact anti-join (SURVEY.md §4.1).  The state side is still scanned
-    and shuffled once, as on the exact path, and every candidate still
-    crosses the join's exchange — the probe never touches the state side.
-
-    referrer_edges = (url, parent_url) for every attempt whose target
-    already exists (the KEYEXIST append path, UrlsDbManager.java:555-580);
-    attempts landing on urls NEW this wave are folded into new_rows'
-    initial referrers (later-than-winner rule) — so full referrers(url) =
-    initial ∪ edges, materialized by merge_referrers at read time."""
-    # -- referrer edges for existing rows (existence precedes depth check) --
-    existing_all = frontier_rest.select("url").unionByName(seen.select("url"))
-    # (not de-duplicated — merge_referrers collect_sets at read time, and a
-    # distinct here would cost an extra shuffle in the wave hot path)
-    #
-    # existence joins vs existing_all are HINTED shuffle-hash, never
-    # broadcast: existing_all is O(state) — at 10^10-URL frontier scale it
-    # can't broadcast, and even in-sandbox (where it fits under the 64 MB
-    # threshold) Catalyst's broadcast choice collects the whole state URL
-    # set to the driver and rebuilds the broadcast in EVERY action that
-    # traverses this plan (edges append + frontier commit per wave) — a
-    # per-wave latency constant that grows with |state| and caps N→4N
-    # scaling (measured: 1-2.6 s latency-bound broadcast-build stages,
-    # BENCH/SUBMIT_SCALING.md). Shuffle-hash keys both sides by url across
-    # all cores instead; on a cluster with url-hash-bucketed state tables
-    # the state side's exchange is elided entirely.
-    existing_all = existing_all.hint("shuffle_hash")
+    cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight
+    [, messages].  frontier_rest (frontier minus this wave's pop set) and
+    seen (post-settle) are disjoint and keyed by url, so a group matches
+    at most one state row.  bloom: optional SeenFilter (bloom.py) over
+    their urls, probed once per distinct candidate url; its flag is a
+    conjunct of the join condition, so only positives can match
+    (SURVEY.md §4.1)."""
+    # the state side is hinted shuffle-hash, never broadcast: it is
+    # O(state), and a broadcast collects the whole state url set to the
+    # driver every wave (measured: 1-2.6 s broadcast-build stages per
+    # wave, BENCH/SUBMIT_SCALING.md).  With url-hash-bucketed state tables
+    # its exchange is elided.
+    existing = frontier_rest.select("url").unionByName(seen.select("url"))
     has_msgs = "messages" in cand.columns
-    c = memo_expr(
-        ("dedup_cols", has_msgs, max_depth), lambda: _dedup_cols(has_msgs, max_depth)
-    )
-    edges = cand.join(existing_all, cand.curl == existing_all.url, "left_semi").select(
-        *c["edge"], _wave_lit(wave, "wave")
-    )
-
-    # -- new inserts ---------------------------------------------------------
-    # ONE shuffle: group all attempts per target url; the sorted struct
-    # array encodes the reference's sequential attempt order, so winner
-    # selection (first ELIGIBLE attempt) and later-referrer accumulation
-    # are array expressions instead of a window + self-join + group-by.
+    c = memo_expr(("attempt_cols", has_msgs), lambda: _attempt_cols(has_msgs))
+    # ONE shuffle groups all attempts per target url; the sorted struct
+    # array encodes the reference's sequential attempt order
     attempts = cand.groupBy(c["curl"]).agg(c["arr"])
-
+    on = c["on"]
     if bloom is not None:
-        # ONE anti-join whose condition carries the probe flag: a negative
-        # row can never match, so it survives.  Not a negatives ∪ positives
-        # union: Catalyst infers might_contain(url) from curl = url and
-        # pushes that Python probe through the union onto every state-side
-        # scan (frontier_rest, seen, the settled rows), and both branches
-        # re-plan the candidate lineage.  Here the flag is a projected
-        # column, so the probe runs once per distinct candidate url.
-        flagged = attempts.withColumn("_maybe", bloom.might_contain_col(c["curl"]))
-        fresh = flagged.join(
-            existing_all,
-            (flagged.curl == existing_all.url) & flagged["_maybe"],
-            "left_anti",
-        )
-    else:
-        fresh = attempts.join(
-            existing_all, attempts.curl == existing_all.url, "left_anti"
-        )
-    new_rows = (
-        fresh.withColumn("_elig", c["elig"])
-        .where(c["has_elig"])
-        .select(*c["head"], _wave_lit(wave, "discovery_wave"), *c["tail"])
+        # the probe flag is a projected column in the join condition, not a
+        # filter: Catalyst would infer might_contain(url) from curl = url and
+        # push that Python probe onto every state-side scan
+        attempts = attempts.withColumn("_maybe", bloom.might_contain_col(c["curl"]))
+        on = c["on_maybe"]
+    return attempts.join(existing.hint("shuffle_hash"), on, "left_outer").select(
+        *c["out"]
     )
-    return new_rows, edges
 
 
-def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
-    """dedup_insert's expressions; only the wave literals are per call."""
+def _attempt_cols(has_msgs: bool) -> dict:
+    """resolve_attempts' expressions."""
     attempt_fields = [
         "pop_rank", "link_pos", "parent_url", "child_depth", "child_weight",
     ] + (["messages"] if has_msgs else [])
@@ -473,7 +429,47 @@ def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
         sorted_arr = F.array_sort(collected, _cmp)
     else:
         sorted_arr = F.array_sort(collected)
+    curl = F.col("curl")
+    on = curl == F.col("url")
+    return {
+        "curl": curl,
+        "arr": sorted_arr.alias("_arr"),
+        "on": on,
+        "on_maybe": on & F.col("_maybe"),
+        "out": [curl, F.col("_arr"), F.col("url").isNotNull().alias("_exists")],
+    }
 
+
+def dedup_insert(
+    resolved: DataFrame,
+    wave: int,
+    max_depth: int | None = DEFAULT_MAX_DEPTH,
+) -> tuple[DataFrame, DataFrame]:
+    """F2 from resolve_attempts' result: (new_frontier_rows, referrer_edges).
+
+    referrer_edges = (url, parent_url) for every attempt whose target
+    already exists, whatever its depth (the KEYEXIST append path,
+    UrlsDbManager.java:555-580).  A new url's first attempt within the
+    depth cap wins, and the attempts after it become its initial
+    referrers — so full referrers(url) = initial ∪ edges, folded in by
+    merge_referrers at read time."""
+    has_msgs = "messages" in resolved.schema["_arr"].dataType.elementType.names
+    c = memo_expr(
+        ("dedup_cols", has_msgs, max_depth), lambda: _dedup_cols(has_msgs, max_depth)
+    )
+    edges = resolved.where(c["exists"]).select(*c["edge"], _wave_lit(wave, "wave"))
+    # winner selection (first ELIGIBLE attempt) and later-referrer
+    # accumulation are array expressions, not a window + self-join
+    new_rows = (
+        resolved.select("*", c["elig"])
+        .where(c["is_new"])
+        .select(*c["head"], _wave_lit(wave, "discovery_wave"), *c["tail"])
+    )
+    return new_rows, edges
+
+
+def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
+    """dedup_insert's expressions; only the wave literals are per call."""
     elig = (
         F.filter("_arr", lambda x: x["child_depth"] <= F.lit(max_depth))
         if max_depth is not None
@@ -496,12 +492,12 @@ def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
         else F.expr(_EMPTY_MSGS)
     )  # winner's messages ride the new row (putUrl constructor semantics)
     curl = F.col("curl")
+    exists = F.col("_exists")
     return {
-        "curl": curl,
-        "edge": [curl.alias("url"), F.col("parent_url")],
-        "arr": sorted_arr.alias("_arr"),
-        "elig": elig,
-        "has_elig": F.size("_elig") > 0,
+        "exists": exists,
+        "edge": [curl.alias("url"), F.explode("_arr.parent_url").alias("parent_url")],
+        "elig": elig.alias("_elig"),
+        "is_new": ~exists & (F.size("_elig") > 0),
         "head": [
             curl.alias("url"),
             host_name_col(curl).alias("host"),
@@ -544,10 +540,8 @@ def merge_messages(state: DataFrame, updates: DataFrame) -> DataFrame:
     semantics hold regardless of session config)."""
     upd = updates.select("url", F.col("messages").alias("_upd"))
     j = state.join(F.broadcast(upd), "url", "left")
-    base = F.coalesce(
-        F.col("messages"), F.expr("map()").cast("map<string,string>")
-    )
-    new = F.coalesce(F.col("_upd"), F.expr("map()").cast("map<string,string>"))
+    base = F.coalesce(F.col("messages"), F.expr(_EMPTY_MSGS))
+    new = F.coalesce(F.col("_upd"), F.expr(_EMPTY_MSGS))
     # update-wins: keep base entries whose key is NOT updated, then add new
     kept = F.map_filter(base, lambda k, _: ~F.array_contains(F.map_keys(new), k))
     merged = F.map_concat(kept, new)
@@ -757,8 +751,6 @@ def fetch_slots(frontier: DataFrame, default_delay_ms: int = 500) -> DataFrame:
     de-synchronizes hosts so wave starts don't thundering-herd shared
     upstreams.  One window keyed by host over (url, weight) rows —
     the same politeness shuffle shape as pop_wave, never the corpus."""
-    from pyspark.sql.window import Window as W
-
     w = W.partitionBy("host").orderBy(*_pop_order())
     stagger = (
         F.conv(F.substring(F.md5(F.col("host")), 1, 4), 16, 10).cast("long")

@@ -110,24 +110,6 @@ def classify_url_col(url: Column, has_title_msg: Column | None = None) -> Column
     return c.otherwise("other")
 
 
-def classify_url_sql(url: str, has_title_msg: str | None = None) -> str:
-    """DuckDB twin of classify_url_col (string-op host/path/query split)."""
-    rest = f"regexp_replace({url}, '^[a-z]+://', '')"
-    host = f"regexp_extract({rest}, '^([^/?#]*)', 1)"
-    path = f"regexp_extract({rest}, '^[^/?#]*([^?#]*)', 1)"
-    query = f"coalesce(regexp_extract({url}, '\\?([^#]*)', 1), '')"
-    result_arm = (
-        f"WHEN {has_title_msg} THEN 'result'" if has_title_msg is not None else ""
-    )
-    return f"""CASE
-      WHEN {host} = '{_TENDER_HOST}' AND ({path} = '' OR {path} = '/') THEN 'home'
-      WHEN {host} = '{_TENDER_HOST}' AND {path} = '{PATH_DISPLAY}' THEN 'display'
-      WHEN {host} = '{_SEARCH_HOST}' AND contains({query}, '{QUERY_SEARCH_ENGINE}=')
-        THEN 'search'
-      {result_arm}
-      ELSE 'other' END"""
-
-
 # ----------------------------------------------------------------- parsers
 
 
@@ -232,26 +214,6 @@ LINK_TYPE = T.ArrayType(
         [T.StructField("href", T.StringType()), T.StructField("text", T.StringType())]
     )
 )
-
-
-@F.pandas_udf(LINK_TYPE)
-def parse_home_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(py_parse_home)
-
-
-@F.pandas_udf(T.StringType())
-def parse_display_title_udf(html: pd.Series) -> pd.Series:
-    return html.map(py_parse_display_title)
-
-
-@F.pandas_udf(LINK_TYPE)
-def parse_search_candidates_udf(html: pd.Series) -> pd.Series:
-    return html.map(py_parse_search_candidates)
-
-
-@F.pandas_udf(T.StringType())
-def query_decode_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: query_decode(v) if v is not None else None)
 
 
 @F.pandas_udf(T.StringType())

@@ -1,8 +1,10 @@
 """Knob censuses: every SPARK_GRAFT_* variable the package reads is a
 deployment setting listed here, and every CrawlConfig field is listed too.
 A new knob doubles the configurations tests and benchmarks must cover, so
-adding one means adding it here."""
+adding one means adding it here.  A dead-def census sits alongside: code
+nothing calls is code every reader still has to read."""
 
+import ast
 import dataclasses
 import os
 import re
@@ -42,6 +44,66 @@ def test_env_knob_census():
 
 def test_crawl_config_field_census():
     assert {f.name for f in dataclasses.fields(CrawlConfig)} == CRAWL_CONFIG_FIELDS
+
+
+# top-level package defs that are looked up by a name built at run time,
+# so no file names them (none today)
+LOOKED_UP_BY_NAME: set[str] = set()
+
+REFERRING = ["bingcrawler_spark", "tests", "tools", "perfbench", "bench.py",
+             "__spark_entry__.py"]
+
+
+def _py_files(root, rel):
+    path = os.path.join(root, rel)
+    if path.endswith(".py"):
+        yield path
+    for dirpath, _, files in os.walk(path):
+        yield from (os.path.join(dirpath, f) for f in files if f.endswith(".py"))
+
+
+def _registered(node) -> bool:
+    """A catalog query: decorated with driver_queries.register(...)."""
+    for dec in node.decorator_list:
+        f = dec.func if isinstance(dec, ast.Call) else dec
+        if getattr(f, "id", getattr(f, "attr", None)) == "register":
+            return True
+    return False
+
+
+def test_dead_def_census():
+    """Every top-level def and class in the package is referenced somewhere:
+    as a name, an attribute, an import or a string constant, in the
+    package, the tests, the tools, perfbench, bench.py or the driver
+    entry.  Registered catalog queries are reached through QUERIES."""
+    pkg = os.path.dirname(bingcrawler_spark.__file__)
+    root = os.path.dirname(pkg)
+    defs, refs = set(), set()
+    for rel in REFERRING:
+        for path in _py_files(root, rel):
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            if path.startswith(pkg + os.sep):
+                mod = os.path.relpath(path, root)
+                defs |= {
+                    (mod, n.name)
+                    for n in tree.body
+                    if isinstance(
+                        n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                    )
+                    and not _registered(n)
+                }
+            for n in ast.walk(tree):
+                if isinstance(n, ast.Name):
+                    refs.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    refs.add(n.attr)
+                elif isinstance(n, ast.alias):
+                    refs.add(n.name.rsplit(".", 1)[-1])
+                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    refs.add(n.value)
+    dead = {d for d in defs if d[1] not in refs | LOOKED_UP_BY_NAME}
+    assert not dead, sorted(dead)
 
 
 def test_unknown_filter_kind_rejected(spark, tmp_path):

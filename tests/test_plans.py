@@ -9,11 +9,12 @@ crossJoin against a broadcast 1-row aggregate or a tiny centroid/stats
 table (BM25's corpus stats, TF-IDF's N, IVF's centroids) — those are
 listed explicitly; the banded dedup paths must be pure equi-joins.
 
-The crawl's writes are pinned too: its seen-filter probe (a Python UDF)
-must appear once, over the candidate urls, and its page parse once per
-page.  So is the number of Spark jobs a wave launches, so instrumentation
-cannot add an action unnoticed, and the py4j commands a rebuild of the
-wave's frontier plans sends, so a per-wave Column rebuild shows up too."""
+The crawl's writes are pinned too: one existence join of the candidates
+to the state per wave, its seen-filter probe (a Python UDF) once, over the
+candidate urls, and its page parse once per page.  So is the number of
+Spark jobs a wave launches, so instrumentation cannot add an action
+unnoticed, and the py4j commands a rebuild of the wave's frontier plans
+sends, so a per-wave Column rebuild shows up too."""
 
 import re
 import tempfile
@@ -75,24 +76,25 @@ def test_no_cartesian(spark, sf_dir, name):
 # ------------------------------------------------ crawl seen-filter probe
 
 
-def _staged_plans(spark, table, cfg, n_waves):
-    """Optimized plans of `table`'s staged writes over an n-wave crawl."""
+def _staged_plans(spark, cfg, n_waves, *tables):
+    """Optimized plans of the tables' staged writes over an n-wave crawl,
+    {table: [plan of wave 1, ...]}."""
     store = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_plan_"))
     eng = CrawlEngine(
         spark, store, synth_pages_df(spark, 120, 4), robots_df(spark, 4), cfg
     )
     eng.bootstrap(seed_urls(120, 4))
-    plans = []
+    plans = {t: [] for t in tables}
     stage = store.stage
 
     def capture(t, df, mode):
-        if t == table:
-            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        if t in plans:
+            plans[t].append(df._jdf.queryExecution().optimizedPlan().toString())
         return stage(t, df, mode)
 
     store.stage = capture
     eng.run(n_waves)
-    assert len(plans) == n_waves
+    assert all(len(p) == n_waves for p in plans.values())
     return plans
 
 
@@ -100,12 +102,38 @@ def _staged_plans(spark, table, cfg, n_waves):
 def test_seen_filter_probed_once_over_candidates(spark, filter_kind):
     """The seen-filter probe is a Python UDF: it must run once per distinct
     candidate url, never over the state side (frontier ∪ seen ∪ the wave's
-    settled rows) of the exact anti-join.  Catalyst infers
+    settled rows) of the existence join.  Catalyst infers
     might_contain(url) from curl = url and pushes it into the state scans
-    whenever the probe sits in a filter rather than in the join condition."""
+    whenever the probe sits in a filter rather than in the join condition.
+    Probes are counted by result id: the cached existence join is already
+    materialized when the write is planned, and an executed adaptive plan
+    prints both its initial and final form."""
     cfg = CrawlConfig(wave_size=8, use_bloom=True, filter_kind=filter_kind)
-    for plan in _staged_plans(spark, "frontier", cfg, 2):
-        assert re.findall(r"might_contain\((\w+)#", plan) == ["curl"]
+    for plan in _staged_plans(spark, cfg, 2, "frontier")["frontier"]:
+        probes = re.findall(r"might_contain\((\w+)#\d+\)#(\d+)", plan)
+        assert probes and {arg for arg, _ in probes} == {"curl"}
+        assert len({rid for _, rid in probes}) == 1
+
+
+@pytest.mark.parametrize("use_bloom", [False, True], ids=["exact", "bloom"])
+def test_one_existence_join_per_wave(spark, use_bloom):
+    """Both dedup outputs (new frontier rows, referrer edges) derive from
+    one left outer join of the candidates to the state, so the state side
+    is scanned and shuffled by url once per wave, not once per output."""
+    cfg = CrawlConfig(wave_size=8, use_bloom=use_bloom)
+    plans = _staged_plans(spark, cfg, 2, "frontier", "ref_edges")
+    for wave_plans in zip(plans["frontier"], plans["ref_edges"]):
+        text = "\n".join(wave_plans)
+        logical = re.findall(r"Join (\w+), .*?curl#(\d+) = url#(\d+)", text)
+        physical = [
+            (kind, c, u)
+            for c, u, kind in re.findall(
+                r"Join \[curl#(\d+)\], \[url#(\d+)\], (\w+)", text
+            )
+        ]
+        joins = set(logical + physical)
+        assert len(joins) == 1, joins
+        assert joins.pop()[0] == "LeftOuter"
 
 
 def test_parse_udf_runs_once_per_page(spark):
@@ -114,7 +142,7 @@ def test_parse_udf_runs_once_per_page(spark):
     the page parse twice.  Calls are counted by result id: the wave's
     cached parse is already materialized when the seen write is planned,
     and an executed adaptive plan prints both its initial and final form."""
-    (plan,) = _staged_plans(spark, "seen", CrawlConfig(wave_size=8), 1)
+    (plan,) = _staged_plans(spark, CrawlConfig(wave_size=8), 1, "seen")["seen"]
     assert len(set(re.findall(r"parse_page_udf\(.*?\)#\d+", plan))) == 1
 
 
@@ -125,10 +153,12 @@ def test_parse_udf_runs_once_per_page(spark):
     "use_bloom,expected",
     [
         # state reads carry their schema: no footer-reading inference job
-        # for the frontier and seen reads or the filter's read-back
-        pytest.param(False, [28, 28, 28], id="exact"),
+        # for the frontier and seen reads or the filter's read-back.  The
+        # one existence join runs in the candidate-count action, so the
+        # frontier and ref_edges writes no longer scan and shuffle the state
+        pytest.param(False, [26, 26, 26], id="exact"),
         # wave 1 builds the filter (two more jobs); later waves extend it
-        pytest.param(True, [32, 30, 30], id="bloom"),
+        pytest.param(True, [30, 28, 28], id="bloom"),
     ],
 )
 def test_spark_jobs_per_wave(spark, use_bloom, expected):
@@ -181,7 +211,7 @@ def test_wave_plan_rebuild_py4j_commands(spark, monkeypatch):
         FR.pop_wave(frontier, 8, robots=robots, default_budget=3)
         settled = FR.settle(parsed, None, wave)
         cand = FR.robots_filter(FR.make_candidates(parsed), robots)
-        FR.dedup_insert(cand, frontier, settled, wave)
+        FR.dedup_insert(FR.resolve_attempts(cand, frontier, settled), wave)
 
     build_wave(1)
     sent = [0]
