@@ -7,7 +7,7 @@ Each wave (one snapshot set + a metrics row):
            parsed   = links/simhash, one parse pandas UDF          # P4,P5,P12
            seen    += settled wave rows        (APPEND delta)      # F4
            cand     = explode(links) → canon → depth+1 → robots    # P1,F3
-           resolved = attempts per url ⟕ (frontier \\ top) ∪ seen  # F2, once
+           resolved = attempts per url ⟕ frontier ∪ seen           # F2, once
            new,edges= dedup_insert(resolved, ...)                  # F2
            frontier = (frontier \\ top) ∪ new  (overwrite)         # F5
            ref_edges+= edges                   (APPEND delta)
@@ -246,11 +246,6 @@ class CrawlEngine:
         # wave adds only its new-url delta; rebuilt when it is full
         # (amortized doubling)
         self._filter: SeenFilter | None = None
-        # mid-wave-kill recovery is only possible for waves run by a DEAD
-        # process: once a wave completes cleanly in THIS process, the next
-        # wave's rollback scan is a guaranteed no-op — skip it (first wave
-        # after construction/resume always checks)
-        self._needs_rollback = True
 
     # -- state ---------------------------------------------------------------
     def bootstrap(self, seeds: list[tuple[str, int]]) -> None:
@@ -273,6 +268,7 @@ class CrawlEngine:
         )
         f.unpersist()
         self._sizes = {"frontier": int(n_seeds), "seen": 0}
+        self._filter = None  # it holds the truncated crawl's urls
 
     @property
     def wave(self) -> int:
@@ -348,24 +344,19 @@ class CrawlEngine:
         # commits leaves deltas (and the metrics row) ahead of the last
         # frontier commit; appends are not idempotent, so roll those back
         # before re-running the wave (tests/test_crawler.py mid-wave kill
-        # cases).
-        if self._needs_rollback:
-            self.store.rollback_to_wave("seen", wave - 1)
-            self.store.rollback_to_wave("ref_edges", wave - 1)
-            self.store.rollback_rows_to_wave("wave_metrics", wave - 1)
-            # the failed attempt may have mutated the cached lineage sizes
-            # and the incremental filter out of sync with the rolled-back
-            # (or mid-committed) tables — drop both so they rebuild from
-            # disk.  Costs one recount/filter rebuild on the rare retry
-            # path only; on resume they are None already.
+        # cases).  The manifests say whether anything is ahead, so a retry
+        # in the same process (a promote that raised) is covered too.
+        dropped = [
+            self.store.rollback_to_wave("seen", wave - 1),
+            self.store.rollback_to_wave("ref_edges", wave - 1),
+            self.store.rollback_rows_to_wave("wave_metrics", wave - 1),
+        ]
+        if any(dropped):
+            # the lineage sizes and the filter delta are updated after the
+            # seen promote, so they are stale exactly when something was
+            # rolled back: drop both so they rebuild from disk
             self._sizes = None
             self._filter = None
-        # mark the wave in-flight: if anything below raises after a partial
-        # promote (disk-full mid-commit, Ctrl-C in a REPL caller), a retry
-        # in the SAME process must roll back too — appends are not
-        # idempotent, and without this the retry would double-append the
-        # wave's seen/ref_edges deltas.  Cleared only on the clean exits.
-        self._needs_rollback = True
         sizes = self._load_sizes()
         frontier = self.store.read("frontier")
         seen = self.store.read("seen")  # union of append deltas
@@ -390,7 +381,6 @@ class CrawlEngine:
         # write by rolling the (empty) delta back — termination-only cost.
         if sizes["frontier"] <= 0 and wave > 1:
             top.unpersist()
-            self._needs_rollback = False
             return {"wave": wave, "n_popped": 0, "done": True}
 
         # fetch: the pages table is the 100 TB side — never shuffle it.
@@ -447,17 +437,11 @@ class CrawlEngine:
         seen_delta = settled.observe(obs_settle, *c["settle_obs"]).repartition(
             n_delta
         )
-        # existence checks below must see this wave's settled rows too
-        # (DataFrame lineage, not the written table — so the seen write can
-        # be staged concurrently with the frontier/edges writes below)
-        seen_now = seen.unionByName(settled)
 
         # F2/F3: candidates → dedup-insert
         cand = FR.make_candidates(parsed, child_weight=self._child_weight())
         if self.robots is not None:
             cand = FR.robots_filter(cand, self.robots)
-
-        frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
 
         # incremental: frontier ∪ seen only ever GROWS by each wave's
         # new rows, so the filter is built once (first wave / resume /
@@ -465,35 +449,24 @@ class CrawlEngine:
         # extended with O(wave) deltas below — never an O(state)
         # re-scan per wave
         if self.cfg.use_bloom and (self._filter is None or self._filter.full):
-            # url set = frontier_rest ∪ seen ∪ this wave's settled rows.
-            # Settled urls ARE top's urls, so union the tiny cached
-            # `top` instead of `seen_now`: seen_now's settled branch
-            # rides the `parsed` cache, and materializing that cache
-            # computes ALL its columns — the build job would run the
-            # wave's parse UDF as a side effect (measured
-            # 27-33 s/build at the 262k protocol, the whole parse cost
-            # landing under the filter build instead of the writes)
-            existing = (
-                frontier_rest.select("url")
-                .unionByName(seen.select("url"))
-                .unionByName(top.select("url"))
-            )
             est = 2 * (sizes["frontier"] + sizes["seen"]) + 1000
             self._filter = FILTER_KINDS[self.cfg.filter_kind].build(
-                existing, "url", est
+                frontier.select("url").unionByName(seen.select("url")), "url", est
             )
 
-        # ONE existence join per wave: both dedup outputs derive from the
-        # cached result, so the state side is shuffled once, in the n_cand
-        # action below
+        # ONE existence join per wave, to the state as committed before it
+        # (the pop set is still in `frontier`): both dedup outputs derive
+        # from the cached result, so the state side is shuffled once, in
+        # the n_cand action below
         resolved = FR.resolve_attempts(
-            cand, frontier_rest, seen_now, bloom=self._filter
+            cand, frontier, seen, bloom=self._filter
         ).cache()
         new_rows, edges = FR.dedup_insert(
             resolved, wave, max_depth=self.cfg.max_depth
         )
         obs_new = Observation(f"new_w{wave}")
         new_rows = new_rows.observe(obs_new, c["count"])
+        frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
         frontier_final = frontier_rest.unionByName(new_rows).repartition(
             self.cfg.n_partitions, *c["frontier_parts"]
         )
@@ -538,7 +511,6 @@ class CrawlEngine:
             top.unpersist()
             parsed.unpersist()
             resolved.unpersist()
-            self._needs_rollback = False
             return {"wave": wave, "n_popped": 0, "done": True}
 
         self.store.promote(seen_tok, wave)
@@ -606,7 +578,6 @@ class CrawlEngine:
                     wave,
                 )
         row["done"] = False
-        self._needs_rollback = False
         return row
 
     def run(self, n_waves: int) -> list[dict]:

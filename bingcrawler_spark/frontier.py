@@ -372,30 +372,30 @@ def merge_referrers(state: DataFrame, edges: DataFrame) -> DataFrame:
 
 def resolve_attempts(
     cand: DataFrame,
-    frontier_rest: DataFrame,
+    frontier: DataFrame,
     seen: DataFrame,
     bloom=None,
 ) -> DataFrame:
     """F2 existence check, once per wave: one row per distinct candidate
     url — `curl`, `_arr` (its attempts in the reference's sequential
-    order) and `_exists` (already in frontier_rest ∪ seen).  dedup_insert
+    order) and `_exists` (already in frontier ∪ seen).  dedup_insert
     derives both of its outputs from this one join.
 
-    cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight
-    [, messages].  frontier_rest (frontier minus this wave's pop set) and
-    seen (post-settle) are disjoint and keyed by url, so a group matches
-    at most one state row.  bloom: optional SeenFilter (bloom.py) over
-    their urls, probed once per distinct candidate url; its flag is a
-    conjunct of the join condition, so only positives can match
-    (SURVEY.md §4.1)."""
+    cand: parent_url, pop_rank, link_pos, curl, child_depth, child_weight.
+    frontier and seen are the url-keyed, disjoint state tables as
+    committed before the wave; the wave's pop set is still in frontier,
+    and a url popped this wave is a known url all the same (putUrl checks
+    the stores as they stand).  A group matches at most one state row.
+    bloom: optional SeenFilter (bloom.py) over their urls, probed once
+    per distinct candidate url; its flag is a conjunct of the join
+    condition, so only positives can match (SURVEY.md §4.1)."""
     # the state side is hinted shuffle-hash, never broadcast: it is
     # O(state), and a broadcast collects the whole state url set to the
     # driver every wave (measured: 1-2.6 s broadcast-build stages per
     # wave, BENCH/SUBMIT_SCALING.md).  With url-hash-bucketed state tables
     # its exchange is elided.
-    existing = frontier_rest.select("url").unionByName(seen.select("url"))
-    has_msgs = "messages" in cand.columns
-    c = memo_expr(("attempt_cols", has_msgs), lambda: _attempt_cols(has_msgs))
+    existing = frontier.select("url").unionByName(seen.select("url"))
+    c = memo_expr(("attempt_cols",), _attempt_cols)
     # ONE shuffle groups all attempts per target url; the sorted struct
     # array encodes the reference's sequential attempt order
     attempts = cand.groupBy(c["curl"]).agg(c["arr"])
@@ -411,29 +411,16 @@ def resolve_attempts(
     )
 
 
-def _attempt_cols(has_msgs: bool) -> dict:
+def _attempt_cols() -> dict:
     """resolve_attempts' expressions."""
-    attempt_fields = [
-        "pop_rank", "link_pos", "parent_url", "child_depth", "child_weight",
-    ] + (["messages"] if has_msgs else [])
-    collected = F.collect_list(F.struct(*attempt_fields))
-    if has_msgs:
-        # maps are not orderable, so the struct needs an explicit
-        # comparator over the attempt-order key (pop_rank, link_pos)
-        def _cmp(lft, rgt):
-            return F.when(
-                lft["pop_rank"] != rgt["pop_rank"],
-                F.signum(lft["pop_rank"] - rgt["pop_rank"]).cast("int"),
-            ).otherwise(F.signum(lft["link_pos"] - rgt["link_pos"]).cast("int"))
-
-        sorted_arr = F.array_sort(collected, _cmp)
-    else:
-        sorted_arr = F.array_sort(collected)
+    attempt = F.struct(
+        "pop_rank", "link_pos", "parent_url", "child_depth", "child_weight"
+    )
     curl = F.col("curl")
     on = curl == F.col("url")
     return {
         "curl": curl,
-        "arr": sorted_arr.alias("_arr"),
+        "arr": F.array_sort(F.collect_list(attempt)).alias("_arr"),
         "on": on,
         "on_maybe": on & F.col("_maybe"),
         "out": [curl, F.col("_arr"), F.col("url").isNotNull().alias("_exists")],
@@ -453,10 +440,7 @@ def dedup_insert(
     depth cap wins, and the attempts after it become its initial
     referrers — so full referrers(url) = initial ∪ edges, folded in by
     merge_referrers at read time."""
-    has_msgs = "messages" in resolved.schema["_arr"].dataType.elementType.names
-    c = memo_expr(
-        ("dedup_cols", has_msgs, max_depth), lambda: _dedup_cols(has_msgs, max_depth)
-    )
+    c = memo_expr(("dedup_cols", max_depth), lambda: _dedup_cols(max_depth))
     edges = resolved.where(c["exists"]).select(*c["edge"], _wave_lit(wave, "wave"))
     # winner selection (first ELIGIBLE attempt) and later-referrer
     # accumulation are array expressions, not a window + self-join
@@ -468,7 +452,7 @@ def dedup_insert(
     return new_rows, edges
 
 
-def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
+def _dedup_cols(max_depth: int | None) -> dict:
     """dedup_insert's expressions; only the wave literals are per call."""
     elig = (
         F.filter("_arr", lambda x: x["child_depth"] <= F.lit(max_depth))
@@ -486,11 +470,6 @@ def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
         ),
     )
     first = F.col("_elig")[0]
-    new_msgs = (
-        F.coalesce(first["messages"], F.expr(_EMPTY_MSGS))
-        if has_msgs
-        else F.expr(_EMPTY_MSGS)
-    )  # winner's messages ride the new row (putUrl constructor semantics)
     curl = F.col("curl")
     exists = F.col("_exists")
     return {
@@ -508,7 +487,9 @@ def _dedup_cols(has_msgs: bool, max_depth: int | None) -> dict:
             F.array_sort(
                 F.array_distinct(F.transform(later, lambda x: x["parent_url"]))
             ).alias("referrers"),
-            new_msgs.alias("messages"),
+            # a url found as a link starts with no messages (putUrl's
+            # constructor); F7 maps enter through the seeds
+            F.expr(_EMPTY_MSGS).alias("messages"),
         ],
     }
 

@@ -136,19 +136,20 @@ class SnapshotStore:
         nothing — append tables would otherwise keep prior rows live."""
         shutil.rmtree(self._tdir(table), ignore_errors=True)
 
-    def rollback_to_wave(self, table: str, wave: int) -> None:
+    def rollback_to_wave(self, table: str, wave: int) -> bool:
         """Drop any snapshot committed for a wave AFTER `wave` — the
         mid-wave-kill recovery primitive: a wave's state spans several
         tables committed in sequence, and the frontier commit is the wave's
         commit point; on resume, deltas a dead run appended past the last
         frontier commit are rolled back so the re-run's appends are not
-        duplicates.  No-op when nothing is ahead."""
+        duplicates.  Returns whether anything was dropped (a no-op when
+        nothing is ahead)."""
         man = self.manifest(table)
         if man is None:
-            return
+            return False
         keep = [s for s in man["snapshots"] if s["wave"] <= wave]
         if len(keep) == len(man["snapshots"]):
-            return
+            return False
         drop = [s for s in man["snapshots"] if s["wave"] > wave]
         # refuse to point the manifest at state that _expire(keep=4) has
         # already deleted — a rollback the store cannot serve must fail
@@ -176,6 +177,7 @@ class SnapshotStore:
         os.replace(tmp, self._manifest_path(table))
         for s in drop:
             shutil.rmtree(self._snap_dir(table, s["id"]), ignore_errors=True)
+        return True
 
     def _oldest_restorable_wave(self, table: str, man: dict) -> int | None:
         """Earliest wave whose full live-id set still has data dirs on
@@ -255,12 +257,6 @@ class SnapshotStore:
             return -1
         return man["snapshots"][-1]["wave"]
 
-    def last_meta(self, table: str) -> dict | None:
-        man = self.manifest(table)
-        if not man or not man["snapshots"]:
-            return None
-        return man["snapshots"][-1]
-
     # ---- driver-side row logs (metrics lineage) --------------------------
     # One-row-per-wave tables (wave metrics) don't justify a Spark job per
     # commit: they land in a JSONL file with the same atomic-rename
@@ -279,23 +275,31 @@ class SnapshotStore:
             f.flush()
             os.fsync(f.fileno())
 
-    def rollback_rows_to_wave(self, table: str, wave: int) -> None:
+    def rollback_rows_to_wave(self, table: str, wave: int) -> bool:
         """Row-log analogue of rollback_to_wave: drop rows logged for waves
-        after `wave` (mid-wave-kill recovery for the metrics lineage)."""
-        rows = [r for r in self.read_rows(table) if r.get("wave", 0) <= wave]
+        after `wave` (mid-wave-kill recovery for the metrics lineage) and a
+        torn final line.  Returns whether anything was dropped; the file is
+        rewritten only then."""
+        rows, torn = self._row_log(table)
+        keep = [r for r in rows if r.get("wave", 0) <= wave]
+        if len(keep) == len(rows) and not torn:
+            return False
         path = os.path.join(self._tdir(table), "rows.jsonl")
-        if not os.path.exists(path):
-            return
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            for r in rows:
+            for r in keep:
                 f.write(json.dumps(r) + "\n")
         os.replace(tmp, path)
+        return True
 
     def read_rows(self, table: str) -> list[dict]:
+        return self._row_log(table)[0]
+
+    def _row_log(self, table: str) -> tuple[list[dict], bool]:
+        """The logged rows, and whether the final line was torn."""
         path = os.path.join(self._tdir(table), "rows.jsonl")
         if not os.path.exists(path):
-            return []
+            return [], False
         with open(path) as f:
             lines = [ln for ln in f if ln.strip()]
         out: list[dict] = []
@@ -307,9 +311,9 @@ class SnapshotStore:
                 # (log_row is append-only); torn interior lines are real
                 # corruption worth surfacing
                 if i == len(lines) - 1:
-                    break
+                    return out, True
                 raise
-        return out
+        return out, False
 
 
 def snapshot_diff(

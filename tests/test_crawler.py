@@ -11,9 +11,9 @@ from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
 N, H = 260, 8
 
 
-def _engine(spark, wh, wave_size=8):
+def _engine(spark, wh, wave_size=8, use_bloom=False):
     pages = synth_pages_df(spark, N, H)
-    cfg = CrawlConfig(wave_size=wave_size, max_depth=3)
+    cfg = CrawlConfig(wave_size=wave_size, max_depth=3, use_bloom=use_bloom)
     return CrawlEngine(spark, SnapshotStore(spark, wh), pages, robots_df(spark, H), cfg)
 
 
@@ -103,6 +103,32 @@ def test_bootstrap_resets_existing_state(spark):
     assert e2.seen().count() == 0  # truncated, not unioned with the old crawl
     e2.run(2)
     assert e2.seen().count() == n_seen_1  # identical fresh crawl
+
+
+def test_rebootstrap_same_engine_drops_seen_filter(spark):
+    """A bootstrap on an engine that already ran waves starts a new crawl:
+    the seen filter of the old one must go with its tables.  Kept, it
+    answers 'definitely new' for the new crawl's seeds, and links to them
+    insert them a second time."""
+    from bingcrawler_spark.synth import page_url
+
+    eng = _engine(spark, tempfile.mkdtemp(prefix="wh_f9b_"), use_bloom=True)
+    eng.bootstrap(seed_urls(N, H))
+    eng.run(2)
+
+    def state_urls():
+        return [
+            r["url"]
+            for t in ("frontier", "seen")
+            for r in eng.store.read(t).select("url").collect()
+        ]
+
+    old = set(state_urls())
+    urls = (page_url(i, H) for i in range(N))
+    eng.bootstrap([(u, 100) for u in urls if u not in old][:20])
+    eng.run(3)
+    new = state_urls()
+    assert len(new) == len(set(new))
 
 
 def test_metrics_lineage(spark):
@@ -547,13 +573,15 @@ def test_host_budget_hamilton_exact(spark):
     ) == want
 
 
-def test_in_process_retry_after_partial_commit(spark):
+@pytest.mark.parametrize("use_bloom", [False, True], ids=["exact", "bloom"])
+def test_in_process_retry_after_partial_commit(spark, use_bloom):
     """A promote that fails MID-COMMIT (seen delta landed, ref_edges and
     frontier did not — e.g. disk-full) followed by a retry in the SAME
     process must roll the partial delta back before re-running the wave;
     appends are not idempotent, so skipping the rollback would
-    double-append every popped url's seen row."""
-    import pytest
+    double-append every popped url's seen row.  With the seen filter on,
+    the rollback also drops the in-memory filter, which rebuilds from the
+    rolled-back tables."""
     from pyspark.sql import functions as F
 
     wh_a = tempfile.mkdtemp(prefix="wh_ra_")
@@ -562,7 +590,7 @@ def test_in_process_retry_after_partial_commit(spark):
     a.run(3)
 
     wh_b = tempfile.mkdtemp(prefix="wh_rb_")
-    b = _engine(spark, wh_b)
+    b = _engine(spark, wh_b, use_bloom=use_bloom)
     b.bootstrap(seed_urls(N, H))
     b.run(2)
 
@@ -718,6 +746,33 @@ def test_log_row_append_and_torn_tail(spark):
 
     with pytest.raises(_json.JSONDecodeError):
         st.read_rows("m")
+
+
+def test_rollbacks_on_clean_store_are_noops(spark):
+    """With nothing ahead of the wave, both rollbacks report that they
+    dropped nothing and leave the row log byte-identical, so a wave can
+    always call them; a torn final line is still dropped."""
+    import os
+
+    wh = tempfile.mkdtemp(prefix="wh_rb0_")
+    st = SnapshotStore(spark, wh)
+    for w in (1, 2):
+        st.append("t", spark.range(2).toDF("id"), wave=w)
+        st.log_row("m", {"wave": w})
+    path = os.path.join(wh, "m", "rows.jsonl")
+    # a rewrite replaces the file: same bytes, new inode
+    before = open(path, "rb").read(), os.stat(path).st_ino
+    man = st.manifest("t")
+    assert st.rollback_to_wave("t", 2) is False
+    assert st.rollback_rows_to_wave("m", 2) is False
+    assert (open(path, "rb").read(), os.stat(path).st_ino) == before
+    assert st.manifest("t") == man
+    with open(path, "a") as f:
+        f.write('{"wave": 3')  # torn tail
+    assert st.rollback_rows_to_wave("m", 2) is True
+    assert open(path, "rb").read() == before[0]
+    assert st.rollback_to_wave("t", 1) is True
+    assert st.current_wave("t") == 1
 
 
 def test_rollback_past_retention_refuses(spark):

@@ -1,8 +1,9 @@
 """Knob censuses: every SPARK_GRAFT_* variable the package reads is a
 deployment setting listed here, and every CrawlConfig field is listed too.
 A new knob doubles the configurations tests and benchmarks must cover, so
-adding one means adding it here.  A dead-def census sits alongside: code
-nothing calls is code every reader still has to read."""
+adding one means adding it here.  A dead-def census sits alongside, over
+functions, classes and methods: code nothing calls is code every reader
+still has to read."""
 
 import ast
 import dataclasses
@@ -71,38 +72,64 @@ def _registered(node) -> bool:
     return False
 
 
+def _package_defs(mod, tree, package_classes):
+    """(module, qualified name, name) of each top-level def and class, and
+    of each non-dunder method of a class whose bases are all package
+    classes.  A class with a foreign base may define callbacks its base
+    calls (HTMLParser.handle_starttag); the language calls dunders."""
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    out = set()
+    for n in tree.body:
+        if not isinstance(n, funcs + (ast.ClassDef,)) or _registered(n):
+            continue
+        out.add((mod, n.name, n.name))
+        if isinstance(n, ast.ClassDef) and all(
+            isinstance(b, ast.Name) and b.id in package_classes for b in n.bases
+        ):
+            out |= {
+                (mod, f"{n.name}.{m.name}", m.name)
+                for m in n.body
+                if isinstance(m, funcs) and not m.name.startswith("__")
+            }
+    return out
+
+
 def test_dead_def_census():
-    """Every top-level def and class in the package is referenced somewhere:
-    as a name, an attribute, an import or a string constant, in the
-    package, the tests, the tools, perfbench, bench.py or the driver
-    entry.  Registered catalog queries are reached through QUERIES."""
+    """Every top-level def and class in the package, and every method of a
+    class built only on package classes, is referenced somewhere: as a
+    name, an attribute, an import or a string constant, in the package,
+    the tests, the tools, perfbench, bench.py or the driver entry.
+    Registered catalog queries are reached through QUERIES."""
     pkg = os.path.dirname(bingcrawler_spark.__file__)
     root = os.path.dirname(pkg)
-    defs, refs = set(), set()
+    trees = {}
     for rel in REFERRING:
         for path in _py_files(root, rel):
             with open(path, encoding="utf-8") as f:
-                tree = ast.parse(f.read())
-            if path.startswith(pkg + os.sep):
-                mod = os.path.relpath(path, root)
-                defs |= {
-                    (mod, n.name)
-                    for n in tree.body
-                    if isinstance(
-                        n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                    )
-                    and not _registered(n)
-                }
-            for n in ast.walk(tree):
-                if isinstance(n, ast.Name):
-                    refs.add(n.id)
-                elif isinstance(n, ast.Attribute):
-                    refs.add(n.attr)
-                elif isinstance(n, ast.alias):
-                    refs.add(n.name.rsplit(".", 1)[-1])
-                elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-                    refs.add(n.value)
-    dead = {d for d in defs if d[1] not in refs | LOOKED_UP_BY_NAME}
+                trees[path] = ast.parse(f.read())
+    package = {
+        os.path.relpath(p, root): t
+        for p, t in trees.items()
+        if p.startswith(pkg + os.sep)
+    }
+    classes = {
+        n.name for t in package.values() for n in t.body if isinstance(n, ast.ClassDef)
+    }
+    defs = set()
+    for mod, tree in package.items():
+        defs |= _package_defs(mod, tree, classes)
+    refs = set()
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                refs.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                refs.add(n.attr)
+            elif isinstance(n, ast.alias):
+                refs.add(n.name.rsplit(".", 1)[-1])
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                refs.add(n.value)
+    dead = {d[:2] for d in defs if d[2] not in refs | LOOKED_UP_BY_NAME}
     assert not dead, sorted(dead)
 
 
