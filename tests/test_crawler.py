@@ -573,15 +573,12 @@ def test_host_budget_hamilton_exact(spark):
     ) == want
 
 
-@pytest.mark.parametrize("use_bloom", [False, True], ids=["exact", "bloom"])
-def test_in_process_retry_after_partial_commit(spark, use_bloom):
+def test_in_process_retry_after_partial_commit(spark):
     """A promote that fails MID-COMMIT (seen delta landed, ref_edges and
     frontier did not — e.g. disk-full) followed by a retry in the SAME
     process must roll the partial delta back before re-running the wave;
     appends are not idempotent, so skipping the rollback would
-    double-append every popped url's seen row.  With the seen filter on,
-    the rollback also drops the in-memory filter, which rebuilds from the
-    rolled-back tables."""
+    double-append every popped url's seen row."""
     from pyspark.sql import functions as F
 
     wh_a = tempfile.mkdtemp(prefix="wh_ra_")
@@ -590,7 +587,7 @@ def test_in_process_retry_after_partial_commit(spark, use_bloom):
     a.run(3)
 
     wh_b = tempfile.mkdtemp(prefix="wh_rb_")
-    b = _engine(spark, wh_b, use_bloom=use_bloom)
+    b = _engine(spark, wh_b)
     b.bootstrap(seed_urls(N, H))
     b.run(2)
 
@@ -647,17 +644,26 @@ def _crawl_state(eng):
     }
 
 
-@pytest.mark.parametrize("resume", ["same_process", "fresh_engine"])
+@pytest.mark.parametrize(
+    "resume,use_bloom",
+    [("same_process", False), ("fresh_engine", False), ("same_process", True)],
+    ids=["same_process", "fresh_engine", "same_process-bloom"],
+)
 @pytest.mark.parametrize("kill_at", ["log_row", "frontier_promote"])
-def test_kill_at_wave_commit_and_resume(spark, uninterrupted_4, kill_at, resume):
+def test_kill_at_wave_commit_and_resume(
+    spark, uninterrupted_4, kill_at, resume, use_bloom
+):
     """A kill at the wave's last two commits: the metrics row (log_row) and
     the frontier promote, the wave's commit point.  The row is logged first,
     so either kill leaves the wave uncommitted (a row ahead of the frontier
     at worst, which the resume rollback drops).  Resuming, in the same
     process or from a fresh engine, re-runs the wave: metrics stay
-    contiguous and every table equals the uninterrupted run's."""
+    contiguous and every table equals the uninterrupted run's.  Both kills
+    come after the killed wave added its new urls to the seen filter, so a
+    same-process retry must drop the filter with the rolled-back rows: a
+    kept one would count those urls twice."""
     wh_b = tempfile.mkdtemp(prefix="wh_wb_")
-    b = _engine(spark, wh_b)
+    b = _engine(spark, wh_b, use_bloom=use_bloom)
     b.bootstrap(seed_urls(N, H))
     b.run(2)
 
@@ -690,6 +696,9 @@ def test_kill_at_wave_commit_and_resume(spark, uninterrupted_4, kill_at, resume)
     got, want = _crawl_state(b), _crawl_state(uninterrupted_4)
     assert [m["wave"] for m in got["metrics"]] == [1, 2, 3, 4]
     assert got == want
+    if use_bloom:
+        last = got["metrics"][-1]
+        assert b._filter.items == last["frontier_size"] + last["seen_size"]
 
 
 def test_resume_from_manifests_without_schemas(spark, uninterrupted_4):
