@@ -25,8 +25,8 @@ wave writes only its delta); only the frontier — the bounded working set —
 is rewritten.  Referrer accumulation on existing rows (the reference's
 KEYEXIST path, UrlsDbManager.java:555-580) therefore never rewrites the
 seen-set: edges land in `ref_edges` and fold in at read time
-(frontier.merge_referrers).  State sizes are tracked arithmetically in the
-metrics lineage instead of re-counting O(state) tables every wave.
+(frontier.merge_referrers).  State sizes are the store's per-snapshot row
+counts (SnapshotStore.n_rows), never a re-count of O(state) tables.
 
 State lives in a SnapshotStore; a killed run resumes at the last committed
 wave (test: kill-and-resume in tests/test_crawler.py).
@@ -34,7 +34,6 @@ wave (test: kill-and-resume in tests/test_crawler.py).
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -78,37 +77,6 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("wall_s", T.DoubleType()),
     ]
 )
-
-
-def _harvest(obs: Observation, name: str, fallback) -> int:
-    """Observation.get with an AQE guard.  When an observed subtree turns
-    out empty at runtime, AQE's empty-relation propagation replaces it —
-    CollectMetrics node included — with an empty LocalTableScan, the metric
-    never fires, and Spark completes the observation with a schema-less
-    empty row that Observation.get cannot deserialize.  Fall back to the
-    direct count then: it only happens on waves whose observed set IS
-    empty, so the recount job is O(0)."""
-    try:
-        return int(obs.get[name] or 0)
-    except Exception:
-        return int(fallback())
-
-
-def _max_file_rows(snap_dir: str) -> int:
-    """Max per-file row count of a committed snapshot, read from parquet
-    footers (each write partition = one file) — the per-partition lineage
-    metric without a Spark job, the way Iceberg manifests carry it."""
-    try:
-        import pyarrow.parquet as pq
-
-        rows = [
-            pq.ParquetFile(os.path.join(snap_dir, f)).metadata.num_rows
-            for f in os.listdir(snap_dir)
-            if f.endswith(".parquet")
-        ]
-        return max(rows) if rows else 0
-    except Exception:
-        return -1
 
 
 REDIRECT_STATUSES = (301, 302, 303, 307)  # ifRedirect, CommonAnalysis.java:202-207
@@ -187,11 +155,7 @@ def _wave_cols() -> dict:
             F.col("_parse.links").alias("links"),
             F.col("_parse.simhash").alias("simhash"),
         ],
-        "settle_obs": [
-            F.sum((F.col("status") < 0).cast("long")).alias("n_failed"),
-            F.count(F.lit(1)).alias("n_popped"),
-        ],
-        "count": F.count(F.lit(1)).alias("n"),
+        "n_failed": F.sum((F.col("status") < 0).cast("long")).alias("n_failed"),
         "n_cand": F.coalesce(F.sum(F.size("_arr")), F.lit(0)),
         # partition by (host, salt): host-locality for the politeness rank,
         # salt so a hot host (30%+ of a web crawl) cannot pin one partition
@@ -203,8 +167,6 @@ def _wave_cols() -> dict:
 class CrawlConfig:
     wave_size: int = 1000
     max_depth: int | None = FR.DEFAULT_MAX_DEPTH
-    default_budget: int | None = None  # per-host per-wave politeness cap
-    min_weight: int | None = None  # priorityBottomLine (F10)
     use_bloom: bool = False
     # seen-set prefilter kind when use_bloom is on, a FILTER_KINDS key:
     # "bloom" (ShardedBloom, OR-mergeable deltas) or "cuckoo"
@@ -241,7 +203,6 @@ class CrawlEngine:
                 f"filter_kind {self.cfg.filter_kind!r} is not one of "
                 f"{sorted(FILTER_KINDS)}"
             )
-        self._sizes: dict[str, int] | None = None  # {"frontier": n, "seen": n}
         # incremental seen filter: built once (or on resume), then each
         # wave adds only its new-url delta; rebuilt when it is full
         # (amortized doubling)
@@ -255,46 +216,20 @@ class CrawlEngine:
         # warehouse would dedup against the PREVIOUS crawl's seen rows.
         for t in ("frontier", "seen", "ref_edges", "wave_metrics"):
             self.store.truncate(t)
-        f = FR.seeds_to_frontier(self.spark, seeds).cache()
-        n_seeds = f.count()
-        self.store.commit("frontier", f, wave=0)
+        self.store.commit("frontier", FR.seeds_to_frontier(self.spark, seeds), wave=0)
         self.store.append("seen", FR.empty_seen(self.spark), wave=0)
         self.store.append(
             "ref_edges", self.spark.createDataFrame([], EDGES_SCHEMA), wave=0
         )
         self.store.log_row(
             "wave_metrics",
-            {"wave": 0, "frontier_size": int(n_seeds), "seen_size": 0},
+            {"wave": 0, "frontier_size": self.store.n_rows("frontier"), "seen_size": 0},
         )
-        f.unpersist()
-        self._sizes = {"frontier": int(n_seeds), "seen": 0}
         self._filter = None  # it holds the truncated crawl's urls
 
     @property
     def wave(self) -> int:
         return self.store.current_wave("frontier")
-
-    def _load_sizes(self) -> dict[str, int]:
-        if self._sizes is None:  # resume path: lineage carries the sizes
-            rows = self.store.read_rows("wave_metrics")
-            m = rows[-1] if rows else {}
-            if rows and int(m.get("wave", -1)) == self.wave:
-                self._sizes = {
-                    "frontier": int(m.get("frontier_size", 0)),
-                    "seen": int(m.get("seen_size", 0)),
-                }
-            else:
-                # the metrics row for the committed wave is missing: run_wave
-                # logs it before the frontier promote (the wave's commit
-                # point), so only a bootstrap killed between its frontier
-                # commit and log_row, or a lost row log, gets here.  The
-                # lineage is broken: recount from the tables once.
-                # O(state), odd-resume path only.
-                self._sizes = {
-                    "frontier": self.store.read("frontier").count(),
-                    "seen": self.store.read("seen").count(),
-                }
-        return self._sizes
 
     def frontier(self) -> DataFrame:
         """Frontier view with referrer edges folded in (read-time merge)."""
@@ -352,36 +287,30 @@ class CrawlEngine:
             self.store.rollback_rows_to_wave("wave_metrics", wave - 1),
         ]
         if any(dropped):
-            # the lineage sizes and the filter delta are updated after the
-            # seen promote, so they are stale exactly when something was
-            # rolled back: drop both so they rebuild from disk
-            self._sizes = None
+            # the filter delta is added after the seen promote, so it is
+            # stale exactly when something was rolled back: drop it so it
+            # rebuilds from disk
             self._filter = None
-        sizes = self._load_sizes()
+        # state sizes are the store's per-snapshot row counts: no job
+        n_frontier = self.store.n_rows("frontier")
+        if n_frontier == 0:
+            return {"wave": wave, "n_popped": 0, "done": True}
+        n_seen = self.store.n_rows("seen")
         frontier = self.store.read("frontier")
         seen = self.store.read("seen")  # union of append deltas
 
-        top = FR.pop_wave(
-            frontier,
-            self.cfg.wave_size,
-            robots=self.robots,
-            default_budget=self.cfg.default_budget,
-            min_weight=self.cfg.min_weight,
-        )
+        top = FR.pop_wave(frontier, self.cfg.wave_size, robots=self.robots)
         # pop_wave's top-k compiles to TakeOrderedAndProject, which lands
         # the whole wave in ONE partition — spread it back out so the parse
         # UDF below uses every core, then cache (it feeds fetch, settle AND
         # removal)
         top = top.repartition(self.cfg.n_partitions).cache()
-        # n_popped is NOT counted here: it rides the settle write's
-        # observe() below, merging the pop job into the first write job —
-        # one less Spark action per wave (the per-wave driver constant is
-        # what caps full-loop scaling efficiency, BENCH/SUBMIT_SCALING.md).
-        # The only lost fast path is the empty-pop wave, handled after the
-        # write by rolling the (empty) delta back — termination-only cost.
-        if sizes["frontier"] <= 0 and wave > 1:
-            top.unpersist()
-            return {"wave": wave, "n_popped": 0, "done": True}
+        # n_popped is NOT counted here: the staged seen delta records it
+        # (one settled row per popped url), so the pop costs no action of
+        # its own (the per-wave driver constant is what caps full-loop
+        # scaling efficiency, BENCH/SUBMIT_SCALING.md).  A wave whose
+        # politeness budgets pop nothing is caught after the writes, by
+        # discarding the (empty) staged snapshots — termination-only cost.
 
         # fetch: the pages table is the 100 TB side — never shuffle it.
         # (1) broadcast-SEMI the wave into pages (build side = wave ✓;
@@ -434,7 +363,7 @@ class CrawlEngine:
         n_delta = max(1, self.cfg.n_partitions // 4)
         settled = FR.settle(parsed, None, wave)
         obs_settle = Observation(f"settle_w{wave}")
-        seen_delta = settled.observe(obs_settle, *c["settle_obs"]).repartition(
+        seen_delta = settled.observe(obs_settle, c["n_failed"]).repartition(
             n_delta
         )
 
@@ -449,7 +378,7 @@ class CrawlEngine:
         # extended with O(wave) deltas below — never an O(state)
         # re-scan per wave
         if self.cfg.use_bloom and (self._filter is None or self._filter.full):
-            est = 2 * (sizes["frontier"] + sizes["seen"]) + 1000
+            est = 2 * (n_frontier + n_seen) + 1000
             self._filter = FILTER_KINDS[self.cfg.filter_kind].build(
                 frontier.select("url").unionByName(seen.select("url")), "url", est
             )
@@ -464,8 +393,6 @@ class CrawlEngine:
         new_rows, edges = FR.dedup_insert(
             resolved, wave, max_depth=self.cfg.max_depth
         )
-        obs_new = Observation(f"new_w{wave}")
-        new_rows = new_rows.observe(obs_new, c["count"])
         frontier_rest = frontier.join(top.select("url"), "url", "left_anti")
         frontier_final = frontier_rest.unionByName(new_rows).repartition(
             self.cfg.n_partitions, *c["frontier_parts"]
@@ -501,10 +428,10 @@ class CrawlEngine:
             seen_tok = seen_fut.result()
             edges_tok = edges_fut.result()
 
-        n_popped = _harvest(obs_settle, "n_popped", top.count)
+        n_popped = seen_tok["n_rows"]
         if n_popped == 0:
-            # politeness/min-weight filtered the whole frontier: the crawl
-            # is done.  Nothing was promoted — drop the staged dirs so a
+            # the politeness budgets filtered out the whole frontier: the
+            # crawl is done.  Nothing was promoted — drop the staged dirs so a
             # resumed run re-decides cleanly.
             for tok in (seen_tok, edges_tok, frontier_tok):
                 self.store.discard(tok)
@@ -516,17 +443,12 @@ class CrawlEngine:
         self.store.promote(seen_tok, wave)
         self.store.promote(edges_tok, wave)
 
-        # harvest the observed counts (all fired by the writes above —
-        # the whole wave normally runs the n_cand action + 3 writes,
-        # nothing more; the fallbacks only trigger on empty-set waves)
-        n_failed = _harvest(
-            obs_settle, "n_failed", lambda: parsed.where(F.col("status") < 0).count()
-        )
-        n_new = _harvest(obs_new, "n", new_rows.count)
-
-        # lineage sizes: pure arithmetic — never an O(state) recount
-        sizes["seen"] += int(n_popped)
-        sizes["frontier"] = sizes["frontier"] - int(n_popped) + int(n_new)
+        # the settle write fired the observation.  Its subtree holds the
+        # n_popped > 0 settled rows, so AQE cannot have replaced it with an
+        # empty relation (which would drop the metric)
+        n_failed = obs_settle.get["n_failed"]
+        # the frontier overwrite is (frontier \ top) ∪ new, and top ⊆ frontier
+        n_new = frontier_tok["n_rows"] - (n_frontier - n_popped)
 
         # filter delta: add ONLY this wave's new urls (read back from the
         # staged frontier snapshot — a bounded-frontier scan, no shuffle)
@@ -537,21 +459,20 @@ class CrawlEngine:
                 .select("url"),
                 "url",
             )
-        # per-partition lineage (north rule): how balanced is the frontier
-        # across its partitions after the salted repartition?  Read from
-        # the staged snapshot's parquet FOOTERS (one row-count per file
-        # = per partition) — Iceberg-manifest-style metadata, zero jobs.
-        max_part = _max_file_rows(frontier_tok["dir"])
+        # max_partition_rows (north rule): how balanced is the frontier
+        # across its partitions after the salted repartition?  The staged
+        # snapshot recorded its largest file's row count (one file per
+        # partition) from the parquet footers — zero jobs.
         row = {
             "wave": wave,
-            "n_popped": int(n_popped),
-            "n_fetched": int(n_popped - n_failed),
-            "n_failed": int(n_failed),
+            "n_popped": n_popped,
+            "n_fetched": n_popped - n_failed,
+            "n_failed": n_failed,
             "n_candidates": int(n_cand),
-            "n_new": int(n_new),
-            "frontier_size": sizes["frontier"],
-            "seen_size": sizes["seen"],
-            "max_partition_rows": max_part,
+            "n_new": n_new,
+            "frontier_size": frontier_tok["n_rows"],
+            "seen_size": n_seen + n_popped,
+            "max_partition_rows": frontier_tok["max_file_rows"],
             "wall_s": time.time() - t0,
         }
         # the metrics row lands BEFORE the frontier promote (the wave's

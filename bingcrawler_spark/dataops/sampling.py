@@ -60,7 +60,7 @@ def domain_mixture(
     )
     bucket = sample_bucket_col(id_col)
     rate = F.coalesce(
-        rate_map.getItem(F.col(source_col)), F.lit(int(default_rate))
+        rate_map[F.col(source_col)], F.lit(int(default_rate))
     )
     return (
         docs.select(F.col(id_col), F.col(source_col), bucket.alias("bucket"))

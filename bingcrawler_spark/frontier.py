@@ -174,22 +174,13 @@ def pop_wave(
     wave_size: int,
     robots: DataFrame | None = None,
     default_budget: int | None = None,
-    min_weight: int | None = None,
     n_salts: int = 16,
 ) -> DataFrame:
     """Select this wave's pop set: per-host politeness budget (two-phase
     salted top-k so one hot host can't serialize a window partition), then a
     global top-`wave_size` in (weight DESC, url DESC) order. Adds `pop_rank`
-    (1-based position in the reference's sequential pop order).
-
-    min_weight mirrors the scheduler's priorityBottomLine cutoff
-    (TaskWeightDbManager.java:79)."""
+    (1-based position in the reference's sequential pop order)."""
     f = frontier
-    if min_weight is not None:
-        keep = memo_expr(
-            ("min_weight", min_weight), lambda: F.col("weight") >= F.lit(min_weight)
-        )
-        f = f.where(keep)
     if robots is not None or default_budget is not None:
         if robots is not None:
             budgets = memo_expr(

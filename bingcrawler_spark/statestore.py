@@ -6,8 +6,9 @@ snapshot store: each table is a directory of immutable snapshots
 (``<wh>/<table>/snap-0000N/`` parquet) plus a JSON manifest whose atomic
 rename is the commit point. On a real cluster the calls map 1:1 to Iceberg
 (`commit` → snapshot-producing overwrite, `append` → fast-append snapshot,
-`read` → current snapshot, `snapshots` → time travel / per-wave lineage);
-swap the backend without touching the wave loop.
+`read` → current snapshot, `rollback_to_wave` → rollback to a snapshot,
+`n_rows` → the snapshot summary's record count); swap the backend without
+touching the wave loop.
 
 Append tables are the scale-critical piece: the seen-set, referrer edges,
 pop log and wave metrics grow monotonically, so each wave writes ONLY its
@@ -21,6 +22,13 @@ reader and launches no footer-reading schema-inference job (an Iceberg
 table's metadata carries its schema the same way).  Snapshots promoted
 before schemas were recorded are read with inference.
 
+Sizes carry the same way: `stage` reads the row count of the snapshot it
+just wrote from its parquet footers, `promote` files it in the manifest
+entry, and `n_rows` sums the live snapshots' counts — the analogue of the
+record counts in an Iceberg snapshot's summary, so no state size is ever
+recounted by a Spark job.  Snapshots promoted before counts were recorded
+are counted from their footers.
+
 Reference analogue: BDB SYNC transactions per op (UrlsDb.java:89-95,
 Db.java:75-80) — durability unit there is one key, here one wave.
 """
@@ -32,6 +40,7 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -76,15 +85,20 @@ class SnapshotStore:
         snap_id = man["current"] + 1
         snap_dir = self._snap_dir(table, snap_id)
         df.write.mode("overwrite").parquet(snap_dir)
+        # counted here, on the staging thread, not in promote: the footer
+        # reads stay off the microsecond commit point
+        n_rows, max_file_rows = _footer_rows(snap_dir)
         return {
             "table": table,
             "id": snap_id,
             "dir": snap_dir,
             "mode": mode,
             "schema": df.schema.json(),
+            "n_rows": n_rows,
+            "max_file_rows": max_file_rows,
         }
 
-    def promote(self, token: dict, wave: int, meta: dict | None = None) -> str:
+    def promote(self, token: dict, wave: int) -> str:
         man = self.manifest(token["table"]) or {"current": -1, "snapshots": []}
         # single-writer invariant: nothing committed since this stage.
         # A real exception, not an assert — the guard protects manifest
@@ -108,7 +122,7 @@ class SnapshotStore:
                 "mode": token["mode"],
                 "ts": time.time(),
                 "schema": schemas.index(token["schema"]),
-                **(meta or {}),
+                "n_rows": token["n_rows"],
             }
         )
         tmp = self._manifest_path(token["table"]) + ".tmp"
@@ -122,13 +136,13 @@ class SnapshotStore:
         """Drop a staged-but-not-promoted snapshot dir (abandoned wave)."""
         shutil.rmtree(token["dir"], ignore_errors=True)
 
-    def commit(self, table: str, df: DataFrame, wave: int, meta: dict | None = None) -> str:
+    def commit(self, table: str, df: DataFrame, wave: int) -> str:
         """Full-overwrite snapshot (the new current state of the table)."""
-        return self.promote(self.stage(table, df, "overwrite"), wave, meta)
+        return self.promote(self.stage(table, df, "overwrite"), wave)
 
-    def append(self, table: str, df: DataFrame, wave: int, meta: dict | None = None) -> str:
+    def append(self, table: str, df: DataFrame, wave: int) -> str:
         """Fast-append snapshot: df holds ONLY this wave's delta rows."""
-        return self.promote(self.stage(table, df, "append"), wave, meta)
+        return self.promote(self.stage(table, df, "append"), wave)
 
     def truncate(self, table: str) -> None:
         """F9 clearDb (UrlsDb.java truncate semantics): drop the table's
@@ -221,11 +235,11 @@ class SnapshotStore:
                 shutil.rmtree(os.path.join(self._tdir(table), d), ignore_errors=True)
 
     # ---- reads -----------------------------------------------------------
-    def read(self, table: str, snapshot: int | None = None) -> DataFrame:
+    def read(self, table: str) -> DataFrame:
         man = self.manifest(table)
         if man is None:
             raise FileNotFoundError(f"table {table} has no snapshots")
-        ids = self._live_ids(man, snapshot)
+        ids = self._live_ids(man)
         if not ids:  # e.g. rolled back past every snapshot
             raise FileNotFoundError(f"table {table} has no live snapshots")
         # inference would read the footer of the first file in path order,
@@ -236,6 +250,21 @@ class SnapshotStore:
         )
         return self._reader(schema).parquet(
             *[self._snap_dir(table, i) for i in ids]
+        )
+
+    def n_rows(self, table: str) -> int:
+        """Row count of the table's current state: the sum of its live
+        snapshots' recorded counts, with no Spark job.  A snapshot promoted
+        before counts were recorded is counted from its footers."""
+        man = self.manifest(table)
+        if man is None:
+            raise FileNotFoundError(f"table {table} has no snapshots")
+        live = set(self._live_ids(man))
+        return sum(
+            s["n_rows"] if "n_rows" in s
+            else _footer_rows(self._snap_dir(table, s["id"]))[0]
+            for s in man["snapshots"]
+            if s["id"] in live
         )
 
     def read_staged(self, token: dict) -> DataFrame:
@@ -314,6 +343,17 @@ class SnapshotStore:
                     return out, True
                 raise
         return out, False
+
+
+def _footer_rows(snap_dir: str) -> tuple[int, int]:
+    """Total and largest per-file row count of a written snapshot dir, read
+    from its parquet footers (each write partition is one file)."""
+    rows = [
+        pq.read_metadata(os.path.join(snap_dir, f)).num_rows
+        for f in os.listdir(snap_dir)
+        if f.endswith(".parquet")
+    ]
+    return sum(rows), max(rows, default=0)
 
 
 def snapshot_diff(

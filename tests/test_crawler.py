@@ -593,10 +593,10 @@ def test_in_process_retry_after_partial_commit(spark):
 
     real_promote = b.store.promote
 
-    def failing(token, wave, meta=None):
+    def failing(token, wave):
         if token["table"] == "ref_edges":
             raise OSError("injected: disk full mid-commit")
-        return real_promote(token, wave, meta)
+        return real_promote(token, wave)
 
     b.store.promote = failing
     with pytest.raises(OSError):
@@ -674,10 +674,10 @@ def test_kill_at_wave_commit_and_resume(
             raise OSError("injected: crash at the metrics row")
         return real_log(table, row)
 
-    def failing_promote(token, wave, meta=None):
+    def failing_promote(token, wave):
         if token["table"] == "frontier":
             raise OSError("injected: crash at the frontier promote")
-        return real_promote(token, wave, meta)
+        return real_promote(token, wave)
 
     if kill_at == "log_row":
         b.store.log_row = failing_log
@@ -702,9 +702,10 @@ def test_kill_at_wave_commit_and_resume(
 
 
 def test_resume_from_manifests_without_schemas(spark, uninterrupted_4):
-    """Manifests written before snapshots recorded their schema: reads fall
-    back to inference, and the resumed crawl (whose new snapshots do record
-    one) ends in the uninterrupted run's state."""
+    """Manifests written before snapshots recorded their schema and row
+    count: reads fall back to inference and sizes to the parquet footers,
+    and the resumed crawl (whose new snapshots record both) ends in the
+    uninterrupted run's state."""
     import json
     import os
 
@@ -717,15 +718,49 @@ def test_resume_from_manifests_without_schemas(spark, uninterrupted_4):
         man.pop("schemas")
         for s in man["snapshots"]:
             s.pop("schema")
+            s.pop("n_rows")
         with open(os.path.join(wh_b, t, "_manifest.json"), "w") as f:
             json.dump(man, f)
     b = _engine(spark, wh_b)
     assert b.wave == 2
+    for t in ("frontier", "seen", "ref_edges"):
+        assert b.store.n_rows(t) == b.store.read(t).count(), t
     b.run(2)
     assert _crawl_state(b) == _crawl_state(uninterrupted_4)
 
 
 # ------------------------------------------------------ store durability
+
+
+def test_recorded_row_counts_match_the_tables(spark):
+    """The sizes a wave reads are the snapshots' recorded row counts: they
+    must equal a recount of each table after bootstrap, after plain
+    append waves, after a compaction wave (an overwrite of an append
+    table), after an append on top of it and after rolling that append
+    back (compaction expires the older deltas, so no rollback reaches
+    past it)."""
+    eng = CrawlEngine(
+        spark,
+        SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_nr_")),
+        synth_pages_df(spark, N, H),
+        robots_df(spark, H),
+        CrawlConfig(wave_size=8, max_depth=3, compact_every=4),
+    )
+    st = eng.store
+
+    def check(when):
+        for t in ("frontier", "seen", "ref_edges"):
+            assert st.n_rows(t) == st.read(t).count(), (when, t)
+
+    eng.bootstrap(seed_urls(N, H))
+    check("bootstrap")
+    for _ in range(5):
+        eng.run_wave()
+        check(f"wave {eng.wave}")
+    assert "overwrite" in [s["mode"] for s in st.manifest("seen")["snapshots"]]
+    for t in ("frontier", "seen", "ref_edges"):
+        assert st.rollback_to_wave(t, 4)
+    check("rollback to wave 4")
 
 
 def test_log_row_append_and_torn_tail(spark):

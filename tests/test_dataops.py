@@ -575,6 +575,7 @@ def test_dup_clusters_matches_recursive_oracle(docs):
     assert spark_rows == oracle
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_domain_mixture_deterministic_and_monotone(docs):
     """Same input → same kept set; raising a rate only ADDS docs; rate
     1000 keeps every doc of the source; rate 0 keeps none."""

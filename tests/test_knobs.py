@@ -22,8 +22,6 @@ KNOWN = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_ORACLE_SF"}
 CRAWL_CONFIG_FIELDS = {
     "wave_size",
     "max_depth",
-    "default_budget",
-    "min_weight",
     "use_bloom",
     "filter_kind",
     "child_weight_expr",
@@ -44,7 +42,27 @@ def test_env_knob_census():
 
 
 def test_crawl_config_field_census():
+    """Every field is listed, and every field is set by keyword in at least
+    one CrawlConfig(...) call outside crawler.py: a field no caller sets is
+    a configuration nothing runs."""
     assert {f.name for f in dataclasses.fields(CrawlConfig)} == CRAWL_CONFIG_FIELDS
+    pkg = os.path.dirname(bingcrawler_spark.__file__)
+    root = os.path.dirname(pkg)
+    passed = set()
+    for rel in REFERRING:
+        for path in _py_files(root, rel):
+            if path == os.path.join(pkg, "crawler.py"):
+                continue
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            passed |= {
+                kw.arg
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and getattr(n.func, "id", getattr(n.func, "attr", None)) == "CrawlConfig"
+                for kw in n.keywords
+            }
+    assert CRAWL_CONFIG_FIELDS <= passed, sorted(CRAWL_CONFIG_FIELDS - passed)
 
 
 # top-level package defs that are looked up by a name built at run time,
