@@ -1,6 +1,6 @@
 """The crawl wave loop (SURVEY.md §3.1 Spark rebuild) with checkpoint/resume.
 
-Each wave (one snapshot set + a metrics row):
+Each wave (one snapshot set + a metrics row, committed together):
 
   wave_k:  top      = politeness-budgeted top-k of frontier        # F1+F10
            fetched  = pages ⋈ broadcast(top) on url                # S1..S4
@@ -11,7 +11,8 @@ Each wave (one snapshot set + a metrics row):
            new,edges= dedup_insert(resolved, ...)                  # F2
            frontier = (frontier \\ top) ∪ new  (overwrite)         # F5
            ref_edges+= edges                   (APPEND delta)
-           metrics += wave row                 (APPEND delta)      # lineage
+           metrics += wave row                 (one row file)      # lineage
+           commit   = ONE promote of the three staged snapshots
 
 The pop log is a projection of seen (pop_rank rides the settled row).
 
@@ -19,17 +20,18 @@ The pop log is a projection of seen (pop_rank rides the settled row).
 the wave side is broadcast (a wave is thousands of rows; the pages table is
 the 100 TB side and is never shuffled: broadcast-hash-join streams it).
 
-Scale invariant: per-wave write cost ∝ wave size, NOT state size.  The
-seen-set, referrer edges and metrics are append-only tables (each
-wave writes only its delta); only the frontier — the bounded working set —
-is rewritten.  Referrer accumulation on existing rows (the reference's
-KEYEXIST path, UrlsDbManager.java:555-580) therefore never rewrites the
-seen-set: edges land in `ref_edges` and fold in at read time
-(frontier.merge_referrers).  State sizes are the store's per-snapshot row
-counts (SnapshotStore.n_rows), never a re-count of O(state) tables.
+Writes: the seen-set, referrer edges and metrics are append-only (each
+wave writes only its delta, cost ∝ wave size); only the frontier — the
+bounded working set — is rewritten, at O(frontier).  Referrer
+accumulation on existing rows (the reference's KEYEXIST path,
+UrlsDbManager.java:555-580) therefore never rewrites the seen-set: edges
+land in `ref_edges` and fold in at read time (frontier.merge_referrers).
+State sizes are the store's per-snapshot row counts
+(SnapshotStore.n_rows), never a re-count of O(state) tables.
 
-State lives in a SnapshotStore; a killed run resumes at the last committed
-wave (test: kill-and-resume in tests/test_crawler.py).
+State lives in a SnapshotStore whose one manifest rename per wave is the
+commit point: a run killed anywhere resumes at the last committed wave
+(test: kill-at-every-commit-boundary in tests/test_crawler.py).
 """
 
 from __future__ import annotations
@@ -211,25 +213,28 @@ class CrawlEngine:
     # -- state ---------------------------------------------------------------
     def bootstrap(self, seeds: list[tuple[str, int]]) -> None:
         # F9 clearDb (UrlsDbManager.java:300-309): bootstrap means a NEW
-        # crawl — truncate every state table first.  seen/ref_edges are
-        # append-only, so without this a re-bootstrap over an existing
-        # warehouse would dedup against the PREVIOUS crawl's seen rows.
-        for t in ("frontier", "seen", "ref_edges", "wave_metrics"):
-            self.store.truncate(t)
-        self.store.commit("frontier", FR.seeds_to_frontier(self.spark, seeds), wave=0)
-        self.store.append("seen", FR.empty_seen(self.spark), wave=0)
-        self.store.append(
-            "ref_edges", self.spark.createDataFrame([], EDGES_SCHEMA), wave=0
-        )
-        self.store.log_row(
-            "wave_metrics",
-            {"wave": 0, "frontier_size": self.store.n_rows("frontier"), "seen_size": 0},
-        )
+        # crawl — truncate the store first.  seen/ref_edges are append-only,
+        # so without this a re-bootstrap over an existing warehouse would
+        # dedup against the PREVIOUS crawl's seen rows.  Wave 0 commits like
+        # any wave: three stages, one promote.
+        self.store.truncate()
         self._filter = None  # it holds the truncated crawl's urls
+        self.store.promote(
+            [
+                self.store.stage(
+                    "frontier", FR.seeds_to_frontier(self.spark, seeds), "overwrite"
+                ),
+                self.store.stage("seen", FR.empty_seen(self.spark), "append"),
+                self.store.stage(
+                    "ref_edges", self.spark.createDataFrame([], EDGES_SCHEMA), "append"
+                ),
+            ],
+            wave=0,
+        )
 
     @property
     def wave(self) -> int:
-        return self.store.current_wave("frontier")
+        return self.store.wave
 
     def frontier(self) -> DataFrame:
         """Frontier view with referrer edges folded in (read-time merge)."""
@@ -245,13 +250,9 @@ class CrawlEngine:
 
     def metrics(self) -> DataFrame:
         fields = [f.name for f in METRICS_SCHEMA.fields]
-        rows = [
-            {k: r.get(k) for k in fields}
-            for r in self.store.read_rows("wave_metrics")
-            if r["wave"] > 0
-        ]
-        return self.spark.createDataFrame(rows, METRICS_SCHEMA) if rows else (
-            self.spark.createDataFrame([], METRICS_SCHEMA)
+        return self.spark.createDataFrame(
+            [tuple(r[k] for k in fields) for r in self.store.read_rows("wave_metrics")],
+            METRICS_SCHEMA,
         )
 
     def pop_log(self) -> DataFrame:
@@ -273,24 +274,6 @@ class CrawlEngine:
     def run_wave(self) -> dict:
         t0 = time.time()
         wave = self.wave + 1
-        # mid-wave-kill recovery: a wave commits seen delta → ref_edges
-        # delta → metrics row → frontier, and the FRONTIER commit is the
-        # wave's commit point (self.wave derives from it).  A kill between
-        # commits leaves deltas (and the metrics row) ahead of the last
-        # frontier commit; appends are not idempotent, so roll those back
-        # before re-running the wave (tests/test_crawler.py mid-wave kill
-        # cases).  The manifests say whether anything is ahead, so a retry
-        # in the same process (a promote that raised) is covered too.
-        dropped = [
-            self.store.rollback_to_wave("seen", wave - 1),
-            self.store.rollback_to_wave("ref_edges", wave - 1),
-            self.store.rollback_rows_to_wave("wave_metrics", wave - 1),
-        ]
-        if any(dropped):
-            # the filter delta is added after the seen promote, so it is
-            # stale exactly when something was rolled back: drop it so it
-            # rebuilds from disk
-            self._filter = None
         # state sizes are the store's per-snapshot row counts: no job
         n_frontier = self.store.n_rows("frontier")
         if n_frontier == 0:
@@ -398,18 +381,14 @@ class CrawlEngine:
             self.cfg.n_partitions, *c["frontier_parts"]
         )
 
-        # commits (atomic snapshot per table, per wave).  ALL THREE writes
-        # STAGE concurrently — seen delta, ref_edges delta, frontier
-        # overwrite — then PROMOTE (the microsecond manifest rename, the
-        # real commit point) in recovery order seen → edges → metrics row →
-        # frontier.  Safe: the three jobs share only the parsed/resolved
-        # caches, which the n_cand action just before the pool fills on this
-        # thread (no two writes race to build a cache, so the jobs per wave
-        # are fixed); Spark's scheduler is thread-safe; a kill between promotes
-        # leaves exactly the "delta ahead of the frontier commit point" case
-        # the resume rollback already removes; a kill during staging leaves
-        # no manifest change at all (orphan dirs are overwritten by the next
-        # stage).
+        # the wave's commit: ALL THREE writes STAGE concurrently — seen
+        # delta, ref_edges delta, frontier overwrite — then ONE promote (the
+        # store manifest's rename) lands them together.  Safe: the three
+        # jobs share only the parsed/resolved caches, which the n_cand action
+        # just before the pool fills on this thread (no two writes race to
+        # build a cache, so the jobs per wave are fixed); Spark's scheduler
+        # is thread-safe; a kill during staging changes no manifest (orphan
+        # dirs are deleted by the next promote).
         # Overlapping all three hides two actions' planning + commit latency
         # — per-wave driver constants that executor count cannot reduce, the
         # full-loop N→4N scaling cap (BENCH/SUBMIT_SCALING.md).
@@ -440,9 +419,6 @@ class CrawlEngine:
             resolved.unpersist()
             return {"wave": wave, "n_popped": 0, "done": True}
 
-        self.store.promote(seen_tok, wave)
-        self.store.promote(edges_tok, wave)
-
         # the settle write fired the observation.  Its subtree holds the
         # n_popped > 0 settled rows, so AQE cannot have replaced it with an
         # empty relation (which would drop the metric)
@@ -450,15 +426,6 @@ class CrawlEngine:
         # the frontier overwrite is (frontier \ top) ∪ new, and top ⊆ frontier
         n_new = frontier_tok["n_rows"] - (n_frontier - n_popped)
 
-        # filter delta: add ONLY this wave's new urls (read back from the
-        # staged frontier snapshot — a bounded-frontier scan, no shuffle)
-        if self._filter is not None and n_new > 0:
-            self._filter.add_df(
-                self.store.read_staged(frontier_tok)
-                .where(F.expr(f"discovery_wave = {wave}"))
-                .select("url"),
-                "url",
-            )
         # max_partition_rows (north rule): how balanced is the frontier
         # across its partitions after the salted repartition?  The staged
         # snapshot recorded its largest file's row count (one file per
@@ -475,12 +442,26 @@ class CrawlEngine:
             "max_partition_rows": frontier_tok["max_file_rows"],
             "wall_s": time.time() - t0,
         }
-        # the metrics row lands BEFORE the frontier promote (the wave's
-        # commit point): a kill between the two leaves a row for an
-        # uncommitted wave, which the resume rollback discards — the other
-        # order would leave a committed wave with no row at all
+        # the row lands before the promote, as its own file: a kill between
+        # the two leaves a row of an uncommitted wave, which readers skip
+        # and the wave's re-run replaces
         self.store.log_row("wave_metrics", row)
-        self.store.promote(frontier_tok, wave)
+        try:
+            self.store.promote([seen_tok, edges_tok, frontier_tok], wave)
+            # filter delta: add ONLY this wave's new urls (read back from
+            # the frontier snapshot — a bounded-frontier scan, no shuffle)
+            if self._filter is not None and n_new > 0:
+                self._filter.add_df(
+                    self.store.read_staged(frontier_tok)
+                    .where(F.expr(f"discovery_wave = {wave}"))
+                    .select("url"),
+                    "url",
+                )
+        except BaseException:
+            # the rename may or may not have landed, and the delta may be
+            # half added: rebuild the filter from the committed tables
+            self._filter = None
+            raise
         top.unpersist()
         parsed.unpersist()
         resolved.unpersist()
@@ -488,16 +469,23 @@ class CrawlEngine:
         # append-table compaction (Iceberg rewrite_data_files analogue):
         # every Nth wave, fold the accumulated deltas into one overwrite
         # snapshot so `read` unions O(n_partitions) files instead of O(W)
-        # delta dirs.  Runs AFTER the wave's own reads/writes — the write
-        # completes before _expire retires the now-dead delta dirs, so no
-        # in-flight plan reads a deleted file.  Amortized O(state/N)/wave.
+        # delta dirs.  Runs AFTER the wave's own reads/writes — the writes
+        # complete before the promote deletes the now-dead delta dirs, so
+        # no in-flight plan reads a deleted file.  It changes no state, so a
+        # kill in it leaves the committed wave as it was.  Amortized
+        # O(state/N)/wave.
         if self.cfg.compact_every and wave % self.cfg.compact_every == 0:
-            for t in ("seen", "ref_edges"):
-                self.store.commit(
-                    t,
-                    self.store.read(t).repartition(self.cfg.n_partitions),
-                    wave,
-                )
+            self.store.promote(
+                [
+                    self.store.stage(
+                        t,
+                        self.store.read(t).repartition(self.cfg.n_partitions),
+                        "overwrite",
+                    )
+                    for t in ("seen", "ref_edges")
+                ],
+                wave,
+            )
         row["done"] = False
         return row
 

@@ -380,11 +380,13 @@ def resolve_attempts(
     bloom: optional SeenFilter (bloom.py) over their urls, probed once
     per distinct candidate url; its flag is a conjunct of the join
     condition, so only positives can match (SURVEY.md §4.1)."""
-    # the state side is hinted shuffle-hash, never broadcast: it is
-    # O(state), and a broadcast collects the whole state url set to the
-    # driver every wave (measured: 1-2.6 s broadcast-build stages per
-    # wave, BENCH/SUBMIT_SCALING.md).  With url-hash-bucketed state tables
-    # its exchange is elided.
+    # shuffle-hash join, built on the candidate side: the state side is
+    # O(state), so it is never broadcast (a broadcast collects the whole
+    # state url set to the driver every wave — measured: 1-2.6 s
+    # broadcast-build stages per wave, BENCH/SUBMIT_SCALING.md) and never
+    # the hash-map side (each task would hold 1/n of frontier ∪ seen: at
+    # 16M + 16M urls on 4 cores that build died with SparkOutOfMemoryError).
+    # With url-hash-bucketed state tables the state-side exchange is elided.
     existing = frontier.select("url").unionByName(seen.select("url"))
     c = memo_expr(("attempt_cols",), _attempt_cols)
     # ONE shuffle groups all attempts per target url; the sorted struct
@@ -397,7 +399,7 @@ def resolve_attempts(
         # push that Python probe onto every state-side scan
         attempts = attempts.withColumn("_maybe", bloom.might_contain_col(c["curl"]))
         on = c["on_maybe"]
-    return attempts.join(existing.hint("shuffle_hash"), on, "left_outer").select(
+    return attempts.hint("shuffle_hash").join(existing, on, "left_outer").select(
         *c["out"]
     )
 

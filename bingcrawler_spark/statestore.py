@@ -1,33 +1,32 @@
-"""Snapshot-versioned parquet tables — Iceberg-style atomic commits.
+"""Snapshot-versioned parquet tables — one atomic commit per wave.
 
 The north rule calls for Iceberg tables checkpointed per wave. This image has
 no Iceberg runtime jar, so the same semantics are provided by a minimal
 snapshot store: each table is a directory of immutable snapshots
-(``<wh>/<table>/snap-0000N/`` parquet) plus a JSON manifest whose atomic
-rename is the commit point. On a real cluster the calls map 1:1 to Iceberg
-(`commit` → snapshot-producing overwrite, `append` → fast-append snapshot,
-`read` → current snapshot, `rollback_to_wave` → rollback to a snapshot,
-`n_rows` → the snapshot summary's record count); swap the backend without
-touching the wave loop.
+(``<wh>/<table>/snap-0000N/`` parquet), and ONE store manifest,
+``<wh>/_manifest.json``, lists every table's live snapshots.  Its atomic
+rename is the only commit point: `promote` lands all of a wave's tables
+together or none of them, as an Iceberg REST catalog's multi-table
+``transactions/commit`` does.  A kill anywhere leaves the store at the last
+committed wave, so resume is "read the manifest".  On a real cluster the
+calls map 1:1 to Iceberg (`stage` → write data files, `promote` → the
+metadata swap, `read` → current snapshot, `n_rows` → the snapshot summary's
+record count); swap the backend without touching the wave loop.
 
-Append tables are the scale-critical piece: the seen-set, referrer edges,
-pop log and wave metrics grow monotonically, so each wave writes ONLY its
-delta (cost ∝ wave size) and `read` unions the delta files — never an
-O(state) rewrite per wave.  Only the frontier (bounded working set) is
-rewritten per wave.
+Append tables are the scale-critical piece: the seen-set and referrer edges
+grow monotonically, so each wave writes ONLY its delta (write cost ∝ wave
+size) and `read` unions the delta files — never an O(state) rewrite per
+wave.  Only the frontier (bounded working set) is rewritten per wave.
 
-Reads carry the schema: `stage` records the written DataFrame's schema and
-`promote` files it in the manifest, so `read` hands it to the parquet
-reader and launches no footer-reading schema-inference job (an Iceberg
-table's metadata carries its schema the same way).  Snapshots promoted
-before schemas were recorded are read with inference.
+Reads carry the schema and sizes: `stage` records the written DataFrame's
+schema and the row count of the snapshot it just wrote (from its parquet
+footers), and `promote` files both in the manifest entry.  So `read` hands
+the schema to the parquet reader and launches no footer-reading inference
+job, and `n_rows` sums the live snapshots' counts with no Spark job — the
+analogue of an Iceberg table's schema and snapshot-summary record counts.
 
-Sizes carry the same way: `stage` reads the row count of the snapshot it
-just wrote from its parquet footers, `promote` files it in the manifest
-entry, and `n_rows` sums the live snapshots' counts — the analogue of the
-record counts in an Iceberg snapshot's summary, so no state size is ever
-recounted by a Spark job.  Snapshots promoted before counts were recorded
-are counted from their footers.
+The manifest keeps only the entries whose data retention keeps on disk, so
+its size is bounded by retention and compaction, not by the wave count.
 
 Reference analogue: BDB SYNC transactions per op (UrlsDb.java:89-95,
 Db.java:75-80) — durability unit there is one key, here one wave.
@@ -35,14 +34,18 @@ Db.java:75-80) — durability unit there is one key, here one wave.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import json
 import os
 import shutil
-import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+MANIFEST = "_manifest.json"
+RETAIN_OVERWRITES = 4
 
 
 class SnapshotStore:
@@ -58,35 +61,52 @@ class SnapshotStore:
     def _snap_dir(self, table: str, snap_id: int) -> str:
         return os.path.join(self._tdir(table), f"snap-{snap_id:05d}")
 
-    def _manifest_path(self, table: str) -> str:
-        return os.path.join(self._tdir(table), "_manifest.json")
-
-    def manifest(self, table: str) -> dict | None:
-        p = self._manifest_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
+    def manifest(self) -> dict | None:
+        """The committed state: ``{"wave": w, "tables": {table: {"schemas":
+        [...], "snapshots": [{id, wave, mode, schema, n_rows}, ...]}}}``,
+        None for an empty store.  A warehouse written by the older
+        per-table-manifest format is refused, never read as empty: a caller
+        that bootstraps when the store is empty would truncate that crawl."""
+        path = os.path.join(self.warehouse, MANIFEST)
+        with contextlib.suppress(FileNotFoundError), open(path) as f:
             return json.load(f)
+        if glob.glob(os.path.join(self.warehouse, "*", MANIFEST)):
+            raise RuntimeError(
+                f"{self.warehouse} holds per-table manifests of an older "
+                "store format and no store manifest: bootstrap a new crawl "
+                "there (truncate) or use another warehouse"
+            )
+        return None
+
+    @property
+    def wave(self) -> int:
+        """The committed wave; -1 for an empty store."""
+        man = self.manifest()
+        return -1 if man is None else man["wave"]
+
+    def _table(self, table: str) -> dict:
+        man = self.manifest()
+        if man is None or table not in man["tables"]:
+            raise FileNotFoundError(f"table {table} has no snapshots")
+        return man["tables"][table]
 
     # ---- commits ---------------------------------------------------------
-    # A snapshot lands in two steps so callers can overlap the slow halves:
-    #   stage()   — write the parquet data files (the executor work; minutes
-    #               at scale) with NO manifest change.  Safe to run several
-    #               tables' stages concurrently: manifests are per-table and
-    #               a staged dir is invisible to readers until promoted.
-    #   promote() — the atomic manifest rename (microseconds).  THIS is the
-    #               commit point; promote in recovery order so a kill between
-    #               promotes leaves only "deltas ahead of the commit point",
-    #               which rollback_to_wave already removes.
+    # A wave lands in two steps so callers can overlap the slow halves:
+    #   stage()   — write one table's parquet data files (the executor work;
+    #               minutes at scale) with NO manifest change.  Safe to run
+    #               several tables' stages concurrently: a staged dir is
+    #               invisible to readers until promoted.
+    #   promote() — one atomic rename of the store manifest that lands every
+    #               staged table of the wave.  THIS is the commit point; a
+    #               kill before it leaves the previous wave, after it this one.
     # Iceberg analogue: stage = write data files + manifest list, promote =
-    # the metadata-pointer swap that commits the snapshot.
+    # the metadata-pointer swap that commits the snapshots.
     def stage(self, table: str, df: DataFrame, mode: str) -> dict:
-        man = self.manifest(table) or {"current": -1, "snapshots": []}
-        snap_id = man["current"] + 1
+        snap_id = _current(self.manifest(), table) + 1
         snap_dir = self._snap_dir(table, snap_id)
         df.write.mode("overwrite").parquet(snap_dir)
         # counted here, on the staging thread, not in promote: the footer
-        # reads stay off the microsecond commit point
+        # reads stay off the commit point
         n_rows, max_file_rows = _footer_rows(snap_dir)
         return {
             "table": table,
@@ -98,251 +118,134 @@ class SnapshotStore:
             "max_file_rows": max_file_rows,
         }
 
-    def promote(self, token: dict, wave: int) -> str:
-        man = self.manifest(token["table"]) or {"current": -1, "snapshots": []}
-        # single-writer invariant: nothing committed since this stage.
-        # A real exception, not an assert — the guard protects manifest
-        # integrity and must survive python -O.
-        if man["current"] + 1 != token["id"]:
-            raise RuntimeError(
-                f"stale stage token for {token['table']!r}: token id "
-                f"{token['id']} but manifest is at {man['current']}"
-            )
-        man["current"] = token["id"]
-        # the distinct schemas live once per manifest and entries index
-        # them: the snapshot history is kept, and a schema per entry would
-        # grow every manifest read by ~1 KB per wave
-        schemas = man.setdefault("schemas", [])
-        if token["schema"] not in schemas:
-            schemas.append(token["schema"])
-        man["snapshots"].append(
-            {
-                "id": token["id"],
+    def promote(self, tokens: list[dict], wave: int) -> None:
+        """Commit staged snapshots as the state at `wave`: one manifest
+        rename lands all of them or none.  Then every snapshot dir of their
+        tables that the new manifest does not reference is deleted —
+        expired by retention, or left by a killed wave's stage.  The
+        deletes find the dirs by listing, so a kill before them leaks
+        nothing: the next promote deletes them."""
+        man = self.manifest() or {"wave": -1, "tables": {}}
+        for tok in tokens:
+            # single-writer invariant: nothing committed since this stage.
+            # A real exception, not an assert — the guard protects manifest
+            # integrity and must survive python -O.
+            current = _current(man, tok["table"])
+            if current + 1 != tok["id"]:
+                raise RuntimeError(
+                    f"stale stage token for {tok['table']!r}: token id "
+                    f"{tok['id']} but manifest is at {current}"
+                )
+            t = man["tables"].setdefault(tok["table"], {"schemas": [], "snapshots": []})
+            # the distinct schemas live once per table and entries index them
+            if tok["schema"] not in t["schemas"]:
+                t["schemas"].append(tok["schema"])
+            entry = {
+                "id": tok["id"],
                 "wave": wave,
-                "mode": token["mode"],
-                "ts": time.time(),
-                "schema": schemas.index(token["schema"]),
-                "n_rows": token["n_rows"],
+                "mode": tok["mode"],
+                "schema": t["schemas"].index(tok["schema"]),
+                "n_rows": tok["n_rows"],
             }
-        )
-        tmp = self._manifest_path(token["table"]) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path(token["table"]))  # atomic on POSIX
-        self._expire(token["table"], keep=4)
-        return token["dir"]
+            t["snapshots"] = _since_overwrite(
+                t["snapshots"] + [entry], RETAIN_OVERWRITES
+            )
+        man["wave"] = wave
+        _write_atomic(os.path.join(self.warehouse, MANIFEST), man)
+        for table in {tok["table"] for tok in tokens}:
+            live = {
+                self._snap_dir(table, s["id"])
+                for s in man["tables"][table]["snapshots"]
+            }
+            for d in glob.glob(os.path.join(self._tdir(table), "snap-*")):
+                if d not in live:
+                    shutil.rmtree(d, ignore_errors=True)
 
     def discard(self, token: dict) -> None:
         """Drop a staged-but-not-promoted snapshot dir (abandoned wave)."""
         shutil.rmtree(token["dir"], ignore_errors=True)
 
-    def commit(self, table: str, df: DataFrame, wave: int) -> str:
-        """Full-overwrite snapshot (the new current state of the table)."""
-        return self.promote(self.stage(table, df, "overwrite"), wave)
-
-    def append(self, table: str, df: DataFrame, wave: int) -> str:
-        """Fast-append snapshot: df holds ONLY this wave's delta rows."""
-        return self.promote(self.stage(table, df, "append"), wave)
-
-    def truncate(self, table: str) -> None:
-        """F9 clearDb (UrlsDb.java truncate semantics): drop the table's
-        snapshots AND manifest/row-log so a fresh bootstrap starts from
-        nothing — append tables would otherwise keep prior rows live."""
-        shutil.rmtree(self._tdir(table), ignore_errors=True)
-
-    def rollback_to_wave(self, table: str, wave: int) -> bool:
-        """Drop any snapshot committed for a wave AFTER `wave` — the
-        mid-wave-kill recovery primitive: a wave's state spans several
-        tables committed in sequence, and the frontier commit is the wave's
-        commit point; on resume, deltas a dead run appended past the last
-        frontier commit are rolled back so the re-run's appends are not
-        duplicates.  Returns whether anything was dropped (a no-op when
-        nothing is ahead)."""
-        man = self.manifest(table)
-        if man is None:
-            return False
-        keep = [s for s in man["snapshots"] if s["wave"] <= wave]
-        if len(keep) == len(man["snapshots"]):
-            return False
-        drop = [s for s in man["snapshots"] if s["wave"] > wave]
-        # refuse to point the manifest at state that _expire(keep=4) has
-        # already deleted — a rollback the store cannot serve must fail
-        # HERE (manifest untouched), not later as a path-not-found inside
-        # read() mid-recovery
-        if keep:
-            trial = {"current": keep[-1]["id"], "snapshots": keep}
-            missing = [
-                i
-                for i in self._live_ids(trial)
-                if not os.path.isdir(self._snap_dir(table, i))
-            ]
-            if missing:
-                raise ValueError(
-                    f"rollback_to_wave({table!r}, {wave}): snapshots "
-                    f"{missing} were expired by retention; oldest "
-                    f"restorable wave is "
-                    f"{self._oldest_restorable_wave(table, man)}"
-                )
-        man["snapshots"] = keep
-        man["current"] = keep[-1]["id"] if keep else -1
-        tmp = self._manifest_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path(table))
-        for s in drop:
-            shutil.rmtree(self._snap_dir(table, s["id"]), ignore_errors=True)
-        return True
-
-    def _oldest_restorable_wave(self, table: str, man: dict) -> int | None:
-        """Earliest wave whose full live-id set still has data dirs on
-        disk (i.e. survives retention) — the rollback floor."""
-        for s in man["snapshots"]:
-            ids = self._live_ids(man, s["id"])
-            if all(os.path.isdir(self._snap_dir(table, i)) for i in ids):
-                return s["wave"]
-        return None
-
-    def _live_ids(self, man: dict, upto: int | None = None) -> list[int]:
-        """Snapshot ids composing the state at snapshot `upto` (default
-        current): the latest overwrite at-or-before it plus every append
-        after that overwrite."""
-        upto = man["current"] if upto is None else upto
-        snaps = [s for s in man["snapshots"] if s["id"] <= upto]
-        base = -1
-        for s in snaps:
-            if s.get("mode", "overwrite") == "overwrite":
-                base = s["id"]
-        return [s["id"] for s in snaps if s["id"] >= base] if base >= 0 else [
-            s["id"] for s in snaps
-        ]
-
-    def _expire(self, table: str, keep: int) -> None:
-        """Drop snapshot data no longer reachable from the last `keep`
-        overwrite snapshots (append deltas stay live as long as an
-        unexpired overwrite depends on them; manifest history stays)."""
-        man = self.manifest(table)
-        if not man:
-            return
-        overwrites = [
-            s["id"] for s in man["snapshots"] if s.get("mode", "overwrite") == "overwrite"
-        ]
-        if not overwrites:
-            return  # pure-append table: every delta is live forever
-        horizon = overwrites[-keep] if len(overwrites) >= keep else overwrites[0]
-        live = {f"snap-{i:05d}" for i in range(horizon, man["current"] + 1)}
-        for d in os.listdir(self._tdir(table)):
-            if d.startswith("snap-") and d not in live:
-                shutil.rmtree(os.path.join(self._tdir(table), d), ignore_errors=True)
+    def truncate(self) -> None:
+        """F9 clearDb (UrlsDb.java truncate semantics): drop every table and
+        row log so a fresh bootstrap starts from nothing — append tables
+        would otherwise keep prior rows live.  The manifest goes first, so
+        a kill midway leaves an empty store, never a manifest that names
+        deleted snapshots."""
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(self.warehouse, MANIFEST))
+        for d in os.listdir(self.warehouse):
+            if os.path.isdir(self._tdir(d)):
+                shutil.rmtree(self._tdir(d), ignore_errors=True)
 
     # ---- reads -----------------------------------------------------------
     def read(self, table: str) -> DataFrame:
-        man = self.manifest(table)
-        if man is None:
-            raise FileNotFoundError(f"table {table} has no snapshots")
-        ids = self._live_ids(man)
-        if not ids:  # e.g. rolled back past every snapshot
-            raise FileNotFoundError(f"table {table} has no live snapshots")
+        t = self._table(table)
+        live = _since_overwrite(t["snapshots"], 1)
         # inference would read the footer of the first file in path order,
         # i.e. of the oldest live snapshot: its recorded schema is the same
-        first = next(s for s in man["snapshots"] if s["id"] == ids[0])
-        schema = (
-            man["schemas"][first["schema"]] if "schema" in first else None
-        )
-        return self._reader(schema).parquet(
-            *[self._snap_dir(table, i) for i in ids]
+        return self._reader(t["schemas"][live[0]["schema"]]).parquet(
+            *[self._snap_dir(table, s["id"]) for s in live]
         )
 
     def n_rows(self, table: str) -> int:
         """Row count of the table's current state: the sum of its live
-        snapshots' recorded counts, with no Spark job.  A snapshot promoted
-        before counts were recorded is counted from its footers."""
-        man = self.manifest(table)
-        if man is None:
-            raise FileNotFoundError(f"table {table} has no snapshots")
-        live = set(self._live_ids(man))
-        return sum(
-            s["n_rows"] if "n_rows" in s
-            else _footer_rows(self._snap_dir(table, s["id"]))[0]
-            for s in man["snapshots"]
-            if s["id"] in live
-        )
+        snapshots' recorded counts, with no Spark job."""
+        live = _since_overwrite(self._table(table)["snapshots"], 1)
+        return sum(s["n_rows"] for s in live)
 
     def read_staged(self, token: dict) -> DataFrame:
         """A staged (not yet promoted) snapshot, read with its schema."""
         return self._reader(token["schema"]).parquet(token["dir"])
 
-    def _reader(self, schema_json: str | None):
-        reader = self.spark.read
-        if schema_json is None:  # promoted before schemas were recorded
-            return reader
-        return reader.schema(T.StructType.fromJson(json.loads(schema_json)))
-
-    def exists(self, table: str) -> bool:
-        return self.manifest(table) is not None
-
-    def current_wave(self, table: str) -> int:
-        man = self.manifest(table)
-        if not man or not man["snapshots"]:
-            return -1
-        return man["snapshots"][-1]["wave"]
+    def _reader(self, schema_json: str):
+        schema = T.StructType.fromJson(json.loads(schema_json))
+        return self.spark.read.schema(schema)
 
     # ---- driver-side row logs (metrics lineage) --------------------------
     # One-row-per-wave tables (wave metrics) don't justify a Spark job per
-    # commit: they land in a JSONL file with the same atomic-rename
-    # durability, and materialize as a DataFrame on demand.
+    # commit: each wave's row is its own small JSON file, written atomically
+    # before the wave's promote, and materializes as a DataFrame on demand.
+    # Readers see only the rows of committed waves, so a row left by a
+    # killed wave is invisible, and the wave's re-run replaces it.
 
     def log_row(self, table: str, row: dict) -> None:
-        """O(1) fsync'd append — NOT a read-modify-rewrite: a long crawl
-        logs one row per wave, and rewriting the whole file per append is
-        O(waves^2) total bytes.  A kill mid-append can leave one torn
-        final line, which read_rows tolerates (rollback_rows_to_wave then
-        rewrites the file clean)."""
         os.makedirs(self._tdir(table), exist_ok=True)
-        path = os.path.join(self._tdir(table), "rows.jsonl")
-        with open(path, "a") as f:
-            f.write(json.dumps(row) + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-
-    def rollback_rows_to_wave(self, table: str, wave: int) -> bool:
-        """Row-log analogue of rollback_to_wave: drop rows logged for waves
-        after `wave` (mid-wave-kill recovery for the metrics lineage) and a
-        torn final line.  Returns whether anything was dropped; the file is
-        rewritten only then."""
-        rows, torn = self._row_log(table)
-        keep = [r for r in rows if r.get("wave", 0) <= wave]
-        if len(keep) == len(rows) and not torn:
-            return False
-        path = os.path.join(self._tdir(table), "rows.jsonl")
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            for r in keep:
-                f.write(json.dumps(r) + "\n")
-        os.replace(tmp, path)
-        return True
+        path = os.path.join(self._tdir(table), f"row-{row['wave']:08d}.json")
+        _write_atomic(path, row)
 
     def read_rows(self, table: str) -> list[dict]:
-        return self._row_log(table)[0]
+        """The rows logged for committed waves, in wave order."""
+        wave = self.wave
+        rows = []
+        for path in sorted(glob.glob(os.path.join(self._tdir(table), "row-*.json"))):
+            with open(path) as f:
+                rows.append(json.load(f))
+        return [r for r in rows if r["wave"] <= wave]
 
-    def _row_log(self, table: str) -> tuple[list[dict], bool]:
-        """The logged rows, and whether the final line was torn."""
-        path = os.path.join(self._tdir(table), "rows.jsonl")
-        if not os.path.exists(path):
-            return [], False
-        with open(path) as f:
-            lines = [ln for ln in f if ln.strip()]
-        out: list[dict] = []
-        for i, ln in enumerate(lines):
-            try:
-                out.append(json.loads(ln))
-            except json.JSONDecodeError:
-                # a torn FINAL line is expected after a kill mid-append
-                # (log_row is append-only); torn interior lines are real
-                # corruption worth surfacing
-                if i == len(lines) - 1:
-                    return out, True
-                raise
-        return out, False
+
+def _current(man: dict | None, table: str) -> int:
+    """Id of the table's current snapshot in `man`; -1 when it has none."""
+    t = (man or {"tables": {}})["tables"].get(table)
+    return t["snapshots"][-1]["id"] if t else -1
+
+
+def _since_overwrite(snaps: list[dict], n: int) -> list[dict]:
+    """The entries from the table's n-th newest overwrite on (every entry of
+    a pure-append table).  n=1 is the live state; n=RETAIN_OVERWRITES is
+    what retention keeps on disk (append deltas stay as long as a retained
+    overwrite depends on them)."""
+    overwrites = [i for i, s in enumerate(snaps) if s["mode"] == "overwrite"]
+    return snaps[overwrites[-n:][0]:] if overwrites else snaps
+
+
+def _write_atomic(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` durably: tmp file, fsync, rename."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)  # atomic on POSIX
 
 
 def _footer_rows(snap_dir: str) -> tuple[int, int]:

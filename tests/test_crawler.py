@@ -1,5 +1,9 @@
 """Wave loop mechanics: checkpoint/resume, metrics lineage, politeness."""
 
+import json
+import os
+import re
+import shutil
 import tempfile
 
 import pytest
@@ -11,9 +15,14 @@ from bingcrawler_spark.synth import robots_df, seed_urls, synth_pages_df
 N, H = 260, 8
 
 
-def _engine(spark, wh, wave_size=8, use_bloom=False):
+def _engine(spark, wh, wave_size=8, use_bloom=False, compact_every=64):
     pages = synth_pages_df(spark, N, H)
-    cfg = CrawlConfig(wave_size=wave_size, max_depth=3, use_bloom=use_bloom)
+    cfg = CrawlConfig(
+        wave_size=wave_size,
+        max_depth=3,
+        use_bloom=use_bloom,
+        compact_every=compact_every,
+    )
     return CrawlEngine(spark, SnapshotStore(spark, wh), pages, robots_df(spark, H), cfg)
 
 
@@ -40,52 +49,6 @@ def test_kill_and_resume_identical(spark):
     }
     assert key(a.seen()) == key(b2.seen())
     assert key(a.frontier()) == key(b2.frontier())
-
-
-def test_mid_wave_kill_and_resume_identical(spark):
-    """A wave commits seen → frontier → ref_edges → metrics; a kill BETWEEN
-    those commits leaves partial deltas ahead of the last frontier commit
-    (the wave's commit point).  Resume must roll them back, not double-count
-    them — appends are not idempotent."""
-    from pyspark.sql import functions as F
-
-    wh_a = tempfile.mkdtemp(prefix="wh_mwa_")
-    a = _engine(spark, wh_a)
-    a.bootstrap(seed_urls(N, H))
-    a.run(3)
-
-    wh_b = tempfile.mkdtemp(prefix="wh_mwb_")
-    b1 = _engine(spark, wh_b)
-    b1.bootstrap(seed_urls(N, H))
-    b1.run(2)
-    # simulate dying mid-wave-3: the seen delta and ref_edges delta landed,
-    # the frontier commit (and metrics row) did not
-    partial = b1.store.read("seen").where(F.col("settle_wave") == 2).withColumn(
-        "settle_wave", F.lit(3).cast("int")
-    )
-    b1.store.append("seen", partial, wave=3)
-    b1.store.append(
-        "ref_edges",
-        b1.store.read("ref_edges").limit(5).withColumn("wave", F.lit(3).cast("int")),
-        wave=3,
-    )
-    del b1  # "crash"
-
-    b2 = _engine(spark, wh_b)
-    assert b2.wave == 2  # frontier (the commit point) is still at wave 2
-    b2.run(1)
-
-    key = lambda df: {  # noqa: E731
-        (r["url"], r["weight"], r["depth"], tuple(r["referrers"]))
-        for r in df.collect()
-    }
-    assert key(a.seen()) == key(b2.seen())
-    assert key(a.frontier()) == key(b2.frontier())
-    # no duplicated pop-log rows from the dead run's partial delta
-    log = b2.pop_log().groupBy("url").count()
-    assert log.where(F.col("count") > 1).count() == 0
-    # metrics lineage is contiguous 1..3 with no stale wave-3 leftovers
-    assert [r["wave"] for r in b2.metrics().orderBy("wave").collect()] == [1, 2, 3]
 
 
 def test_bootstrap_resets_existing_state(spark):
@@ -141,9 +104,12 @@ def test_metrics_lineage(spark):
     for r in rows:
         assert m[r["wave"]]["n_popped"] == r["n_popped"]
         assert m[r["wave"]]["seen_size"] == r["seen_size"]
-    # per-wave snapshot lineage exists for every state table
-    man = eng.store.manifest("frontier")
-    assert [s["wave"] for s in man["snapshots"]] == [0, 1, 2]
+    # one store manifest records the committed wave and, per table, the
+    # snapshot each wave committed
+    man = eng.store.manifest()
+    assert man["wave"] == eng.wave == 2
+    for t in ("frontier", "seen", "ref_edges"):
+        assert [s["wave"] for s in man["tables"][t]["snapshots"]] == [0, 1, 2], t
 
 
 def test_politeness_budget_respected(spark):
@@ -331,7 +297,7 @@ def test_robots_parsed_rules_drive_the_crawl(spark):
 
 def test_compaction_waves_identical_state(spark):
     """compact_every folds append deltas into overwrite snapshots without
-    changing ANY state — and bounds the live snapshot count."""
+    changing ANY state — and the folded deltas leave the disk."""
     def run(compact_every):
         pages = synth_pages_df(spark, N, H)
         eng = CrawlEngine(
@@ -353,12 +319,11 @@ def test_compaction_waves_identical_state(spark):
     assert key(a.seen()) == key(b.seen())
     ka = lambda df: {(r["url"], r["weight"]) for r in df.collect()}  # noqa: E731
     assert ka(a.frontier()) == ka(b.frontier())
-    # compacted table's live set is the last overwrite + later appends only
-    man = b.store.manifest("seen")
-    modes = [s["mode"] for s in man["snapshots"]]
-    assert "overwrite" in modes  # compaction actually happened
-    live = b.store._live_ids(man)
-    assert len(live) <= 3  # overwrite at wave 4 + nothing after
+    # the compaction at wave 4 is the seen table's newest snapshot, so its
+    # live set is that one overwrite
+    snaps = b.store.manifest()["tables"]["seen"]["snapshots"]
+    assert (snaps[-1]["mode"], snaps[-1]["wave"]) == ("overwrite", 4)
+    assert not _unreferenced_snap_dirs(b.store)
 
 
 def test_recrawl_priorities_unit(spark):
@@ -573,48 +538,6 @@ def test_host_budget_hamilton_exact(spark):
     ) == want
 
 
-def test_in_process_retry_after_partial_commit(spark):
-    """A promote that fails MID-COMMIT (seen delta landed, ref_edges and
-    frontier did not — e.g. disk-full) followed by a retry in the SAME
-    process must roll the partial delta back before re-running the wave;
-    appends are not idempotent, so skipping the rollback would
-    double-append every popped url's seen row."""
-    from pyspark.sql import functions as F
-
-    wh_a = tempfile.mkdtemp(prefix="wh_ra_")
-    a = _engine(spark, wh_a)
-    a.bootstrap(seed_urls(N, H))
-    a.run(3)
-
-    wh_b = tempfile.mkdtemp(prefix="wh_rb_")
-    b = _engine(spark, wh_b)
-    b.bootstrap(seed_urls(N, H))
-    b.run(2)
-
-    real_promote = b.store.promote
-
-    def failing(token, wave):
-        if token["table"] == "ref_edges":
-            raise OSError("injected: disk full mid-commit")
-        return real_promote(token, wave)
-
-    b.store.promote = failing
-    with pytest.raises(OSError):
-        b.run_wave()
-    b.store.promote = real_promote
-    b.run_wave()  # same-process retry
-
-    key = lambda df: {  # noqa: E731
-        (r["url"], r["weight"], r["depth"], tuple(r["referrers"]))
-        for r in df.collect()
-    }
-    assert key(a.seen()) == key(b.seen())
-    assert key(a.frontier()) == key(b.frontier())
-    log = b.pop_log().groupBy("url").count()
-    assert log.where(F.col("count") > 1).count() == 0
-    assert [r["wave"] for r in b.metrics().orderBy("wave").collect()] == [1, 2, 3]
-
-
 @pytest.fixture(scope="module")
 def uninterrupted_4(spark):
     a = _engine(spark, tempfile.mkdtemp(prefix="wh_wa_"))
@@ -644,89 +567,148 @@ def _crawl_state(eng):
     }
 
 
-@pytest.mark.parametrize(
-    "resume,use_bloom",
-    [("same_process", False), ("fresh_engine", False), ("same_process", True)],
-    ids=["same_process", "fresh_engine", "same_process-bloom"],
-)
-@pytest.mark.parametrize("kill_at", ["log_row", "frontier_promote"])
-def test_kill_at_wave_commit_and_resume(
-    spark, uninterrupted_4, kill_at, resume, use_bloom
-):
-    """A kill at the wave's last two commits: the metrics row (log_row) and
-    the frontier promote, the wave's commit point.  The row is logged first,
-    so either kill leaves the wave uncommitted (a row ahead of the frontier
-    at worst, which the resume rollback drops).  Resuming, in the same
-    process or from a fresh engine, re-runs the wave: metrics stay
-    contiguous and every table equals the uninterrupted run's.  Both kills
-    come after the killed wave added its new urls to the seen filter, so a
-    same-process retry must drop the filter with the rolled-back rows: a
-    kept one would count those urls twice."""
-    wh_b = tempfile.mkdtemp(prefix="wh_wb_")
-    b = _engine(spark, wh_b, use_bloom=use_bloom)
+def _unreferenced_snap_dirs(store):
+    """Snapshot dirs on disk that the store manifest does not reference."""
+    man = store.manifest()
+    on_disk = {
+        (t, d)
+        for t in os.listdir(store.warehouse)
+        if os.path.isdir(os.path.join(store.warehouse, t))
+        for d in os.listdir(os.path.join(store.warehouse, t))
+        if d.startswith("snap-")
+    }
+    return on_disk - {
+        (t, f"snap-{s['id']:05d}")
+        for t, entry in man["tables"].items()
+        for s in entry["snapshots"]
+    }
+
+
+@pytest.fixture(scope="module")
+def at_wave_2(spark):
+    """A warehouse holding a crawl committed through wave 2; each kill case
+    runs on its own copy."""
+    wh = tempfile.mkdtemp(prefix="wh_w2_")
+    b = _engine(spark, wh)
     b.bootstrap(seed_urls(N, H))
     b.run(2)
+    return wh
 
-    real_log, real_promote = b.store.log_row, b.store.promote
 
-    def failing_log(table, row):
-        if table == "wave_metrics":
-            raise OSError("injected: crash at the metrics row")
-        return real_log(table, row)
+# kill point → the wave a resume finds committed.  The three stages, the
+# metrics row and the promote before its rename leave wave 3 uncommitted;
+# after the rename (the rest of the promote, the compaction promote, the
+# seen filter's delta) wave 3 is committed
+KILLS = {
+    "stage_seen": 2,
+    "stage_ref_edges": 2,
+    "stage_frontier": 2,
+    "log_row": 2,
+    "frontier_promote": 2,
+    "promote_after_rename": 3,
+    "compaction_promote": 3,
+    "add_df": 3,
+}
+RESUMES = {
+    "same_process": ("same_process", False),
+    "fresh_engine": ("fresh_engine", False),
+    "same_process-bloom": ("same_process", True),
+}
 
-    def failing_promote(token, wave):
-        if token["table"] == "frontier":
-            raise OSError("injected: crash at the frontier promote")
-        return real_promote(token, wave)
 
-    if kill_at == "log_row":
-        b.store.log_row = failing_log
+def _kill_next_wave(store, kill_at):
+    """Make the store raise at `kill_at` once, as a kill there would stop
+    the wave.  A stage raises after writing its dir and log_row after
+    writing its row, so the dead wave's leftovers are on disk."""
+    real_stage, real_log, real_promote = store.stage, store.log_row, store.promote
+
+    def die():
+        store.stage, store.log_row, store.promote = real_stage, real_log, real_promote
+        raise OSError(f"injected: crash at {kill_at}")
+
+    def stage(table, df, mode):
+        token = real_stage(table, df, mode)
+        if kill_at == f"stage_{table}":
+            die()
+        return token
+
+    def log_row(table, row):
+        real_log(table, row)
+        if kill_at == "log_row":
+            die()
+
+    def promote(tokens, wave):
+        compaction = tokens[0]["mode"] == "overwrite"
+        if kill_at == "frontier_promote" or (
+            kill_at == "compaction_promote" and compaction
+        ):
+            die()
+        real_promote(tokens, wave)
+        if kill_at == "promote_after_rename":
+            die()
+
+    store.stage, store.log_row, store.promote = stage, log_row, promote
+
+
+@pytest.mark.parametrize(
+    "kill_at,resume,use_bloom",
+    [
+        pytest.param(k, *RESUMES[r], id=f"{k}-{r}")
+        for k in KILLS
+        for r in RESUMES
+        # the seen filter exists only with use_bloom
+        if k != "add_df" or RESUMES[r][1]
+    ],
+)
+def test_kill_at_wave_commit_and_resume(
+    spark, monkeypatch, uninterrupted_4, at_wave_2, kill_at, resume, use_bloom
+):
+    """A kill at every commit boundary of wave 3: each of its three stages,
+    its metrics row, its one promote (which lands frontier, seen and
+    ref_edges together) before and after the manifest rename, the
+    compaction promote (compact_every=3) and the seen filter's delta.
+    Before the rename the store is still at wave 2, after it at wave 3 —
+    never between.  Resuming, in the same process or from a fresh engine,
+    runs on to wave 4: metrics are contiguous 1..4 with no row of the dead
+    wave left over, the pop log has no duplicate, every table equals the
+    uninterrupted run's and no snapshot dir outlives its manifest entry.
+    A same-process retry keeps a seen filter that matches the committed
+    state: a filter that had counted the dead wave's urls twice would not
+    equal frontier_size + seen_size."""
+    from bingcrawler_spark.bloom import ShardedBloom
+
+    wh_b = tempfile.mkdtemp(prefix="wh_wb_")
+    shutil.copytree(at_wave_2, wh_b, dirs_exist_ok=True)
+    compact_every = 3 if kill_at == "compaction_promote" else 64
+    b = _engine(spark, wh_b, use_bloom=use_bloom, compact_every=compact_every)
+    if kill_at == "add_df":
+
+        def failing_add_df(self, df, col):
+            raise OSError("injected: crash at the seen filter's delta")
+
+        monkeypatch.setattr(ShardedBloom, "add_df", failing_add_df)
     else:
-        b.store.promote = failing_promote
-    with pytest.raises(OSError):
-        b.run_wave()  # wave 3 dies uncommitted
-    b.store.log_row, b.store.promote = real_log, real_promote
-    assert b.wave == 2
+        _kill_next_wave(b.store, kill_at)
+    with pytest.raises(OSError, match="injected"):
+        b.run_wave()
+    monkeypatch.undo()
+    committed = KILLS[kill_at]
+    assert b.wave == committed
+    # the dead wave's row, if it logged one, is not read until it commits
+    assert [r["wave"] for r in b.metrics().collect()] == list(range(1, committed + 1))
     if resume == "fresh_engine":
         del b  # "crash"
-        b = _engine(spark, wh_b)
-        assert b.wave == 2
-    b.run(2)  # re-runs wave 3, then wave 4
+        b = _engine(spark, wh_b, compact_every=compact_every)
+        assert b.wave == committed
+    b.run(4 - committed)
 
     got, want = _crawl_state(b), _crawl_state(uninterrupted_4)
     assert [m["wave"] for m in got["metrics"]] == [1, 2, 3, 4]
     assert got == want
+    assert not _unreferenced_snap_dirs(b.store)
     if use_bloom:
         last = got["metrics"][-1]
         assert b._filter.items == last["frontier_size"] + last["seen_size"]
-
-
-def test_resume_from_manifests_without_schemas(spark, uninterrupted_4):
-    """Manifests written before snapshots recorded their schema and row
-    count: reads fall back to inference and sizes to the parquet footers,
-    and the resumed crawl (whose new snapshots record both) ends in the
-    uninterrupted run's state."""
-    import json
-    import os
-
-    wh_b = tempfile.mkdtemp(prefix="wh_ws_")
-    b = _engine(spark, wh_b)
-    b.bootstrap(seed_urls(N, H))
-    b.run(2)
-    for t in ("frontier", "seen", "ref_edges"):
-        man = b.store.manifest(t)
-        man.pop("schemas")
-        for s in man["snapshots"]:
-            s.pop("schema")
-            s.pop("n_rows")
-        with open(os.path.join(wh_b, t, "_manifest.json"), "w") as f:
-            json.dump(man, f)
-    b = _engine(spark, wh_b)
-    assert b.wave == 2
-    for t in ("frontier", "seen", "ref_edges"):
-        assert b.store.n_rows(t) == b.store.read(t).count(), t
-    b.run(2)
-    assert _crawl_state(b) == _crawl_state(uninterrupted_4)
 
 
 # ------------------------------------------------------ store durability
@@ -736,9 +718,7 @@ def test_recorded_row_counts_match_the_tables(spark):
     """The sizes a wave reads are the snapshots' recorded row counts: they
     must equal a recount of each table after bootstrap, after plain
     append waves, after a compaction wave (an overwrite of an append
-    table), after an append on top of it and after rolling that append
-    back (compaction expires the older deltas, so no rollback reaches
-    past it)."""
+    table) and after an append on top of it."""
     eng = CrawlEngine(
         spark,
         SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_nr_")),
@@ -757,99 +737,93 @@ def test_recorded_row_counts_match_the_tables(spark):
     for _ in range(5):
         eng.run_wave()
         check(f"wave {eng.wave}")
-    assert "overwrite" in [s["mode"] for s in st.manifest("seen")["snapshots"]]
-    for t in ("frontier", "seen", "ref_edges"):
-        assert st.rollback_to_wave(t, 4)
-    check("rollback to wave 4")
+    seen = st.manifest()["tables"]["seen"]["snapshots"]
+    assert "overwrite" in [s["mode"] for s in seen]
 
 
-def test_log_row_append_and_torn_tail(spark):
-    """log_row is an O(1) append; a torn FINAL line (kill mid-append)
-    is tolerated by read_rows, but a torn INTERIOR line is corruption
-    and raises."""
-    import os
-
-    wh = tempfile.mkdtemp(prefix="wh_log_")
-    st = SnapshotStore(spark, wh)
-    for w in range(5):
-        st.log_row("m", {"wave": w, "n": w * 10})
-    assert [r["wave"] for r in st.read_rows("m")] == list(range(5))
-    path = os.path.join(wh, "m", "rows.jsonl")
-    with open(path, "a") as f:
-        f.write('{"wave": 5, "n"')  # torn tail: kill mid-append
-    assert [r["wave"] for r in st.read_rows("m")] == list(range(5))
-    # a torn INTERIOR line is real corruption, not a torn tail
-    with open(path) as f:
-        lines = f.read().splitlines()
-    lines[1] = lines[1][:5]
-    with open(path, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    import json as _json
-
-    import pytest
-
-    with pytest.raises(_json.JSONDecodeError):
-        st.read_rows("m")
+def _hand_token(store, table, mode):
+    """A stage token for an empty snapshot dir: the commit protocol with no
+    Spark write."""
+    man = store.manifest()
+    snaps = man["tables"].get(table, {"snapshots": []})["snapshots"] if man else []
+    snap_id = snaps[-1]["id"] + 1 if snaps else 0
+    snap_dir = os.path.join(store.warehouse, table, f"snap-{snap_id:05d}")
+    os.makedirs(snap_dir, exist_ok=True)
+    return {
+        "table": table,
+        "id": snap_id,
+        "dir": snap_dir,
+        "mode": mode,
+        "schema": '{"type":"struct","fields":[]}',
+        "n_rows": 0,
+        "max_file_rows": 0,
+    }
 
 
-def test_rollbacks_on_clean_store_are_noops(spark):
-    """With nothing ahead of the wave, both rollbacks report that they
-    dropped nothing and leave the row log byte-identical, so a wave can
-    always call them; a torn final line is still dropped."""
-    import os
+def test_manifest_size_flat_in_wave_count(spark):
+    """The manifest keeps only the entries whose data retention keeps on
+    disk, so with compaction its size does not grow with the wave count:
+    after 200 waves it holds no more entries than after 40."""
+    st = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_flat_"))
 
-    wh = tempfile.mkdtemp(prefix="wh_rb0_")
-    st = SnapshotStore(spark, wh)
-    for w in (1, 2):
-        st.append("t", spark.range(2).toDF("id"), wave=w)
-        st.log_row("m", {"wave": w})
-    path = os.path.join(wh, "m", "rows.jsonl")
-    # a rewrite replaces the file: same bytes, new inode
-    before = open(path, "rb").read(), os.stat(path).st_ino
-    man = st.manifest("t")
-    assert st.rollback_to_wave("t", 2) is False
-    assert st.rollback_rows_to_wave("m", 2) is False
-    assert (open(path, "rb").read(), os.stat(path).st_ino) == before
-    assert st.manifest("t") == man
-    with open(path, "a") as f:
-        f.write('{"wave": 3')  # torn tail
-    assert st.rollback_rows_to_wave("m", 2) is True
-    assert open(path, "rb").read() == before[0]
-    assert st.rollback_to_wave("t", 1) is True
-    assert st.current_wave("t") == 1
+    def entries():
+        return sum(len(t["snapshots"]) for t in st.manifest()["tables"].values())
+
+    sizes = {}
+    tables = [("frontier", "overwrite"), ("seen", "append"), ("ref_edges", "append")]
+    for wave in range(201):
+        st.promote([_hand_token(st, t, m) for t, m in tables], wave)
+        if wave and wave % 8 == 0:  # compaction
+            st.promote(
+                [_hand_token(st, t, "overwrite") for t in ("seen", "ref_edges")], wave
+            )
+        sizes[wave] = entries()
+    assert st.wave == 200
+    assert sizes[200] <= sizes[40]
+    assert not _unreferenced_snap_dirs(st)
 
 
-def test_rollback_past_retention_refuses(spark):
-    """rollback_to_wave to a wave whose snapshot dirs were expired by
-    retention must raise with the manifest UNTOUCHED — not point current
-    at a deleted directory and crash later inside read()."""
-    import pytest
-
-    wh = tempfile.mkdtemp(prefix="wh_rb2_")
-    st = SnapshotStore(spark, wh)
-    df = spark.range(3).toDF("id")
-    # 7 overwrite commits; _expire(keep=4) deletes dirs for waves 1-3
-    for w in range(1, 8):
-        st.commit("t", df, wave=w)
-    man_before = st.manifest("t")
-    with pytest.raises(ValueError, match="expired by retention"):
-        st.rollback_to_wave("t", 2)
-    assert st.manifest("t") == man_before  # untouched
-    # a rollback within the retention window still works and reads back
-    st.rollback_to_wave("t", 5)
-    assert st.read("t").count() == 3
-    assert st.current_wave("t") == 5
+def test_stale_stage_token_refused(spark):
+    """A token staged before another commit of its table would overwrite
+    that commit's snapshot id: promote refuses it and changes nothing."""
+    st = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_stale_"))
+    st.promote([_hand_token(st, "t", "overwrite")], 0)
+    stale = _hand_token(st, "t", "overwrite")
+    st.promote([_hand_token(st, "t", "overwrite")], 1)
+    before = st.manifest()
+    with pytest.raises(RuntimeError, match="stale stage token"):
+        st.promote([stale], 2)
+    assert st.manifest() == before
 
 
-def test_read_after_rollback_past_everything(spark):
-    """Rolling an append-only table back past every snapshot leaves it
-    empty: read() must raise the same FileNotFoundError contract as a
-    never-written table, not call spark.read.parquet() with no paths."""
-    import pytest
-
-    wh = tempfile.mkdtemp(prefix="wh_rb3_")
-    st = SnapshotStore(spark, wh)
-    st.append("t", spark.range(2).toDF("id"), wave=1)
-    st.rollback_to_wave("t", 0)
+def test_read_of_a_table_with_no_snapshots(spark):
+    """Reading or sizing a table the store has never committed raises
+    FileNotFoundError, in an empty store and in one holding other tables."""
+    st = SnapshotStore(spark, tempfile.mkdtemp(prefix="wh_none_"))
     with pytest.raises(FileNotFoundError):
         st.read("t")
+    st.promote([_hand_token(st, "other", "append")], 0)
+    with pytest.raises(FileNotFoundError):
+        st.read("t")
+    with pytest.raises(FileNotFoundError):
+        st.n_rows("t")
+
+
+def test_older_store_format_refused(spark):
+    """A warehouse of the older per-table-manifest format (no store
+    manifest) is refused with an error naming it, never read as an empty
+    store — a caller that bootstraps an empty store would truncate the
+    crawl in it.  Bootstrapping a new crawl there is allowed."""
+    wh = tempfile.mkdtemp(prefix="wh_old_")
+    for t in ("frontier", "seen", "ref_edges"):
+        os.makedirs(os.path.join(wh, t, "snap-00000"))
+        with open(os.path.join(wh, t, "_manifest.json"), "w") as f:
+            json.dump({"current": 0, "snapshots": [{"id": 0, "wave": 0}]}, f)
+    eng = _engine(spark, wh)
+    with pytest.raises(RuntimeError, match=re.escape(wh)):
+        eng.wave  # noqa: B018
+    with pytest.raises(RuntimeError, match=re.escape(wh)):
+        eng.run_wave()
+    eng.bootstrap(seed_urls(N, H))
+    assert eng.wave == 0
+    assert eng.run_wave()["wave"] == 1

@@ -178,6 +178,30 @@ def test_existence_join_reads_committed_state(spark, monkeypatch, use_bloom):
         assert len(re.findall(r"Relation \[", side)) >= 2, side
 
 
+@pytest.mark.parametrize("use_bloom", [False, True], ids=["exact", "bloom"])
+def test_existence_join_builds_on_the_candidates(spark, monkeypatch, use_bloom):
+    """The existence join hashes the wave's candidate side, never the
+    state side: a hash map of 1/n of frontier ∪ seen per task is what ran
+    out of memory at 16M + 16M state urls on 4 cores."""
+    builds = []
+    resolve = FR.resolve_attempts
+
+    def capture(*args, **kwargs):
+        df = resolve(*args, **kwargs)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        builds.extend(
+            re.findall(
+                r"ShuffledHashJoin \[curl#\d+\], \[url#\d+\], LeftOuter, (Build\w+)",
+                plan,
+            )
+        )
+        return df
+
+    monkeypatch.setattr(FR, "resolve_attempts", capture)
+    _staged_plans(spark, CrawlConfig(wave_size=8, use_bloom=use_bloom), 2)
+    assert builds == ["BuildLeft", "BuildLeft"]
+
+
 def test_parse_udf_runs_once_per_page(spark):
     """links and simhash are two fields of one parse_page_udf call; a
     second call (other arguments, or chained under another UDF) would run

@@ -101,7 +101,9 @@ def main() -> None:
             wave_size=args.wave_size, use_bloom=args.bloom, n_partitions=n_parts
         ),
     )
-    if args.fresh or store.manifest("frontier") is None:
+    # an empty store starts a crawl; a warehouse in an older store format
+    # raises here rather than reading as empty (bootstrap would truncate it)
+    if args.fresh or store.wave < 0:
         eng.bootstrap(seed_urls(args.synth_pages or n_pages, n_hosts, args.seeds))
 
     t0 = time.time()
