@@ -95,7 +95,6 @@ def py_extract_links(html: str, page_url: str) -> list[str]:
 
 _SCRIPT_STYLE_RE = re.compile(r"(?is)<(script|style)[^>]*>.*?</\1\s*>")
 _ANY_TAG_RE = re.compile(r"(?s)<[^>]*>")
-_WS_RE = re.compile(r"\s+")
 
 
 def py_extract_text(html: bytes | str) -> str:
@@ -104,7 +103,10 @@ def py_extract_text(html: bytes | str) -> str:
     s = _SCRIPT_STYLE_RE.sub(" ", s)
     s = _ANY_TAG_RE.sub(" ", s)
     s = py_unescape_entities(s)
-    return _WS_RE.sub(" ", s).strip()
+    # collapse whitespace runs to one space and trim: str.split() splits on
+    # exactly the characters regex \s matches (str.isspace), so this equals
+    # re.sub(r"\s+", " ", s).strip() (test_whitespace_collapse_census)
+    return " ".join(s.split())
 
 
 # ------------------------------------------- one-pass page parse (P4+P5+P12)

@@ -1,5 +1,8 @@
 """P4/P5/P6: link extraction quirks, the byte-identical text invariant, charset."""
 
+import re
+import sys
+
 from bingcrawler_spark.functions.extract import (
     parse_page_udf,
     py_extract_links,
@@ -57,6 +60,26 @@ def test_text_extraction_drops_script_style_tags():
     assert "b{}" not in t
     assert "Body & text" in t
     assert "<" not in t
+
+
+def test_whitespace_collapse_census():
+    """py_extract_text collapses whitespace with str.split; the regex it
+    replaced is kept here as the reference.  Every code point, in four
+    contexts (alone, between words, in runs at both ends, mixed with ASCII
+    whitespace), collapses to the same string both ways, and so does the
+    whole kernel on pages whose text carries the edge cases."""
+    ws = re.compile(r"\s+")
+    bad = []
+    for cp in range(sys.maxunicode + 1):
+        c = chr(cp)
+        for s in (c, f"a{c}b", f"{c}{c}a{c}{c}", f" {c}\t{c} "):
+            if " ".join(s.split()) != ws.sub(" ", s).strip():
+                bad.append((hex(cp), s))
+    assert not bad, bad[:10]
+    edge = "\x1c\x85 one two 　three\x1f\r\n"
+    html = f"<p>{edge}</p>{edge}<b>four</b>\xa0&amp;\u2003{edge}"
+    ref = ws.sub(" ", EX.py_unescape_entities(EX._ANY_TAG_RE.sub(" ", html))).strip()
+    assert py_extract_text(html) == ref == "one two three one two three four & one two three"
 
 
 def test_invariant_by_construction_local():

@@ -56,10 +56,14 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    # spark-submit owns master/conf; just attach to the provided session
+    # spark-submit owns master/conf; just attach to the provided session,
+    # with the engine's codegen settings (the cache size is a static conf:
+    # set before the session starts, as session.get_spark does)
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.getOrCreate()
+    from bingcrawler_spark.session import CODEGEN_CONF
+
+    spark = SparkSession.builder.config(map=CODEGEN_CONF).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from bingcrawler_spark.crawler import CrawlConfig, CrawlEngine
